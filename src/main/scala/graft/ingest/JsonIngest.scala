@@ -1,6 +1,7 @@
 package graft.ingest
 
 import graft.schema.{CollectionId, EventSchema, FieldNames}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -130,24 +131,9 @@ object JsonIngest {
     */
   def parseCohort(routed: DataFrame, members: Set[(String, String)],
                   schema: StructType, dialect: JsonDialect,
-                  names: FieldNames = FieldNames()): DataFrame = {
-    val spark = routed.sparkSession
-    val outSchema = StructType(schema.fields ++ Seq(
-      StructField("_project", StringType, nullable = false),
-      StructField("_collection", StringType, nullable = false)))
-    val enc = Encoders.row(outSchema)
-    val membersB = spark.sparkContext.broadcast(members)
-    routed.select(col("value"), col("_project"), col("_collection"))
-      .mapPartitions { it =>
-        val m = membersB.value
-        it.flatMap { r =>
-          val p = r.getString(1); val c = r.getString(2)
-          if (p == null || c == null || !m((p, c))) Iterator.empty
-          else JsonEventParser.parseEvent(r.getString(0), dialect, schema, names)
-            .map(t => Row.fromSeq(t._2.toSeq :+ p :+ c)).iterator
-        }
-      }(enc)
-  }
+                  names: FieldNames = FieldNames()): DataFrame =
+    parseTagged(routed, Some(routed.sparkSession.sparkContext.broadcast(members)),
+      schema, dialect, names)
 
   /** [[parseCohort]] over EVERY routed row: when the whole batch shares
     * one fixed schema, the member set is redundant — [[withRouting]] has
@@ -158,20 +144,30 @@ object JsonIngest {
     */
   def parseAllRouted(routed: DataFrame, schema: StructType,
                      dialect: JsonDialect,
-                     names: FieldNames = FieldNames()): DataFrame = {
+                     names: FieldNames = FieldNames()): DataFrame =
+    parseTagged(routed, None, schema, dialect, names)
+
+  /** The per-row parse loop behind [[parseCohort]] and [[parseAllRouted]]:
+    * rows of `members` (every routed row when None) parsed against
+    * `schema`, tagged with their `_project`/`_collection`.
+    */
+  private def parseTagged(routed: DataFrame,
+                          members: Option[Broadcast[Set[(String, String)]]],
+                          schema: StructType, dialect: JsonDialect,
+                          names: FieldNames): DataFrame = {
     val outSchema = StructType(schema.fields ++ Seq(
       StructField("_project", StringType, nullable = false),
       StructField("_collection", StringType, nullable = false)))
-    val enc = Encoders.row(outSchema)
     routed.select(col("value"), col("_project"), col("_collection"))
       .mapPartitions { it =>
+        val m = members.map(_.value)
         it.flatMap { r =>
           val p = r.getString(1); val c = r.getString(2)
-          if (p == null || c == null) Iterator.empty
+          if (p == null || c == null || m.exists(!_((p, c)))) Iterator.empty
           else JsonEventParser.parseEvent(r.getString(0), dialect, schema, names)
             .map(t => Row.fromSeq(t._2.toSeq :+ p :+ c)).iterator
         }
-      }(enc)
+      }(Encoders.row(outSchema))
   }
 
   /** Full batch ingest: route → infer → evolve registry → per-collection
@@ -181,38 +177,11 @@ object JsonIngest {
   def ingest(raw: Dataset[String], registry: EventSchema.Registry,
              dialect: JsonDialect = JsonDialect.Fabric,
              names: FieldNames = FieldNames()): Map[CollectionId, DataFrame] = {
-    val routed = withRouting(raw, dialect)
-      .filter(col("_project").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val observed = inferSchemas(routed.select(col("value")).as(Encoders.STRING), dialect, names)
-      observed.map { case (id, obs) =>
-        registry.getOrCreate(id)
-        val authoritative = registry.addColumns(id, obs)
-        id -> parseCollection(routed, id, authoritative, dialect, names)
-          .localCheckpoint(false) // materialize off the shared cached batch
-      }
-    } finally {
-      // caller-visible DataFrames are checkpointed, safe to unpersist lazily
-      routed.unpersist(false)
-    }
-  }
-
-  /** Ingest a batch whose routing columns are ALREADY extracted (the
-    * streaming pipeline's decouple pre-pass produces `value`/`_project`/
-    * `_collection` — re-running [[withRouting]] would parse every record a
-    * second time for nothing). `routed` must be persisted by the caller.
-    */
-  def ingestRouted(routed: DataFrame, registry: EventSchema.Registry,
-                   dialect: JsonDialect = JsonDialect.Fabric,
-                   names: FieldNames = FieldNames())
-      : Map[CollectionId, DataFrame] = {
-    val observed = inferSchemas(routed.select(col("value")).as(Encoders.STRING), dialect, names)
-    observed.map { case (id, obs) =>
-      registry.getOrCreate(id)
-      val authoritative = registry.addColumns(id, obs)
-      id -> parseCollection(routed, id, authoritative, dialect, names)
-    }
+    val (routed, parsed) = ingestLazy(raw, registry, dialect, names)
+    // materialize off the shared cached batch; caller-visible DataFrames
+    // are checkpointed, so the cache is safe to unpersist lazily
+    try parsed.map { case (id, df) => id -> df.localCheckpoint(false) }
+    finally routed.unpersist(false)
   }
 
   /** Schema-fixed fast path (the reference's fixed-schema mode: unknown
@@ -235,9 +204,9 @@ object JsonIngest {
     (routed, parsed)
   }
 
-  /** Convenience for tests + the e2e query: run [[ingest]] but keep lazy
-    * plans (no checkpoint), returning also the routed cache handle so the
-    * caller controls unpersist timing.
+  /** [[ingest]] with lazy plans (no checkpoint), returning also the routed
+    * cache handle so the caller controls unpersist timing (tests and the
+    * e2e query).
     */
   def ingestLazy(raw: Dataset[String], registry: EventSchema.Registry,
                  dialect: JsonDialect = JsonDialect.Fabric,

@@ -57,6 +57,7 @@ final case class IngestConfig(
     availableNow: Boolean = false,                // drain-everything trigger (bench/backfill)
     consolidateThreshold: Int = 64)               // collections/batch above which same-schema
                                                   // cohorts write in ONE partitioned job
+                                                  // (BatchWriter, both wire formats)
 
 /** The streaming ingest pipeline: the reference's Kafka/Kinesis worker loop
   * (SURVEY.md §3.1) re-expressed as one Structured Streaming query.
@@ -193,53 +194,12 @@ object IngestStream {
         .write.mode("append").text(s"$path/${id.project}/${id.collection}")
   }
 
-  /** F2 exact-parity flavor — keyed dedup state with PROCESSING-time TTL,
-    * the precise semantics of the reference's RocksDB TtlDB (Deduplicator
-    * .java:26-88: keys expire a fixed wall-clock duration after insertion,
-    * regardless of event time). `dropDuplicatesWithinWatermark` ties
-    * eviction to the event-time watermark instead; when late data can
-    * arrive beyond the watermark but must still dedup, this variant holds
-    * keys for exactly `ttl` of wall-clock time via
-    * `flatMapGroupsWithState` + ProcessingTimeTimeout.
-    */
-  def deduplicatedWithTtl(decoupled: DataFrame, ttl: java.time.Duration,
-                          names: FieldNames = FieldNames(),
-                          dialect: JsonDialect = JsonDialect.Fabric): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val spark = decoupled.sparkSession
-    import spark.implicits._
-    val tagged = decoupled.withColumn("_dedup_user",
-      get_json_object(col("value"), dedupUserPath(dialect, names)))
-    // Null user/time never dedups (Deduplicator only acts on present keys).
-    val passthrough = tagged
-      .filter(col("_dedup_user").isNull || col("_time").isNull)
-      .select(col("value"))
-    val keyed = tagged
-      .filter(col("_dedup_user").isNotNull && col("_time").isNotNull)
-      .select(
-        // millisecond key, NOT cast("long") (= whole seconds): the
-        // reference dedups on the event's exact millis, and a seconds key
-        // silently drops distinct same-user events inside one second
-        concat_ws("|", col("_dedup_user"), unix_millis(col("_time"))).as("_key"),
-        col("value"))
-      .as[(String, String)]
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState[Boolean, String](
-        OutputMode.Update(), GroupStateTimeout.ProcessingTimeTimeout()) {
-        (_, rows, state) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty } // TTL eviction
-          else if (state.exists) Iterator.empty // duplicate of an earlier batch
-          else {
-            state.update(true)
-            state.setTimeoutDuration(ttl.toMillis)
-            rows.take(1).map(_._2) // first in this batch wins; rest drop
-          }
-      }.toDF("value")
-      .unionByName(passthrough)
-  }
-
-  /** One micro-batch of the pipeline — also the batch path for bulk loads.
-    * Returns per-collection inserted row counts.
+  /** One micro-batch of the JSON pipeline — also the batch path for bulk
+    * loads. Decouple, day-split and infer here; the writes go through
+    * [[BatchWriter]] with JSON frame builders (`JsonIngest.parseCollection`
+    * / `parseCohort` plus `_shard_time`) and the C7 dead-letter policy.
+    * Returns per-collection inserted row counts, dead-lettered collections
+    * included at 0.
     */
   def processBatch(spark: SparkSession, raw: Dataset[String],
                    registry: EventSchema.Registry, sink: EventSink,
@@ -277,9 +237,9 @@ object IngestStream {
       // the inference pass reuses them instead of re-parsing. Schemas only
       // at this point — per-collection DataFrames are constructed inside
       // the write tasks: Dataset construction runs the ANALYZER eagerly,
-      // and building C plans up front on the driver (the old ingestRouted
-      // call) serialized ~C × analysis-latency before the first write at
-      // high cardinality (measured: the dominant cost at C=1000).
+      // and building C plans up front on the driver serialized
+      // ~C × analysis-latency before the first write at high cardinality
+      // (measured: the dominant cost at C=1000).
       val routed = realTime.select("value", "_project", "_collection")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // inference mode folds the per-collection sizes into the same sweep
@@ -296,8 +256,8 @@ object IngestStream {
           // only collections PRESENT in this batch get a write job — with
           // 10k registered, mostly-idle collections on a 15 s trigger the
           // unfiltered registry would schedule 10k empty jobs (and grow an
-          // empty batch=N dir per collection per trigger); the Avro twin
-          // already filters the same way (AvroIngest.processBatch)
+          // empty batch=N dir per collection per trigger); the Avro path
+          // filters the same way (AvroIngest.processBatch)
           (registry.all.filter { case (id, _) => sizes.contains(id) }, sizes)
         } else {
           val (observed, counts) = JsonIngest.inferSchemasWithCounts(
@@ -308,17 +268,8 @@ object IngestStream {
             id -> registry.addColumns(id, obs)
           }, counts)
         }
-      // B3 flush policy: write the LARGEST collections first (the
-      // reference's MiddlewareBuffer flushes tables largest-first under
-      // memory pressure, MiddlewareBuffer.java:78-80) — the biggest share
-      // of the cached batch stays pinned for the shortest time, and the
-      // longest write jobs front-load instead of trailing the barrier.
-      def sizeOf(id: graft.schema.CollectionId): Long =
-        batchSizes.getOrElse(id, 0L)
-      val ordered = batchSchemas.toSeq.sortBy { case (id, _) => -sizeOf(id) }
-
-      // C7 failure policy shared by both write shapes: dead-letter each
-      // affected collection's raw rows and advance, or abort the batch
+      // C7 failure policy: dead-letter each affected collection's raw rows
+      // and advance, or abort the batch
       def failAll(ids: Seq[graft.schema.CollectionId], e: Throwable)
           : Seq[(graft.schema.CollectionId, Long)] =
         deadLetter match {
@@ -337,87 +288,18 @@ object IngestStream {
           case None => throw e // abort the batch: offsets never commit
         }
 
-      def runSingle(id: graft.schema.CollectionId,
-                    schema: org.apache.spark.sql.types.StructType)
-          : Seq[(graft.schema.CollectionId, Long)] = {
-        val df = JsonIngest.parseCollection(routed, id, schema,
-          cfg.dialect, cfg.names)
-        val withCheckpoint = EventOps.withShardTime(df, cfg.names)
-        try {
-          // C4: job-level retry with backoff around the sink commit;
-          // batch id flows through for sink-side idempotence. The
-          // inserted-row count rides on the write job itself (a fresh
-          // Observation per attempt, inside the retry) instead of
-          // re-running the parse in a second job per collection.
-          Seq(id -> withRetry(cfg.commitRetries, cfg.commitRetryBaseMillis)(
-            graft.util.ObservedCount.insertCounted(
-              sink, id, withCheckpoint, batchId)))
-        } catch { case e: Throwable => failAll(Seq(id), e) }
-      }
-
-      // One partitioned write job per same-schema cohort: all member rows
-      // parse in ONE pass over the cached batch and land via the sink's
-      // consolidated insert. Collection count stops driving driver-side
-      // job submissions — the scale axis that made 10k live collections a
-      // bottleneck (C jobs/batch even through the bounded pool).
-      def runCohort(group: Seq[(graft.schema.CollectionId,
-                               org.apache.spark.sql.types.StructType)])
-          : Seq[(graft.schema.CollectionId, Long)] = {
-        val ids = group.map(_._1)
-        val schema = group.head._2
-        val members = ids.map(id => (id.project, id.collection)).toSet
-        val cohortDf = EventOps.withShardTime(
-          JsonIngest.parseCohort(routed, members, schema, cfg.dialect, cfg.names),
-          cfg.names)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          // the counts job is the cohort's first materialization of the
-          // parse — it sits INSIDE the failAll scope so a poisoned record
-          // dead-letters + advances exactly like the single-collection
-          // path (whose parse materializes inside the wrapped write job)
-          try {
-            val counts = cohortDf
-              .groupBy(col("_project"), col("_collection")).count().collect()
-              .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-            withRetry(cfg.commitRetries, cfg.commitRetryBaseMillis)(
-              sink.insertConsolidated(cohortDf, batchId))
-            ids.map(id => id -> counts.getOrElse((id.project, id.collection), 0L))
-          } catch { case e: Throwable => failAll(ids, e) }
-        } finally cohortDf.unpersist(false)
-      }
-
-      // Cohorting (active above the cardinality threshold, for sinks that
-      // support it): group non-empty collections by EXACT schema
-      // fingerprint — members of a cohort produce byte-identical files to
-      // the per-collection path, so the at-rest contract is unchanged.
-      // Empty and schema-unique collections keep the per-collection path.
-      val consolidate = cfg.consolidateThreshold > 0 &&
-        ordered.size >= cfg.consolidateThreshold && sink.supportsConsolidated
-      val (cohorts, singles) =
-        if (!consolidate) (Nil, ordered)
-        else {
-          val (withRows, empty) = ordered.partition { case (id, _) => sizeOf(id) > 0 }
-          val groups = withRows.groupBy { case (_, st) => st.json }.values.toSeq
-          // a schema carrying a project/collection/batch DATA column can't
-          // ride the partitioned cohort write (EventSink.consolidatable)
-          val (multi, lone) = groups.partition(g =>
-            g.size >= 2 && EventSink.consolidatable(g.head._2))
-          (multi, empty ++ lone.flatten)
-        }
-      // largest-first over BOTH shapes (B3 flush order), through the
-      // bounded pool; a failure only surfaces after every in-flight write
-      // finished, keeping the barrier clean
-      type Entry = (graft.schema.CollectionId, org.apache.spark.sql.types.StructType)
-      val tasks: Seq[Either[Entry, Seq[Entry]]] =
-        (singles.map(Left(_)) ++ cohorts.map(Right(_))).sortBy {
-          case Left((id, _)) => -sizeOf(id)
-          case Right(g)      => -g.map(x => sizeOf(x._1)).sum
-        }
       try {
-        graft.util.ParallelWrites.run(tasks, cfg.writeParallelism) {
-          case Left((id, st)) => runSingle(id, st)
-          case Right(group)   => runCohort(group)
-        }.flatten.toMap
+        BatchWriter.write(batchSchemas, batchSizes, sink, cfg, batchId)(
+          single = (id, schema) => EventOps.withShardTime(
+            JsonIngest.parseCollection(routed, id, schema, cfg.dialect, cfg.names),
+            cfg.names),
+          // a cohort parses all member rows in ONE pass over the cached batch
+          cohort = (ids, schema) => EventOps.withShardTime(
+            JsonIngest.parseCohort(routed,
+              ids.map(id => (id.project, id.collection)).toSet,
+              schema, cfg.dialect, cfg.names),
+            cfg.names),
+          onFailure = failAll)
       } finally routed.unpersist(false)
     } finally decoupled.unpersist(false)
   }
@@ -527,9 +409,8 @@ object IngestStream {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.ingest.AvroIngest.processBatch(batch, registry, sink, keySep,
-          cfg.names, batchId = batchId, bulkFetch = bulkFetch,
-          dedupBatch = dedupBatch, writeParallelism = cfg.writeParallelism,
-          consolidateThreshold = cfg.consolidateThreshold)
+          cfg, batchId = batchId, bulkFetch = bulkFetch,
+          dedupBatch = dedupBatch)
         registry.saveShardedIfChanged(registryPath(checkpointDir),
                       batch.sparkSession.sparkContext.hadoopConfiguration)
         () // barrier: returning commits the batch's offsets (C1/C2)

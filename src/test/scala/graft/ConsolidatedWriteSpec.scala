@@ -5,6 +5,7 @@ import graft.sinks.ColumnarSink
 import graft.streaming.{IngestConfig, IngestStream}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** High-collection-cardinality write consolidation: above
   * `IngestConfig.consolidateThreshold`, same-schema cohorts land in ONE
@@ -48,7 +49,7 @@ class ConsolidatedWriteSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(l)
     spark.sparkContext.setJobGroup(group, "consolidated-write-spec")
-    try { body; Thread.sleep(1000) } // listener bus is async; let it drain
+    try { body; org.apache.spark.ListenerBusWait.drain(spark.sparkContext) }
     finally {
       spark.sparkContext.clearJobGroup()
       spark.sparkContext.removeSparkListener(l)
@@ -152,26 +153,27 @@ class ConsolidatedWriteSpec extends SparkSpec {
     assert(hi.columns.contains("s"), "cohort B lost its extra column")
   }
 
-  test("avro cohort: 100 same-schema collections decode once and write consolidated") {
+  private val avroRow = StructType(Seq(
+    StructField("_time", TimestampType), StructField("_user", StringType),
+    StructField("x", DoubleType)))
+
+  /** `nColl` collections registered with [[avroRow]] and `rowsPer` tag-0
+    * Avro records each, keyed `project.collection`.
+    */
+  private def avroBatch(project: String, collection: Int => String)
+      : (EventSchema.Registry, org.apache.spark.sql.DataFrame) = {
     import graft.ingest.AvroIngest
     import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
     import org.apache.avro.io.EncoderFactory
-    import org.apache.spark.sql.types._
-    import java.io.ByteArrayOutputStream
     import spark.implicits._
-
     val reg = new EventSchema.Registry()
-    val rowSchema = StructType(Seq(
-      StructField("_time", TimestampType), StructField("_user", StringType),
-      StructField("x", DoubleType)))
-    val ids = (0 until nColl).map(i => CollectionId("p", s"c$i"))
-    ids.foreach(id => reg.put(id, rowSchema))
-    val avro = AvroIngest.avroSchema(rowSchema, "ev")
+    (0 until nColl).foreach(i => reg.put(CollectionId(project, collection(i)), avroRow))
+    val avro = AvroIngest.avroSchema(avroRow, "ev")
     val writer = new GenericDatumWriter[GenericRecord](avro)
     def payload(t: Long, u: String, x: Double): Array[Byte] = {
       val rec = new GenericData.Record(avro)
       rec.put("_time", t); rec.put("_user", u); rec.put("x", x)
-      val out = new ByteArrayOutputStream()
+      val out = new java.io.ByteArrayOutputStream()
       out.write(0) // tag 0: inline, collection from key
       val enc = EncoderFactory.get().directBinaryEncoder(out, null)
       writer.write(rec, enc)
@@ -179,14 +181,21 @@ class ConsolidatedWriteSpec extends SparkSpec {
       out.toByteArray
     }
     val records = (0 until nColl * rowsPer).map { i =>
-      (s"p.c${i % nColl}", payload(1700000000000L + i, s"u${i % 7}", i.toDouble))
+      (s"$project.${collection(i % nColl)}",
+        payload(1700000000000L + i, s"u${i % 7}", i.toDouble))
     }.toDF("key", "value").repartition(4)
+    (reg, records)
+  }
+
+  test("avro cohort: 100 same-schema collections decode once and write consolidated") {
+    import graft.ingest.AvroIngest
+    val (reg, records) = avroBatch("p", i => s"c$i")
 
     val dir = java.nio.file.Files.createTempDirectory("cons_avro").toString
     val sink = new ColumnarSink(dir)
     val jobs = countJobs {
       val counts = AvroIngest.processBatch(records, reg, sink, batchId = 5,
-        consolidateThreshold = 64)
+        cfg = IngestConfig(consolidateThreshold = 64))
       assert(counts.size == nColl && counts.values.forall(_ == rowsPer))
     }
     info(s"avro consolidated jobs=$jobs")
@@ -300,9 +309,26 @@ class ConsolidatedWriteSpec extends SparkSpec {
     IngestStream.processBatch(spark, rawColon, new EventSchema.Registry(),
       new ColumnarSink(coDir), None, IngestConfig(consolidateThreshold = 64),
       batchId = 2)
+    // the same input shape in tagged Avro through both write shapes: the
+    // write planner is shared, so the at-rest layout must be too
+    val avroPerDir = java.nio.file.Files.createTempDirectory("cons_esc_avro_per").toString
+    val avroCoDir = java.nio.file.Files.createTempDirectory("cons_esc_avro_co").toString
+    for ((dir, threshold) <- Seq(avroPerDir -> 0, avroCoDir -> 64)) {
+      val (reg, records) = avroBatch("demo", i => s"s:$i")
+      val counts = graft.ingest.AvroIngest.processBatch(records, reg,
+        new ColumnarSink(dir), batchId = 2,
+        cfg = IngestConfig(consolidateThreshold = threshold))
+      assert(counts.size == nColl && counts.values.forall(_ == rowsPer))
+    }
     val fs = new org.apache.hadoop.fs.Path(perDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    for (base <- Seq(perDir, coDir)) {
+    // per-collection writes leave commit markers, cohort writes don't:
+    // each pair really took both shapes
+    for ((per, co) <- Seq(perDir -> coDir, avroPerDir -> avroCoDir)) {
+      assert(fs.exists(new org.apache.hadoop.fs.Path(s"$per/_graft_commits/demo")))
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$co/_graft_commits/demo")))
+    }
+    for (base <- Seq(perDir, coDir, avroPerDir, avroCoDir)) {
       val escaped = new org.apache.hadoop.fs.Path(
         s"$base/project=demo/collection=s%3A7/batch=2")
       assert(fs.exists(escaped), s"$base: expected the escaped layout")

@@ -77,11 +77,10 @@ class EventOpsSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     try {
       EventOps.daySplit(df, col("_time"), today = lit(today))
-      // listener delivery is async; wait for the bus to drain (bounded)
-      val deadline = System.currentTimeMillis() + 5000
-      while (jobs.get() < 1 && System.currentTimeMillis() < deadline)
-        Thread.sleep(50)
-      Thread.sleep(250) // settle: catch any SECOND job's start event
+      // listener delivery is async: every job start was posted before
+      // daySplit returned, so a drained bus holds the complete count
+      org.apache.spark.ListenerBusWait.drain(spark.sparkContext)
+      assert(jobs.get() >= 1, "the listener saw no daySplit job")
       // ONE action: the full-day histogram collect (AQE splits one
       // aggregate action into at most 2 jobs — shuffle stage + result
       // stage). The pre-r14 shape ran a SECOND action (the in-window

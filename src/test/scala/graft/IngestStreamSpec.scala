@@ -1,6 +1,5 @@
 package graft
 
-import graft.ingest.JsonDialect
 import graft.schema.{CollectionId, EventSchema}
 import graft.sinks.{ColumnarSink, MemorySink}
 import graft.streaming.{FileHistoricalHandler, IngestConfig, IngestStream}
@@ -193,48 +192,6 @@ class IngestStreamSpec extends SparkSpec {
     assert(out(t0 / 1000 + 3600) == 1)     // the +1h event in its own window
   }
 
-  test("TTL dedup (flatMapGroupsWithState): cross-batch duplicates dropped") {
-    import spark.implicits._
-    val inDir = Files.createTempDirectory("in")
-    val ckpt = Files.createTempDirectory("ckpt").toString
-    val t = todayMillis
-    writeLines(inDir, "b1.json", Seq(
-      fabric("ev", t, ""","v":1"""),
-      fabric("ev", t, ""","v":2"""),      // same (_user,_time): dropped in-batch
-      fabric("ev", t + 1000, ""","v":3""")))
-    val dec = graft.operators.EventOps.decouple(
-      spark.readStream.text(inDir.toString).select("value").as[String],
-      graft.ingest.JsonDialect.Fabric)
-    val out = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
-    // ProcessingTimeTimeout keeps a default-trigger query spinning on wake-
-    // ups; AvailableNow drains-and-stops — and two runs over one checkpoint
-    // also prove the dedup state survives a restart.
-    def runOnce(): Unit = {
-      val dec2 = graft.operators.EventOps.decouple(
-        spark.readStream.text(inDir.toString).select("value").as[String],
-        graft.ingest.JsonDialect.Fabric)
-      val deduped = graft.streaming.IngestStream.deduplicatedWithTtl(
-        dec2.filter($"_project".isNotNull), java.time.Duration.ofDays(30))
-      val q = deduped.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.collect().foreach(r => out.add(r.getString(0))); ()
-        }.start()
-      q.awaitTermination(120000)
-    }
-    runOnce()
-    writeLines(inDir, "b2.json", Seq(
-      fabric("ev", t, ""","v":4"""),          // dup from run 1: state drops it
-      fabric("ev", t + 2000, ""","v":5"""))) // new key: passes
-    runOnce()
-    import scala.jdk.CollectionConverters._
-    val vals = out.asScala.toList
-    assert(vals.length == 3, s"got $vals")
-    assert(vals.exists(_.contains("\"v\":1")) && vals.exists(_.contains("\"v\":3")) &&
-           vals.exists(_.contains("\"v\":5")))
-  }
-
   test("session windows: gap-based event grouping on the decoupled stream") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -331,10 +288,10 @@ class IngestStreamSpec extends SparkSpec {
     assert(sink.rows(CollectionId("p", "ev")) == 3)
   }
 
-  test("TTL dedup: Rakam dialect keys on $.properties and null user passes") {
-    import spark.implicits._
+  test("streaming dedup keys Rakam events on $.properties; null user passes") {
     val inDir = Files.createTempDirectory("in")
     val ckpt = Files.createTempDirectory("ckpt").toString
+    val sink = new MemorySink
     val t = "2026-08-10T00:00:00"
     def rakam(user: Option[String], v: Int): String = {
       val u = user.map(u => s""""_user":"$u",""").getOrElse("")
@@ -345,24 +302,11 @@ class IngestStreamSpec extends SparkSpec {
       rakam(Some("u1"), 2),   // same (user, time) → dropped
       rakam(None, 3),
       rakam(None, 4)))        // null user: BOTH pass through
-    val dec = graft.operators.EventOps.decouple(
-      spark.readStream.text(inDir.toString).select("value").as[String],
-      JsonDialect.Rakam)
-    val deduped = IngestStream.deduplicatedWithTtl(
-      dec.filter($"_project".isNotNull), java.time.Duration.ofDays(30),
-      dialect = JsonDialect.Rakam)
-    val out = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
-    val q = deduped.writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        batch.collect().foreach(r => out.add(r.getString(0))); ()
-      }.start()
-    q.awaitTermination(120000)
-    import scala.jdk.CollectionConverters._
-    val vals = out.asScala.toList
-    assert(vals.length == 3, s"got $vals")
-    assert(vals.exists(_.contains("\"v\":1")) && vals.exists(_.contains("\"v\":3")) &&
-           vals.exists(_.contains("\"v\":4")))
+    val q = IngestStream.start(spark, IngestStream.fileSource(spark, inDir.toString),
+      new EventSchema.Registry(), sink, None, ckpt,
+      IngestConfig(dialect = graft.ingest.JsonDialect.Rakam, triggerSeconds = 1,
+        splitEnabled = false, dedupWithinWatermark = Some("30 days")))
+    try q.processAllAvailable() finally q.stop()
+    assert(sink.rows(CollectionId("p", "ev")) == 3)
   }
 }
