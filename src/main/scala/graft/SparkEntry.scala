@@ -2845,9 +2845,11 @@ object SparkEntry {
         (truncated, out.toByteArray)
       }
     }.mapPartitions { recs =>
+      // one decoder per partition, one resolved reader per writer schema
+      val dec = new AvroIngest.CatalystDecoder(rowSchema)
+      val (rFull, rTrunc) = (dec.reader(full, full), dec.reader(trunc, full))
       recs.map { case (truncated, bytes) =>
-        val writer = if (truncated) trunc else full
-        val row = AvroIngest.decodeRecord(bytes, 0, writer, full, rowSchema)
+        val row = dec.toRow((if (truncated) rTrunc else rFull).decode(bytes, 0))
         (row.getAs[java.sql.Timestamp]("_time"), row.getAs[String]("_user"),
          Option(row.getAs[java.lang.Double]("value")).map(_.doubleValue),
          Option(row.getAs[java.lang.Double]("k")).map(_.doubleValue))

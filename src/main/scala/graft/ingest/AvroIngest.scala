@@ -3,13 +3,17 @@ package graft.ingest
 import graft.schema.{CollectionId, FieldNames}
 import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
-import org.apache.avro.io.DecoderFactory
+import org.apache.avro.io.{BinaryDecoder, Decoder, DecoderFactory}
 import org.apache.avro.util.Utf8
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{SpecificInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, DateTimeUtils, GenericArrayData}
+import org.apache.spark.sql.graftshim.DataFrameBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.nio.ByteBuffer
-import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 
 /** Avro wire path (SURVEY.md §2.1 S3-S5, §2.2 D5-D6).
@@ -18,11 +22,17 @@ import scala.jdk.CollectionConverters._
   * Avro; the reference's wire format is not — payloads carry a 1-byte type
   * tag, optional embedded collection prefix, and a custom bulk framing
   * (FIXTURES.md §3-4) — so decoding is done with avro-core
-  * (`GenericDatumReader` + `ResolvingDecoder`) inside `mapPartitions`,
-  * mirroring the reference's AvroPageDatumReader
+  * (`GenericDatumReader` + `ResolvingDecoder`) by one per-task
+  * [[CatalystDecoder]], mirroring the reference's AvroPageDatumReader
   * (m/org/apache/avro/io/AvroPageDatumReader.java:58-157) including the
   * writer-schema-shorter-than-reader null-fill (:84-108) and the bulk
-  * truncated-schema projection (setLastColumnIndex:196-206).
+  * truncated-schema projection (setLastColumnIndex:196-206). The decoder
+  * writes Catalyst values into a reused internal row; the inline, cohort
+  * and bulk frames wrap its output RDD as a DataFrame
+  * (`DataFrameBridge.ofRows`), so no external `Row` or `Encoders.row`
+  * serializer sits on the batch path. The Row-returning API
+  * ([[decodeRecord]], [[decodeTagged]], [[readBulkObject]]) converts the
+  * same decoder's rows.
   */
 object AvroIngest {
 
@@ -129,6 +139,172 @@ object AvroIngest {
 
   // -------------------------------------------------------------- decoding
 
+  /** Per-task tagged-Avro → Catalyst decoder for one row schema — the
+    * reference's AvroPageDatumReader (AvroPageDatumReader.java:58-157),
+    * which decodes straight into columnar blocks, on Spark's internal rows.
+    * One `BinaryDecoder` is reused across payloads; each (writer, reader)
+    * schema pair gets one [[Reader]] (a `GenericDatumReader`, a reused
+    * `GenericRecord`, the field positions resolved once); every value is
+    * written into one reused `SpecificInternalRow` in its Catalyst form —
+    * `UTF8String` over the `Utf8` bytes, epoch micros, epoch days, array
+    * and map data — so no external `Row` and no `Encoders.row` serializer
+    * stand between the wire and the plan.
+    *
+    * A returned row is reused and may point into Avro's reused buffers: it
+    * is valid until the next decode. `RDDScanExec` projects each input row
+    * to an `UnsafeRow` before it pulls the next one; anything that keeps
+    * rows must copy them through an `UnsafeProjection`.
+    *
+    * @param routing appends the `_project`/`_collection` columns of a
+    *                cohort frame, set through [[route]]
+    */
+  final class CatalystDecoder(rowSchema: StructType,
+                              names: FieldNames = FieldNames(),
+                              routing: Boolean = false) {
+    private val width = rowSchema.length
+    private val row = new SpecificInternalRow(rowSchema.fields.toSeq.map(_.dataType) ++
+      (if (routing) Seq(StringType, StringType) else Nil))
+    private val converters = rowSchema.fields.map(f => catalystOf(f.dataType))
+    private var in: BinaryDecoder = _
+    private lazy val toScala = CatalystTypeConverters.createToScalaConverter(rowSchema)
+
+    /** Resolves `writer` (possibly shorter: missing trailing fields
+      * null-fill via the reader defaults) against `reader`.
+      */
+    def reader(writer: Schema, reader: Schema): Reader = new Reader(writer, reader)
+
+    /** One resolved (writer, reader) pair of this decoder. */
+    final class Reader private[CatalystDecoder] (writer: Schema, reader: Schema) {
+      private val datum = new GenericDatumReader[GenericRecord](writer, reader)
+      private var rec: GenericRecord = _
+      // row column → reader field position; -1 = always null (the
+      // checkpoint column, injected later by D10)
+      private val positions = rowSchema.fields.map { f =>
+        if (f.name == names.checkpointField) -1
+        else Option(reader.getField(sanitize(f.name))).fold(-1)(_.pos())
+      }
+
+      /** Reads the next record off `in` without converting it (a bulk walk
+        * stepping over another collection's frame).
+        */
+      def skip(in: Decoder): Unit = rec = datum.read(rec, in)
+
+      /** Reads the next record off `in` into the decoder's reused row. */
+      def read(in: Decoder): InternalRow = {
+        skip(in)
+        var i = 0
+        while (i < width) {
+          val v = if (positions(i) < 0) null else rec.get(positions(i))
+          if (v == null) row.setNullAt(i) else row.update(i, converters(i)(v))
+          i += 1
+        }
+        row
+      }
+
+      /** Decodes the record that starts at `offset` of `payload`. */
+      def decode(payload: Array[Byte], offset: Int): InternalRow = {
+        in = DecoderFactory.get().binaryDecoder(payload, offset, payload.length - offset, in)
+        read(in)
+      }
+
+      /** Decodes an inline payload (tag 0 or 2): past the tag byte and, for
+        * tag 2, past the embedded routing prefix.
+        */
+      def decodeInline(payload: Array[Byte]): InternalRow = {
+        in = DecoderFactory.get().binaryDecoder(payload, 1, payload.length - 1, in)
+        if (payload(0) == 2) in.skipString()
+        read(in)
+      }
+    }
+
+    /** Sets the routing columns of a cohort row. */
+    def route(project: UTF8String, collection: UTF8String): Unit = {
+      row.update(width, project)
+      row.update(width + 1, collection)
+    }
+
+    /** The external `Row` of a decoded row (the Row-returning API). */
+    def toRow(r: InternalRow): Row = toScala(r).asInstanceOf[Row]
+  }
+
+  /** At and above 1900-01-01, `java.sql.Timestamp`/`Date` (hybrid Julian
+    * calendar, JVM zone) followed by Spark's Julian→Gregorian rebase — the
+    * conversion `Encoders.row` applies — is plain arithmetic: Spark's
+    * rebase tables end there in every zone
+    * (`RebaseDateTime.lastSwitchJulianTs`, pinned by
+    * AvroRoundTripPropertySpec; a constant here, because initializing
+    * `RebaseDateTime` loads every zone's rebase table).
+    * Older values take that conversion itself, so they decode exactly as
+    * the external-Row path did.
+    */
+  private[graft] val ArithmeticMillisFrom: Long = -2208988800000L
+  private val ArithmeticDaysFrom: Int = -25567
+
+  private val utf8Value: Any => Any = {
+    case u: Utf8 =>
+      val s = UTF8String.fromBytes(u.getBytes, 0, u.getByteLength)
+      // malformed UTF-8 normalizes the way a java.lang.String round trip does
+      if (s.isValid) s else UTF8String.fromString(u.toString)
+    case s => UTF8String.fromString(s.toString)
+  }
+  private val timestampValue: Any => Any = v => {
+    val ms = v.asInstanceOf[java.lang.Long].longValue()
+    if (ms >= ArithmeticMillisFrom) Math.multiplyExact(ms, 1000L)
+    else DateTimeUtils.fromJavaTimestamp(
+      java.sql.Timestamp.from(java.time.Instant.ofEpochMilli(ms)))
+  }
+  private val dateValue: Any => Any = v => {
+    val days = v.asInstanceOf[java.lang.Integer].intValue()
+    if (days >= ArithmeticDaysFrom) days
+    else DateTimeUtils.fromJavaDate(
+      java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(days.toLong)))
+  }
+  private val binaryValue: Any => Any = v => {
+    val b = v.asInstanceOf[ByteBuffer]
+    val out = new Array[Byte](b.remaining()); b.duplicate().get(out); out
+  }
+
+  /** Avro generic value → Catalyst value, for a non-null `v`. */
+  private def catalystOf(dt: DataType): Any => Any = dt match {
+    case StringType    => utf8Value
+    case TimestampType => timestampValue
+    case DateType      => dateValue
+    case BinaryType    => binaryValue
+    case ArrayType(et, _) =>
+      val elem = catalystOf(et)
+      v => {
+        val c = v.asInstanceOf[java.util.Collection[_]]
+        val out = new Array[Any](c.size())
+        var i = 0
+        val it = c.iterator()
+        while (it.hasNext) {
+          val e = it.next()
+          out(i) = if (e == null) null else elem(e)
+          i += 1
+        }
+        new GenericArrayData(out)
+      }
+    case MapType(_, vt, _) =>
+      val value = catalystOf(vt)
+      v => {
+        // entries in the order the external-Row path emitted them (an
+        // immutable Map built from the decoded java map), so committed
+        // lines keep their key order
+        val m = v.asInstanceOf[java.util.Map[_, _]].asScala
+          .map { case (k, mv) => k.toString -> mv }.toMap
+        val keys = new Array[Any](m.size)
+        val values = new Array[Any](m.size)
+        var i = 0
+        m.foreach { case (k, mv) =>
+          keys(i) = UTF8String.fromString(k)
+          values(i) = if (mv == null) null else value(mv)
+          i += 1
+        }
+        new ArrayBasedMapData(new GenericArrayData(keys), new GenericArrayData(values))
+      }
+    case _ => identity // long, int, double, boolean: the boxed value itself
+  }
+
   /** Decode one inline Avro event against the collection schema, honoring a
     * (possibly shorter) writer schema: missing trailing fields null-fill via
     * Avro schema resolution (reader defaults).
@@ -136,79 +312,60 @@ object AvroIngest {
   def decodeRecord(payload: Array[Byte], offset: Int, writer: Schema,
                    reader: Schema, rowSchema: StructType,
                    names: FieldNames = FieldNames()): Row = {
-    val datum = new GenericDatumReader[GenericRecord](writer, reader)
-    val dec = DecoderFactory.get().binaryDecoder(payload, offset,
-      payload.length - offset, null)
-    toRow(datum.read(null, dec), rowSchema, names)
+    val c = rowApi(writer, reader, rowSchema, names)
+    c.dec.toRow(c.reader.decode(payload, offset))
   }
 
-  /** GenericRecord → external Row aligned to `rowSchema` (checkpoint column
-    * null — injected later by D10).
+  /** The Row API's decoder, one per thread, kept while calls pass the same
+    * schema objects — as a caller parsing its schemas once per partition
+    * does — so a per-record call does not rebuild it.
     */
-  def toRow(rec: GenericRecord, rowSchema: StructType,
-            names: FieldNames = FieldNames()): Row = {
-    val values = rowSchema.fields.map { f =>
-      if (f.name == names.checkpointField) null
-      else {
-        val avroField = rec.getSchema.getField(sanitize(f.name))
-        if (avroField == null) null
-        else convert(rec.get(avroField.pos()), f.dataType)
-      }
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-      values.asInstanceOf[Array[Any]], rowSchema)
+  private final class RowApi(val writerSchema: Schema, val readerSchema: Schema,
+                             val rowSchema: StructType, val names: FieldNames) {
+    val dec = new CatalystDecoder(rowSchema, names)
+    val reader: CatalystDecoder#Reader = dec.reader(writerSchema, readerSchema)
   }
-
-  private def convert(v: Any, dt: DataType): Any = (v, dt) match {
-    case (null, _) => null
-    case (u: Utf8, StringType) => u.toString
-    case (s: CharSequence, StringType) => s.toString
-    case (l: java.lang.Long, TimestampType) =>
-      java.sql.Timestamp.from(java.time.Instant.ofEpochMilli(l))
-    case (i: java.lang.Integer, DateType) =>
-      java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(i.longValue()))
-    case (b: ByteBuffer, BinaryType) =>
-      val out = new Array[Byte](b.remaining()); b.duplicate().get(out); out
-    case (arr: java.util.Collection[_], ArrayType(e, _)) =>
-      arr.asScala.toSeq.map(convert(_, e))
-    case (m: java.util.Map[_, _], MapType(_, vt, _)) =>
-      m.asScala.map { case (k, mv) => k.toString -> convert(mv, vt) }.toMap
-    case (x, _) => x
+  private val rowApis = new ThreadLocal[RowApi]
+  private def rowApi(writer: Schema, reader: Schema, rowSchema: StructType,
+                     names: FieldNames): RowApi = {
+    val c = rowApis.get()
+    if (c != null && (c.writerSchema eq writer) && (c.readerSchema eq reader) &&
+        (c.rowSchema eq rowSchema) && c.names == names) c
+    else {
+      val fresh = new RowApi(writer, reader, rowSchema, names)
+      rowApis.set(fresh)
+      fresh
+    }
   }
 
   /** Full tagged-record decode (the per-record path of the reference's
     * KafkaAvroMessageTransformer/KinesisMessageEventTransformer): tag
     * demux (S5) + key/payload routing + inline decode. Returns None for
-    * legacy-bulk/unknown tags and unroutable records (record-skip, F3);
-    * bulk pointers (tag 3) must be handled by the caller via
-    * [[readBulkObject]] after fetching the object.
+    * legacy-bulk/unknown tags and unroutable or undecodable records
+    * (record-skip, F3); bulk pointers (tag 3) must be handled by the caller
+    * via [[readBulkObject]] after fetching the object.
     */
   def decodeTagged(key: String, payload: Array[Byte], keySep: Char,
                    schemaFor: CollectionId => Option[(Schema, StructType)],
                    names: FieldNames = FieldNames())
       : Option[(CollectionId, Row)] =
-    kindOf(payload) match {
-      case RecordKind.Inline(fromPayload) =>
-        try {
-          if (fromPayload) {
-            // tag 2: collection = avro-string prefix `project|collection`
-            val dec = DecoderFactory.get().binaryDecoder(payload, 1, payload.length - 1, null)
-            val embedded = dec.readString()
-            val offset = 1 + (payload.length - 1 - dec.inputStream().available())
-            collectionFromKey(embedded, keySep).flatMap { id =>
-              schemaFor(id).map { case (reader, rowSchema) =>
-                id -> decodeRecord(payload, offset, reader, reader, rowSchema, names)
-              }
-            }
-          } else {
-            collectionFromKey(key, keySep).flatMap { id =>
-              schemaFor(id).map { case (reader, rowSchema) =>
-                id -> decodeRecord(payload, 1, reader, reader, rowSchema, names)
-              }
-            }
-          }
-        } catch { case _: Exception => None }
-      case _ => None
+    try {
+      routingOf(key, payload, keySep).flatMap { id =>
+        schemaFor(id).map { case (reader, rowSchema) =>
+          val c = rowApi(reader, reader, rowSchema, names)
+          id -> c.dec.toRow(c.reader.decodeInline(payload))
+        }
+      }
+    } catch { case _: Exception => None }
+
+  /** Every row `decode` produces from `rows`, leaving out the records it
+    * cannot decode (record-skip, F3) and those it maps to null.
+    */
+  private def decodeEach(rows: Iterator[InternalRow])(
+      decode: InternalRow => InternalRow): Iterator[InternalRow] =
+    rows.flatMap { r =>
+      val out = try decode(r) catch { case _: Exception => null }
+      if (out == null) Iterator.empty else Iterator.single(out)
     }
 
   /** Tag-3 payload → the object-store pointer it carries (UTF-8 key). */
@@ -252,6 +409,13 @@ object AvroIngest {
     * reference's stress shape is 100 collections,
     * t/io/rakam/presto/KafkaStressTest.java:107-137).
     *
+    * A frame (per collection, or a same-schema cohort) is the routed
+    * batch's Catalyst rows mapped through a per-task [[CatalystDecoder]]
+    * and wrapped back into a DataFrame: its plan is a scan of the decoded
+    * rows, with no object deserialization or Row serialization. The decode
+    * runs lazily inside the frame's write job. Undecodable records are
+    * skipped (F3).
+    *
     * `records` needs `key: string` and `value: binary` columns (the Kafka
     * source shape). Bulk pointers (tag 3) must be handled by the caller via
     * [[readBulkObject]] (object-store access is environment-specific).
@@ -269,7 +433,6 @@ object AvroIngest {
       : Map[CollectionId, Long] = {
     val spark = records.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.Encoders
     import org.apache.spark.sql.functions.col
 
     val names = cfg.names
@@ -304,25 +467,25 @@ object AvroIngest {
         .map(r => CollectionId(r.getString(0), r.getString(1)) -> r.getLong(2))
         .toMap
 
-      def decodeSingle(id: CollectionId, rowSchema: StructType)
-          : org.apache.spark.sql.DataFrame = {
+      def decodeSingle(id: CollectionId, rowSchema: StructType): DataFrame = {
         val avroJson = schemaPairs(id)._1
-        val decoded = routed
+        val rows = routed
           .filter(col("_project") === id.project && col("_collection") === id.collection)
-          .select(col("key"), col("value")).as[(String, Array[Byte])]
-          .mapPartitions { rows =>
-            // parse the avro schema once per partition, not per record
+          .select(col("value")).queryExecution.toRdd
+          .mapPartitions { it =>
+            // the avro schema parses once per partition, not per record
+            val dec = new CatalystDecoder(rowSchema, names)
             val reader = new Schema.Parser().parse(avroJson)
-            val lookup = (cid: CollectionId) =>
-              if (cid == id) Some((reader, rowSchema)) else None
-            rows.flatMap { case (key, payload) =>
-              decodeTagged(key, payload, keySep, lookup, names).map(_._2)
-            }
-          }(Encoders.row(rowSchema))
+            val r = dec.reader(reader, reader)
+            decodeEach(it)(row => r.decodeInline(row.getBinary(0)))
+          }
+        val decoded = DataFrameBridge.ofRows(spark, rows, rowSchema)
         // F2 per-batch duplicate drop on (user, time) — the reference's
         // AvroDuplicateHandler runs on the DECODED record (null keys pass).
-        // The dedup split reads its input twice; a lazy checkpoint keeps
-        // the record decode at once-per-record
+        // dedupExact reads its input once; the lazy checkpoint is there to
+        // pin the input order its monotonically_increasing_id uid for
+        // null-key rows is drawn from, so a recomputed stage sees the same
+        // rows under the same uids. It can go once that uid is deterministic
         if (dedupBatch && rowSchema.fieldNames.contains(names.userField) &&
             rowSchema.fieldNames.contains(names.timeField))
           graft.operators.EventOps.dedupExact(decoded.localCheckpoint(false), names)
@@ -333,38 +496,45 @@ object AvroIngest {
         * record still resolves against its OWN collection's reader schema —
         * members share the StructType but keep their record names).
         */
-      def decodeCohort(ids: Seq[CollectionId], rowSchema: StructType)
-          : org.apache.spark.sql.DataFrame = {
+      def decodeCohort(ids: Seq[CollectionId], rowSchema: StructType): DataFrame = {
         val members: Map[(String, String), String] =
           ids.map(id => (id.project, id.collection) -> schemaPairs(id)._1).toMap
         val outSchema = StructType(rowSchema.fields ++ Seq(
           StructField("_project", StringType, nullable = false),
           StructField("_collection", StringType, nullable = false)))
         val memberB = spark.sparkContext.broadcast(members)
-        routed
-          .select(col("_project"), col("_collection"), col("key"), col("value"))
-          .mapPartitions { rows =>
+        val rows = routed
+          .select(col("_project"), col("_collection"), col("value")).queryExecution.toRdd
+          .mapPartitions { it =>
             val m = memberB.value
-            // one parsed reader schema per member per task (Schema.Parser
-            // is single-use; parsed lazily so a task touching few members
-            // pays for few)
-            val readers = scala.collection.mutable.HashMap.empty[(String, String), Schema]
-            rows.flatMap { r =>
-              val p = r.getString(0); val c = r.getString(1)
-              m.get((p, c)) match {
-                case None => Iterator.empty
-                case Some(avroJson) =>
-                  val reader = readers.getOrElseUpdate((p, c),
-                    new Schema.Parser().parse(avroJson))
-                  val id = CollectionId(p, c)
-                  decodeTagged(r.getString(2), r.getAs[Array[Byte]](3), keySep,
-                    cid => if (cid == id) Some((reader, rowSchema)) else None,
-                    names)
-                    .map { case (_, row) => Row.fromSeq(row.toSeq :+ p :+ c) }
-                    .iterator
+            val dec = new CatalystDecoder(rowSchema, names, routing = true)
+            // one reader per member per task (Schema.Parser is single-use;
+            // parsed lazily so a task touching few members pays for few),
+            // with the member's routing values; None = not a member
+            type Member = Option[(dec.Reader, UTF8String, UTF8String)]
+            val readers = scala.collection.mutable.HashMap.empty[(UTF8String, UTF8String), Member]
+            decodeEach(it) { row =>
+              val key = (row.getUTF8String(0), row.getUTF8String(1))
+              val member = readers.getOrElse(key, {
+                val (p, c) = (key._1.toString, key._2.toString)
+                val resolved: Member = m.get((p, c)).map { avroJson =>
+                  val reader = new Schema.Parser().parse(avroJson)
+                  (dec.reader(reader, reader), UTF8String.fromString(p), UTF8String.fromString(c))
+                }
+                // the key points into the input row's buffer: store a copy
+                readers((key._1.clone(), key._2.clone())) = resolved
+                resolved
+              })
+              member match {
+                case None => null
+                case Some((r, p, c)) =>
+                  val out = r.decodeInline(row.getBinary(2))
+                  dec.route(p, c)
+                  out
               }
             }
-          }(Encoders.row(outSchema))
+          }
+        DataFrameBridge.ofRows(spark, rows, outSchema)
       }
 
       // dedupBatch keeps every collection on the per-collection path: its
@@ -384,7 +554,7 @@ object AvroIngest {
           val pointers = routed.filter(col("_project") === BulkMarker)
             .select(col("value")).as[Array[Byte]]
             .flatMap(bulkPointerOf(_))
-          val bulk = processBulk(pointers, registry, sink, fetch, names,
+          val bulk = writeBulk(pointers, registry, sink, fetch, cfg,
             // disjoint replay-marker space: an inline write and a bulk
             // write of the SAME collection in the SAME batch must not
             // dedupe each other at the sink
@@ -459,14 +629,19 @@ object AvroIngest {
     * unregistered collections are skipped whole (the stream can't be
     * resumed past an unknown schema — record-skip semantics, F3).
     *
+    * Writes go through [[graft.streaming.BatchWriter]] one collection at a
+    * time (a bulk write never joins a cohort): largest first, on the
+    * bounded writer pool, each sink commit retried with backoff (C4); a
+    * write that still fails aborts the batch.
+    *
     * Decode cost: frames INTERLEAVE collections inside one byte stream, so
     * reaching collection X's records requires walking the whole object —
-    * the per-collection pass re-decodes the cached bytes, costing C+1
-    * record decodes for a C-collection object (fetch stays 1×). That is
-    * near-optimal for the reference's typical few-tables-per-object shape;
-    * a decode-once/re-encode-per-collection pipeline only wins for large C
-    * and would add a full Row→Avro encoder — revisit if bulk objects with
-    * many collections become the norm.
+    * the per-collection pass re-reads the cached bytes, costing C+1
+    * record decodes for a C-collection object (fetch stays 1×), though
+    * only collection X's records convert to rows. That is near-optimal for
+    * the reference's typical few-tables-per-object shape; a
+    * decode-once/re-encode-per-collection pipeline only wins for large C —
+    * revisit if bulk objects with many collections become the norm.
     */
   def processBulk(pointers: org.apache.spark.sql.Dataset[String],
                   registry: graft.schema.EventSchema.Registry,
@@ -474,61 +649,84 @@ object AvroIngest {
                   fetch: String => Array[Byte],
                   names: FieldNames = FieldNames(),
                   batchId: Long = -1L)
+      : Map[CollectionId, Long] =
+    writeBulk(pointers, registry, sink, fetch,
+      graft.streaming.IngestConfig(names = names), batchId)
+
+  /** [[processBulk]] under the caller's write policy (`processBatch` passes
+    * its own `cfg`).
+    */
+  private def writeBulk(pointers: org.apache.spark.sql.Dataset[String],
+                        registry: graft.schema.EventSchema.Registry,
+                        sink: graft.sinks.EventSink,
+                        fetch: String => Array[Byte],
+                        cfg: graft.streaming.IngestConfig,
+                        batchId: Long)
       : Map[CollectionId, Long] = {
     val spark = pointers.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.{Encoders, Observation}
-    import org.apache.spark.sql.functions.{count, lit}
 
+    val names = cfg.names
     val schemaPairs: Map[CollectionId, (String, StructType)] =
       registry.all.map { case (id, st) =>
         id -> (avroSchema(st, id.collection, names).toString, st)
       }
-    def lookupFor(): CollectionId => (Schema, StructType) = {
-      val cache = scala.collection.mutable.Map[CollectionId, (Schema, StructType)]()
-      cid => cache.getOrElseUpdate(cid, {
-        val (json, st) = schemaPairs(cid) // unknown id throws → object skipped
-        (new Schema.Parser().parse(json), st)
-      })
+    // parsed once per collection per task (BulkReaders keeps it); an
+    // unknown id throws → object skipped
+    val schemaFor = (cid: CollectionId) => {
+      val (json, st) = schemaPairs(cid)
+      (new Schema.Parser().parse(json), st)
     }
 
-    val fetched = pointers.map(p => (p, fetch(p)))
+    val fetched = pointers.map(p => (p, fetch(p))).toDF("pointer", "bytes")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // which collections live in which OBJECT (bounded: objects/batch ×
-      // collections/object) — the per-collection pass below then decodes
-      // only the objects that actually contain it, so a single-collection
-      // object is decoded twice total, not once per collection in the batch
-      val membership = fetched.mapPartitions { it =>
-        val lookup = lookupFor()
-        it.flatMap { case (ptr, bytes) =>
-          try readBulkObject(bytes, lookup, names).map(_._1).distinct.map(ptr -> _)
-          catch { case _: Exception => Seq.empty }
+      // which collections live in which OBJECT, with their record counts
+      // (bounded: objects/batch × collections/object) — the per-collection
+      // pass below then decodes only the objects that actually contain it,
+      // so a single-collection object is decoded twice total, not once per
+      // collection in the batch
+      val membership = fetched.queryExecution.toRdd.mapPartitions { it =>
+        val frames = new BulkReaders(schemaFor, names)
+        it.flatMap { row =>
+          val counts = scala.collection.mutable.HashMap.empty[CollectionId, Long]
+          try walkBulk(row.getBinary(1), frames, _ => true) { (id, _) =>
+            counts(id) = counts.getOrElse(id, 0L) + 1
+          } catch { case _: Exception => counts.clear() }
+          val ptr = row.getString(0)
+          counts.iterator.map { case (id, n) => (ptr, id, n) }
         }
-      }.distinct().collect()
-      val byCollection: Map[CollectionId, Set[String]] =
-        membership.groupBy(_._2).map { case (cid, arr) =>
-          cid -> arr.map(_._1).toSet
-        }
+      }.collect().groupBy(_._2)
 
-      byCollection.keys.toSeq.sortBy(id => (id.project, id.collection))
-        .flatMap { id =>
-          val rowSchema = schemaPairs(id)._2
-          val enc = Encoders.row(rowSchema)
-          val ptrs = byCollection(id)
-          val decoded = fetched
-            .filter(r => ptrs.contains(r._1))
-            .mapPartitions { it =>
-              val lookup = lookupFor()
-              it.flatMap { case (_, bytes) =>
-                try readBulkObject(bytes, lookup, names)
-                  .collect { case (cid, row) if cid == id => row }
-                catch { case _: Exception => Seq.empty }
-              }
-            }(enc)
-          val n = graft.util.ObservedCount.insertCounted(sink, id, decoded, batchId)
-          if (n > 0) Some(id -> n) else None
-        }.toMap
+      def decodeSingle(id: CollectionId, rowSchema: StructType): DataFrame = {
+        val ptrs = membership(id).map(_._1).toSet
+        val rows = fetched.queryExecution.toRdd.mapPartitions { it =>
+          val frames = new BulkReaders(schemaFor, names)
+          val project = UnsafeProjection.create(rowSchema)
+          it.flatMap { row =>
+            if (!ptrs.contains(row.getString(0))) Nil
+            else {
+              // an object decodes whole or not at all: a corrupt frame
+              // drops the object's rows, never half of them
+              val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+              try {
+                walkBulk(row.getBinary(1), frames, _ == id)((_, r) => out += project(r).copy())
+                out
+              } catch { case _: Exception => Nil }
+            }
+          }
+        }
+        DataFrameBridge.ofRows(spark, rows, rowSchema)
+      }
+
+      graft.streaming.BatchWriter.write(
+        membership.map { case (id, _) => id -> schemaPairs(id)._2 },
+        membership.map { case (id, objects) => id -> objects.map(_._3).sum },
+        sink, cfg, batchId, cohorts = false)(
+        single = decodeSingle,
+        cohort = (_, _) => throw new IllegalStateException("bulk writes never form cohorts"),
+        onFailure = (_, e) => throw e)
+        .filter { case (_, n) => n > 0 }
     } finally fetched.unpersist(false)
   }
 
@@ -544,8 +742,52 @@ object AvroIngest {
                      schemaFor: CollectionId => (Schema, StructType),
                      names: FieldNames = FieldNames())
       : Seq[(CollectionId, Row)] = {
-    val dec = DecoderFactory.get().binaryDecoder(bytes, null)
+    val readers = new BulkReaders(schemaFor, names)
     val out = Seq.newBuilder[(CollectionId, Row)]
+    walkBulk(bytes, readers, _ => true) { (id, row) =>
+      out += id -> readers.decoder(id).toRow(row)
+    }
+    out.result()
+  }
+
+  /** Per-task readers for bulk frames: one [[CatalystDecoder]] per
+    * collection and one reader per declared column count — a frame whose
+    * writer declared fewer leading columns than the reader schema reads
+    * through [[truncatedSchema]] (D6). An unknown collection throws from
+    * `schemaFor`.
+    */
+  private final class BulkReaders(schemaFor: CollectionId => (Schema, StructType),
+                                  names: FieldNames) {
+    private val decoders =
+      scala.collection.mutable.HashMap.empty[CollectionId, (CatalystDecoder, Schema)]
+    private val readers =
+      scala.collection.mutable.HashMap.empty[(CollectionId, Int), CatalystDecoder#Reader]
+
+    def decoder(id: CollectionId): CatalystDecoder = entry(id)._1
+
+    def apply(id: CollectionId, colCount: Int): CatalystDecoder#Reader =
+      readers.getOrElseUpdate((id, colCount), {
+        val (dec, reader) = entry(id)
+        val writer = if (colCount < reader.getFields.size) truncatedSchema(reader, colCount)
+                     else reader
+        dec.reader(writer, reader)
+      })
+
+    private def entry(id: CollectionId): (CatalystDecoder, Schema) =
+      decoders.getOrElseUpdate(id, {
+        val (reader, rowSchema) = schemaFor(id)
+        (new CatalystDecoder(rowSchema, names), reader)
+      })
+  }
+
+  /** Walks one bulk object frame by frame: each record of a collection
+    * `keep` accepts is read into its decoder's reused row and handed to
+    * `emit` (valid until the next record); every other record is read past.
+    */
+  private def walkBulk(bytes: Array[Byte], readers: BulkReaders,
+                       keep: CollectionId => Boolean)(
+      emit: (CollectionId, InternalRow) => Unit): Unit = {
+    val dec = DecoderFactory.get().binaryDecoder(bytes, null)
     val project = dec.readString()
     while (!dec.isEnd) {
       val collection = dec.readString()
@@ -563,17 +805,13 @@ object AvroIngest {
         if (valid) CollectionId.normalize(project, collection)
         else CollectionId(project.toLowerCase(java.util.Locale.ROOT),
                           collection.toLowerCase(java.util.Locale.ROOT))
-      val (reader, rowSchema) = schemaFor(id)
-      val writer = if (colCount < reader.getFields.size) truncatedSchema(reader, colCount)
-                   else reader
-      val datum = new GenericDatumReader[GenericRecord](writer, reader)
+      val reader = readers(id, colCount)
+      val wanted = valid && keep(id)
       var i = 0
       while (i < recCount) {
-        val rec = datum.read(null, dec)
-        if (valid) out += id -> toRow(rec, rowSchema, names)
+        if (wanted) emit(id, reader.read(dec)) else reader.skip(dec)
         i += 1
       }
     }
-    out.result()
   }
 }

@@ -100,6 +100,51 @@ class PipelineParitySpec extends SparkSpec {
     assert(memory.rows(a) == 2 && memory.rows(b) == 1)
   }
 
+  test("C4 on the Avro bulk path: a sink commit that fails once is retried, counts stay full") {
+    import graft.ingest.AvroIngest
+    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+    import org.apache.avro.io.EncoderFactory
+    import spark.implicits._
+    val registry = new EventSchema.Registry()
+    val rowSchema = StructType(Seq(
+      StructField("_time", TimestampType), StructField("_user", StringType),
+      StructField("x", DoubleType)))
+    val (a, b) = (CollectionId("p", "a"), CollectionId("p", "b"))
+    Seq(a, b).foreach(registry.put(_, rowSchema))
+    val avro = AvroIngest.avroSchema(rowSchema, "ev")
+    // one bulk object (S4 framing): project, then a frame per collection
+    val out = new java.io.ByteArrayOutputStream()
+    val enc = EncoderFactory.get().directBinaryEncoder(out, null)
+    val writer = new GenericDatumWriter[GenericRecord](avro)
+    enc.writeString("p")
+    Seq("a" -> Seq(1.0, 2.0), "b" -> Seq(3.0)).foreach { case (coll, xs) =>
+      enc.writeString(coll); enc.writeInt(3); enc.writeInt(xs.size)
+      xs.foreach { x =>
+        val rec = new GenericData.Record(avro)
+        rec.put("_time", 1700000000000L); rec.put("_user", s"u$x"); rec.put("x", x)
+        writer.write(rec, enc)
+      }
+    }
+    enc.flush()
+    val obj = out.toByteArray
+    val records = Seq(("p.a", Array[Byte](3) ++ "obj-1".getBytes("UTF-8")))
+      .toDF("key", "value")
+    val memory = new MemorySink
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val flaky = new EventSink {
+      override def getColumns(id: CollectionId) = None
+      override def insert(id: CollectionId, df: DataFrame): Unit =
+        if (calls.incrementAndGet() == 1) throw new RuntimeException("transient")
+        else memory.insert(id, df)
+    }
+    val counts = AvroIngest.processBatch(records, registry, flaky,
+      cfg = IngestConfig(commitRetries = 1, commitRetryBaseMillis = 1),
+      bulkFetch = Some(_ => obj))
+    assert(counts == Map(a -> 2L, b -> 1L))
+    assert(calls.get() == 3, "one failed attempt plus one insert per collection")
+    assert(memory.rows(a) == 2 && memory.rows(b) == 1)
+  }
+
   test("C7 dead-letter: failing sink preserves raw records, batch continues") {
     import spark.implicits._
     val registry = new EventSchema.Registry()

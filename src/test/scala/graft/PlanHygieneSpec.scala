@@ -52,6 +52,61 @@ class PlanHygieneSpec extends SparkSpec {
     assert(unions <= 1, s"dedup re-grew the second input scan ($unions Unions):\n$p")
   }
 
+  test("avro decode frames: Catalyst rows off the wire, no object (de)serialization") {
+    import graft.ingest.AvroIngest
+    import graft.schema.{CollectionId, EventSchema}
+    import graft.sinks.EventSink
+    import graft.streaming.IngestConfig
+    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+    import org.apache.avro.io.EncoderFactory
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    val rowSchema = StructType(Seq(
+      StructField("_time", TimestampType), StructField("_user", StringType),
+      StructField("x", DoubleType)))
+    val registry = new EventSchema.Registry()
+    val ids = Seq("a", "b").map(CollectionId("p", _))
+    ids.foreach(registry.put(_, rowSchema))
+    val avro = AvroIngest.avroSchema(rowSchema, "ev")
+    val records = (0 until 8).map { i =>
+      val rec = new GenericData.Record(avro)
+      rec.put("_time", 1700000000000L + i); rec.put("_user", s"u$i"); rec.put("x", i.toDouble)
+      val out = new java.io.ByteArrayOutputStream()
+      out.write(0) // tag 0: inline, collection from key
+      val enc = EncoderFactory.get().directBinaryEncoder(out, null)
+      new GenericDatumWriter[GenericRecord](avro).write(rec, enc)
+      enc.flush()
+      (s"p.${ids(i % 2).collection}", out.toByteArray)
+    }.toDF("key", "value")
+    // the frames each write shape hands the sink, as executed plans
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val sink = new EventSink {
+      override def getColumns(id: CollectionId) = None
+      override def insert(id: CollectionId, df: DataFrame): Unit = {
+        df.collect()
+        plans.add("per collection" -> df.queryExecution.executedPlan.toString)
+      }
+      override def supportsConsolidated: Boolean = true
+      override def insertConsolidated(rows: DataFrame, batchId: Long): Unit = {
+        rows.collect()
+        plans.add("cohort" -> rows.queryExecution.executedPlan.toString)
+      }
+    }
+    Seq(0, 2).foreach { threshold =>
+      AvroIngest.processBatch(records, registry, sink,
+        cfg = IngestConfig(consolidateThreshold = threshold))
+    }
+    val shapes = plans.toArray.toSeq.map(_.asInstanceOf[(String, String)])
+    assert(shapes.map(_._1).toSet == Set("per collection", "cohort"))
+    shapes.foreach { case (shape, p) =>
+      // an external-Row decode (mapPartitions under Encoders.row) plans as
+      // DeserializeToObject → MapPartitions → SerializeFromObject
+      assert(!p.contains("SerializeFromObject") && !p.contains("DeserializeToObject"),
+        s"$shape avro frame regained the Row serializer boundary:\n$p")
+    }
+  }
+
   test("decontamination probes broadcast; no shuffle of the corpus against itself") {
     val p = plan("decontam_hits")
     assert(p.contains("BroadcastHashJoin"), s"probe grams not broadcast:\n$p")
