@@ -347,6 +347,18 @@ object SparkEntry {
   // queries
   // =================================================================
 
+  /** LSH candidate pairs → alternating-star connected components →
+    * `(cluster_id, n_members, max_member)` per duplicate family. */
+  private def dedupClusters(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val pairs = DedupFunctions.minhashCandidates(docs(s, dir), "doc_id",
+      "text", k = 12, nBands = 4, shingleSize = 3, maxBandFreq = 1000)
+    DedupFunctions.connectedComponentsAlternating(pairs, "id_a", "id_b")
+      .groupBy($"label".as("cluster_id"))
+      .agg(count(lit(1)).as("n_members"), max($"v").as("max_member"))
+      .orderBy($"cluster_id")
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ---- ingestion dataflow operators (SURVEY §2) --------------------
@@ -1054,10 +1066,13 @@ object SparkEntry {
       // explicit read schema: the aggregate touches only `value`, and an
       // inferred read pays a FULL decompress+parse of every gzip NDJSON
       // file at plan time (per collection, serial on the driver) before
-      // the real scan parses it all again. PERMISSIVE mode keeps the row
-      // semantics identical: every line yields a row (count unchanged),
-      // `value` is null where absent/null, and numeric JSON widens to
-      // double exactly as the inferred-then-summed path did.
+      // the real scan parses it all again. For numeric JSON the result is
+      // the inferred read's: every line yields a row (count unchanged),
+      // `value` is null where absent/null, and numbers widen to double.
+      // A string `value` differs: PERMISSIVE reads it as null even when it
+      // is numeric ("1.25"), where an inferred read would type the column
+      // string and the ANSI cast in the sum would fail the query on a
+      // non-numeric one (SinkSpec pins the declared read).
       val parts = parsed.keys.toSeq.sortBy(_.collection).map { id =>
         s.read.schema("value DOUBLE").json(sink.path(id))
           .agg(count(lit(1)).as("n"), sumRound($"value", 2).as("sum_value"))
@@ -2184,34 +2199,13 @@ object SparkEntry {
     // Duplicate CLUSTERS: LSH candidate pairs → connected components →
     // one group per duplicate family labeled by its smallest member (what
     // a keep-one-representative pass actually needs; pairs alone can't
-    // express transitive duplicates A~B~C). Routes through the alternating
-    // large-star/small-star CC — O(log n) rounds regardless of graph
-    // shape; label propagation needs diameter-many rounds and measured
-    // 57-95× slower on a chain-shaped duplicate graph at sf0.1.
-    "dedup_clusters" -> ((s, dir) => {
-      import s.implicits._
-      val pairs = DedupFunctions.minhashCandidates(docs(s, dir), "doc_id",
-        "text", k = 12, nBands = 4, shingleSize = 3, maxBandFreq = 1000)
-      DedupFunctions.connectedComponentsAlternating(pairs, "id_a", "id_b")
-        .groupBy($"label".as("cluster_id"))
-        .agg(count(lit(1)).as("n_members"), max($"v").as("max_member"))
-        .orderBy($"cluster_id")
-    }),
+    // express transitive duplicates A~B~C).
+    "dedup_clusters" -> dedupClusters,
 
-    // Same clusters through the auto-escalating entry point: label
-    // propagation (cheapest per round on genuinely low-diameter graphs)
-    // hands off to the star variant when the diameter budget runs out.
-    // Must agree exactly with the plain star plan (and the recursive-CTE
-    // oracle).
-    "dedup_clusters_auto" -> ((s, dir) => {
-      import s.implicits._
-      val pairs = DedupFunctions.minhashCandidates(docs(s, dir), "doc_id",
-        "text", k = 12, nBands = 4, shingleSize = 3, maxBandFreq = 1000)
-      DedupFunctions.connectedComponentsAuto(pairs, "id_a", "id_b")
-        .groupBy($"label".as("cluster_id"))
-        .agg(count(lit(1)).as("n_members"), max($"v").as("max_member"))
-        .orderBy($"cluster_id")
-    }),
+    // Registered name of the former auto-escalating CC entry point, kept
+    // so the query surface stays whole; it is the same plan as
+    // dedup_clusters now that one CC algorithm remains.
+    "dedup_clusters_auto" -> dedupClusters,
 
     // SimHash (60-bit, token multiset) per document.
     "dedup_simhash" -> ((s, dir) => {
@@ -4574,8 +4568,9 @@ object SparkEntry {
          |ORDER BY id_a, id_b""".stripMargin,
 
     // Transitive closure of the candidate pairs: DuckDB walks components
-    // with a recursive CTE; the engine's distributed equivalent is
-    // min-label propagation (DedupFunctions.connectedComponents).
+    // with a recursive CTE; the engine labels the same components by
+    // alternating-star CC (DedupFunctions.connectedComponentsAlternating),
+    // each vertex with its component's minimum.
     "dedup_clusters" ->
       s"""WITH RECURSIVE $minhashBandsCte,
          |pairs AS (
@@ -4590,8 +4585,7 @@ object SparkEntry {
          |SELECT cluster_id, count(*) AS n_members, max(v) AS max_member
          |FROM labels GROUP BY 1 ORDER BY 1""".stripMargin,
 
-    // identical transitive closure — the engine side differs only in the
-    // distributed algorithm (alternating star vs label propagation)
+    // identical transitive closure (the engine runs the same plan)
     "dedup_clusters_auto" ->
       s"""WITH RECURSIVE $minhashBandsCte,
          |pairs AS (

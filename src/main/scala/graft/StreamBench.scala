@@ -333,16 +333,7 @@ object StreamBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions) // hint-based range-join activation
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(cpus, "graft-stream-bench")
     val chunks = sys.env.getOrElse("SPARK_GRAFT_STREAM_CHUNKS", "20").toInt
     val target = sys.env.getOrElse("SPARK_GRAFT_STREAM_TARGET", "300000").toLong
     val files = sys.env.getOrElse("SPARK_GRAFT_STREAM_FILES", "8").toInt

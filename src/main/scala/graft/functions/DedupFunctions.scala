@@ -761,152 +761,12 @@ object DedupFunctions {
     * DUPLICATE CLUSTERS so a pipeline can keep one representative per
     * cluster, not just drop one side of each pair.
     *
-    * Iterative min-label propagation: every vertex starts labeled with its
-    * own id; each round takes the min label across itself and its
-    * neighbors; fixpoint = components labeled by their smallest member.
-    * Rounds needed = the graph DIAMETER. Real duplicate graphs are NOT
-    * reliably low-diameter: boilerplate families chain A~B~C~… through
-    * borderline pairs, and a measured chain-shaped corpus at sf0.1 put
-    * this variant 57-95× behind [[connectedComponentsAlternating]] (O(log
-    * n) rounds regardless of shape — same join shapes, same output
-    * contract). PREFER THE STAR VARIANT, or [[connectedComponentsAuto]]
-    * which tries a few cheap propagation rounds and escalates; this one
-    * stays as the simple parity reference and for graphs KNOWN to be
-    * dense (each round is one shuffle with no re-orientation work).
-    */
-  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 20): DataFrame =
-    propagateLabels(pairs, aCol, bCol, maxIter) match {
-      case Some(labels) => labels
-      // silently returning half-propagated labels would split one
-      // duplicate family into several "clusters" — the exact failure this
-      // operator exists to prevent — so non-convergence is an error here
-      // (connectedComponentsAuto escalates instead)
-      case None => throw new IllegalStateException(
-        s"connectedComponents did not converge within $maxIter rounds — " +
-        "use connectedComponentsAlternating (or connectedComponentsAuto) " +
-        "for high-diameter graphs")
-    }
-
-  /** Min-label propagation core: Some(labels) on fixpoint within
-    * `maxIter` rounds, None if the diameter budget ran out.
-    */
-  private def propagateLabels(pairs: DataFrame, aCol: String, bCol: String,
-                              maxIter: Int): Option[DataFrame] = {
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionAll(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try propagateOnSym(edges, maxIter)
-    finally edges.unpersist(false)
-  }
-
-  /** Propagation inner loop over an ALREADY-materialized symmetrized,
-    * deduplicated edge set `(src, dst)` — shared by [[propagateLabels]]
-    * (which builds + persists the set from raw pairs) and
-    * [[connectedComponentsAuto]] (which checkpoints the set once and
-    * reuses it for the degree probe and the escalation too).
-    */
-  private def propagateOnSym(edges: DataFrame,
-                             maxIter: Int): Option[DataFrame] = {
-    var labels = edges.select(col("src").as("v")).distinct()
-      .withColumn("label", col("v"))
-      .localCheckpoint(true)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      iter += 1
-      val neighborMin = edges.join(labels, edges("dst") === labels("v"))
-        .groupBy(col("src")).agg(min(col("label")).as("nlabel"))
-      val updated = labels.join(neighborMin, labels("v") === neighborMin("src"),
-          "left")
-        .select(col("v"), col("label"),
-          least(col("label"), coalesce(col("nlabel"), col("label")))
-            .as("newlabel"))
-      // materialize + test convergence every SECOND round: odd rounds stay
-      // lazy, so two propagation steps execute as one job — same shuffle
-      // count, half the job-submission/checkpoint/scan overhead (fixpoint
-      // detection shifts by at most one no-op round, bounded by maxIter)
-      if (iter % 2 == 0 || iter == maxIter) {
-        val mat = updated.localCheckpoint(true)
-        converged = mat.filter(col("newlabel") < col("label")).isEmpty
-        labels = mat.select(col("v"), col("newlabel").as("label"))
-      } else {
-        labels = updated.select(col("v"), col("newlabel").as("label"))
-      }
-    }
-    if (converged) Some(labels.select(col("v"), col("label"))) else None
-  }
-
-  /** Single adaptive entry point: a few cheap label-propagation rounds
-    * (each ONE shuffle — wins outright when the duplicate graph is dense
-    * and the diameter is 1-2, the common whole-doc-dup case), then
-    * escalation to [[connectedComponentsAlternating]] when the diameter
-    * budget runs out (chain-shaped graphs, where propagation would need
-    * diameter-many rounds). The escalation re-reads only the candidate
-    * PAIRS — bounded, already-computed input — never the corpus.
-    *
-    * Budget default is 2: convergence is tested on even rounds, so 2 is
-    * the SMALLEST budget that can confirm a fixpoint (round 1 propagates,
-    * round 2 verifies no change).
-    *
-    * Before spending that budget, a STRUCTURAL PROBE routes the one graph
-    * family where propagation PROVABLY loses: max vertex degree <= 2
-    * means the graph is pure paths/cycles, whose diameter grows with
-    * component size — a chain-of-pairs corpus escalates without paying
-    * the futile attempt. The probe is one map-side-combinable degree
-    * aggregate over the candidate PAIRS (bounded input, not the corpus)
-    * plus a 1-row collect — strictly cheaper than one propagation round.
-    *
-    * Honest limit: degree statistics cannot predict convergence in
-    * general — a measured corpus had dense families (max degree 31, mean
-    * 6.4) BRIDGED into high-diameter chains, where any degree-based
-    * router would pick propagation and still escalate. For such graphs
-    * the 2-round attempt IS the cheapest reliable probe (~1.7x plain
-    * star on that corpus, disclosed); pipelines that know their graph
-    * call [[connectedComponentsAlternating]] directly, as the default
-    * clusters query does.
-    */
-  def connectedComponentsAuto(pairs: DataFrame, aCol: String, bCol: String,
-                              propagationRounds: Int = 2,
-                              maxIter: Int = 50,
-                              localMaxEdges: Long = 1000000L): DataFrame = {
-    // The symmetrized, deduplicated edge set is materialized ONCE (narrow
-    // 2-column checkpoint) and every stage reads it: the degree probe, the
-    // propagation attempt, and the escalation each re-ran the candidate
-    // generator's banded self-join from the signature checkpoint before —
-    // four passes for one clustering. (A full persist of the raw `pairs`
-    // frame was measured SLOWER than the recomputes — columnar cache
-    // build + lost codegen fusion — hence the narrow derived checkpoint,
-    // not a pairs cache.)
-    val sym = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionAll(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct()
-      .localCheckpoint(true)
-    // Degree over DISTINCT incident edges (self-loop counts once): the
-    // paths/cycles test this probe feeds is a statement about the simple
-    // graph, so duplicate pairs must not inflate it. Routing is a
-    // performance choice only — every branch returns identical labels.
-    val maxDegree = sym
-      .groupBy(col("src")).agg(count(lit(1)).as("_d"))
-      .agg(max(col("_d"))).head().get(0) match {
-        case null    => 0L // no edges at all
-        case d: Long => d
-      }
-    def escalate(): DataFrame = ccStars(
-      sym.select(col("src").as("v")).distinct().localCheckpoint(true),
-      sym.where(col("src") < col("dst"))
-        .select(col("src").as("u"), col("dst").as("v")),
-      maxIter, localMaxEdges)
-    if (maxDegree <= 2L) escalate()
-    else propagateOnSym(sym, propagationRounds).getOrElse(escalate())
-  }
-
-  /** Connected components via alternating large-star/small-star (Kiveris et
-    * al., "Connected Components in MapReduce and Beyond", SoCC'14) — the
-    * high-diameter escape hatch [[connectedComponents]] documents: label
-    * propagation needs diameter-many rounds (a 10k-link chain = 10k
-    * shuffles), this converges in O(log n) rounds regardless of shape.
+    * Alternating large-star/small-star (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC'14): O(log n) rounds
+    * regardless of graph shape. Real duplicate graphs are not reliably
+    * low-diameter — boilerplate families chain A~B~C~… through borderline
+    * pairs — and min-label propagation needs diameter-many rounds (a
+    * 10k-link chain = 10k shuffles).
     *
     * Per round, over the current edge set E (undirected, no self-loops):
     *   - large-star: for each vertex u, m = min(Γ(u) ∪ {u}); rewire every
@@ -918,36 +778,21 @@ object DedupFunctions {
     * state, lineage cut per round. Fixpoint: the edge set is a disjoint
     * union of stars centered on component minima.
     *
-    * Same output contract as [[connectedComponents]]: (v, label) with
-    * label = smallest member of v's component.
+    * Output: (v, label) for every vertex of `pairs`, label = smallest
+    * member of v's component.
     */
   def connectedComponentsAlternating(pairs: DataFrame, aCol: String,
                                      bCol: String, maxIter: Int = 50,
                                      localMaxEdges: Long = 1000000L): DataFrame = {
     // vertex set BEFORE the self-loop filter: a vertex appearing only in
-    // self-pairs still owes a singleton (v, v) row — the propagation
-    // variant emits it, and the "same output contract" promise must hold
+    // self-pairs still owes a singleton (v, v) row
     val vertices = pairs.select(col(aCol).as("v"))
       .unionAll(pairs.select(col(bCol).as("v")))
       .distinct()
       .localCheckpoint(true)
-    ccStars(vertices,
-      pairs.select(col(aCol).as("u"), col(bCol).as("v"))
-        .where(col("u") =!= col("v")).distinct()
-        .localCheckpoint(true),
-      maxIter, localMaxEdges)
-  }
-
-  /** Alternating-star inner loop over prebuilt (vertices, initial edges)
-    * — shared by [[connectedComponentsAlternating]] (which derives both
-    * from raw pairs) and [[connectedComponentsAuto]]'s escalation (which
-    * derives both from its already-checkpointed symmetrized edge set
-    * instead of re-running the candidate generator). Contract unchanged:
-    * (v, label) with label = smallest member of v's component.
-    */
-  private def ccStars(vertices: DataFrame, edges0: DataFrame,
-                      maxIter: Int, localMaxEdges: Long): DataFrame = {
-    var edges = edges0
+    var edges = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
+      .where(col("u") =!= col("v")).distinct()
+      .localCheckpoint(true)
     var edgeCount = edges.count()
     // Size-gated LOCAL epilogue (the Kiveris-deployment "finish small
     // graphs in one round" rule): each distributed round costs two

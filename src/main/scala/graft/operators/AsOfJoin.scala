@@ -53,8 +53,7 @@ object AsOfJoin {
   /** Cheap skew probe: the share of the hottest key group across both
     * inputs, measured on a bounded seeded sample (one narrow-column scan
     * + a map-side-combinable aggregate over the sample — strictly cheaper
-    * than the join's own shuffle, the same probe-then-route stance as
-    * `connectedComponentsAuto`). Deterministic: fixed sample seed.
+    * than the join's own shuffle). Deterministic: fixed sample seed.
     */
   def probeTopKeyShare(left: DataFrame, right: DataFrame, on: Seq[String],
                        totalRows: Long,

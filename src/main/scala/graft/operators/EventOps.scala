@@ -36,13 +36,21 @@ object EventOps {
     * `dropDuplicates` over the whole frame would silently collapse all
     * null-key rows.
     *
-    * The KEPT row is deterministic: the lexicographic minimum of the
-    * remaining columns (in frame order) wins, via a `min(struct(...))`
-    * aggregate — same single shuffle as `dropDuplicates`, but a stage
-    * recomputed after a shuffle-fetch failure (or a rerun of the query)
-    * reproduces the identical survivor, where `dropDuplicates` keeps an
-    * arbitrary first row per key. Frames carrying a non-orderable column
-    * (e.g. a map) fall back to the arbitrary-keeper `dropDuplicates`.
+    * The KEPT row of a keyed group is deterministic: the lexicographic
+    * minimum of the remaining columns (in frame order) wins, via a
+    * `min(struct(...))` aggregate — same single shuffle as
+    * `dropDuplicates`, but a stage recomputed after a shuffle-fetch
+    * failure (or a rerun of the query) reproduces the identical survivor,
+    * where `dropDuplicates` keeps an arbitrary first row per key.
+    * Null-key rows have no such guarantee. Each is grouped on a
+    * `monotonically_increasing_id`, which depends on the order its input
+    * partition yields rows in: a map stage recomputed over input whose
+    * order is not fixed can give a row another id, so it can hash to
+    * another reducer and be duplicated or lost. Callers must pin that
+    * order; the Avro path's `localCheckpoint` before this call
+    * (`AvroIngest.processBatch`) exists for exactly that. Frames carrying
+    * a non-orderable column (e.g. a map) fall back to the
+    * arbitrary-keeper `dropDuplicates`.
     */
   def dedupExact(df: DataFrame, names: FieldNames = FieldNames()): DataFrame = {
     val keyCols = Seq(names.userField, names.timeField)

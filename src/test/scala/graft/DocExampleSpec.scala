@@ -51,7 +51,7 @@ class DocExampleSpec extends SparkSpec {
       DocPipeline.Config(lang = "en", minQualityBp = 2500))
 
     val pairs    = DedupFunctions.minhashCandidates(cleaned, "doc_id", "text")
-    val clusters = DedupFunctions.connectedComponentsAuto(pairs, "id_a", "id_b")
+    val clusters = DedupFunctions.connectedComponentsAlternating(pairs, "id_a", "id_b")
     assert(clusters.columns.toSeq == Seq("v", "label"))
     val deduped  = DedupFunctions.keepRepresentatives(cleaned, pairs, "doc_id")
     assert(deduped.count() <= cleaned.count())

@@ -821,20 +821,11 @@ class DedupFunctionsSpec extends SparkSpec {
     }
   }
 
-  test("connected components: transitive duplicate families, isolated pairs") {
+  test("alternating-star components: families, self-loop singleton, high diameter") {
     import spark.implicits._
     // chain 1-2-3 plus disjoint pair 10-11: labels collapse to each
-    // family's smallest member within diameter iterations
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-    val labels = DedupFunctions.connectedComponents(pairs, "id_a", "id_b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
-  }
-
-  test("alternating-star components agree with propagation, incl. high diameter") {
-    import spark.implicits._
-    // includes a self-loop-only vertex (42): must come back as a singleton
-    // cluster, same as the propagation variant's contract
+    // family's smallest member; a self-loop-only vertex (42) must come
+    // back as a singleton cluster
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (42L, 42L)).toDF("id_a", "id_b")
     val labels = DedupFunctions
       .connectedComponentsAlternating(pairs, "id_a", "id_b", localMaxEdges = 0)
@@ -842,38 +833,33 @@ class DedupFunctionsSpec extends SparkSpec {
     assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L,
       42L -> 42L))
 
-    // a 64-link chain has diameter 64: propagation would need ~64 rounds
-    // (here it would hit the default maxIter and throw); alternating star
-    // must collapse it within its O(log n) bound — the default 50 rounds —
-    // and label every vertex with the chain head. Reversed ids exercise the
-    // orientation logic (min is at the END of the input order).
+    // a 64-link chain has diameter 64: min-label propagation would need
+    // ~64 rounds; alternating star must collapse it within its O(log n)
+    // bound — the default 50 rounds — and label every vertex with the
+    // chain head. Reversed ids exercise the orientation logic (min is at
+    // the END of the input order).
     val chain = (1L until 65L).map(i => (65L - i, 65L - i + 1)).toDF("id_a", "id_b")
     val chainLabels = DedupFunctions
       .connectedComponentsAlternating(chain, "id_a", "id_b", localMaxEdges = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(chainLabels.size == 65)
     assert(chainLabels.values.forall(_ == 1L))
-
-    // randomized parity on a denser graph: star ≡ propagation
-    val rnd = new scala.util.Random(7)
-    val randomPairs = Seq.fill(60)((rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
-      .filter { case (a, b) => a != b }.toDF("id_a", "id_b")
-    val viaStar = DedupFunctions
-      .connectedComponentsAlternating(randomPairs, "id_a", "id_b", localMaxEdges = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaProp = DedupFunctions
-      .connectedComponents(randomPairs, "id_a", "id_b", maxIter = 40)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaStar == viaProp)
   }
 
   test("CC local epilogue: small edge sets finish locally, identical output") {
     import spark.implicits._
-    // chains + a clique + singleton self-loop + isolated pair — every
-    // structural case the distributed fixpoint handles
+    // The local union-find is the exact reference the distributed
+    // fixpoint is held to. Random graphs (two densities) + a 64-link chain
+    // + a 4-clique + a 100-vertex cycle + singleton self-loop + isolated
+    // pair — every structural case the distributed fixpoint handles
     val rnd = new scala.util.Random(11)
+    val rnd7 = new scala.util.Random(7)
     val pairs = (Seq.fill(80)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong)) ++
+      Seq.fill(60)((rnd7.nextInt(30).toLong + 1000L, rnd7.nextInt(30).toLong + 1000L)) ++
       (100L until 164L).map(i => (i, i + 1)) ++ // 64-link chain
+      Seq((201L, 202L), (201L, 203L), (201L, 204L), (202L, 203L), (202L, 204L),
+        (203L, 204L)) ++ // 4-clique
+      ((301L until 400L).map(i => (i, i + 1)) :+ ((400L, 301L))) ++ // cycle
       Seq((500L, 500L), (600L, 601L)))
       .toDF("id_a", "id_b")
     val local = DedupFunctions
@@ -883,6 +869,8 @@ class DedupFunctionsSpec extends SparkSpec {
       .connectedComponentsAlternating(pairs, "id_a", "id_b", localMaxEdges = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(local == distributed)
+    assert((201L to 204L).forall(local(_) == 201L))
+    assert((301L to 400L).forall(local(_) == 301L))
     // the gate is on the DEDUPLICATED edge count: a gate below it runs
     // distributed and still agrees (gate changes latency, never results)
     val tiny = DedupFunctions
@@ -896,42 +884,6 @@ class DedupFunctionsSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(strLabels == Map("a" -> "a", "b" -> "a", "c" -> "a",
       "x" -> "x", "y" -> "x"))
-  }
-
-  test("auto CC: propagation on low-diameter graphs, star escalation on chains") {
-    import spark.implicits._
-    // 4-clique: degree 3 passes the structural probe, converges inside
-    // the propagation budget, no escalation
-    val dense = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
-      (3L, 4L), (10L, 11L)).toDF("id_a", "id_b")
-    val denseLabels = DedupFunctions
-      .connectedComponentsAuto(dense, "id_a", "id_b", localMaxEdges = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(denseLabels ==
-      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
-
-    // max degree 2 = paths/cycles: the probe must route straight to the
-    // star variant (a long cycle would otherwise waste the propagation
-    // budget exactly like the chain below) and stay correct
-    val cycle = ((1L until 100L).map(i => (i, i + 1)) :+ (100L, 1L))
-      .toDF("id_a", "id_b")
-    val cycleLabels = DedupFunctions
-      .connectedComponentsAuto(cycle, "id_a", "id_b", localMaxEdges = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(cycleLabels.size == 100 && cycleLabels.values.forall(_ == 1L))
-
-    // a 64-link chain blows the 2-round propagation budget: auto must
-    // escalate to the alternating-star variant instead of throwing (the
-    // plain propagation entry point throws on this input — pinned below)
-    val chain = (1L until 65L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val chainLabels = DedupFunctions
-      .connectedComponentsAuto(chain, "id_a", "id_b", localMaxEdges = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(chainLabels.size == 65 && chainLabels.values.forall(_ == 1L))
-    assertThrows[IllegalStateException] {
-      DedupFunctions.connectedComponents(chain, "id_a", "id_b", maxIter = 4)
-        .collect()
-    }
   }
 
   test("doc pipeline: funnel stages agree with clean() output") {

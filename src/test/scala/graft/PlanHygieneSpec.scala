@@ -42,6 +42,30 @@ class PlanHygieneSpec extends SparkSpec {
     assert(!p.contains("InMemoryTableScan"), s"d2 regained the routing cache:\n$p")
   }
 
+  test("rakam ingest: at most 2 shuffles past the wire repartition") {
+    val p = plan("d2_rakam_ingest")
+    // the query fabricates its wire with ONE round-robin repartition of
+    // the events table; the ingest itself may add only the aggregate's
+    // and the ORDER BY's shuffles. The per-collection loop re-reads (or
+    // caches) the wire once per collection, so it shows as more of both.
+    val exchanges = p.linesIterator.count(_.contains("Exchange "))
+    val wire = p.linesIterator.count(_.contains("Exchange RoundRobinPartitioning"))
+    assert(wire == 1, s"d2 builds its wire $wire times:\n$p")
+    assert(exchanges - wire <= 2, s"d2 grew to ${exchanges - wire} shuffles:\n$p")
+  }
+
+  test("k2 reads its NDJSON back through the declared value schema, not an inferred one") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val qe = SparkEntry.queries("k2_ndjson_roundtrip")(spark, dir).queryExecution
+    val scans = qe.sparkPlan.collect { case s: FileSourceScanExec => s }
+    assert(scans.nonEmpty, s"k2 has no file scan:\n${qe.sparkPlan}")
+    scans.foreach { s =>
+      assert(s.relation.dataSchema.simpleString == "struct<value:double>",
+        s"k2 scan reads an inferred schema ${s.relation.dataSchema.simpleString}")
+      assert(s.requiredSchema.simpleString == "struct<value:double>")
+    }
+  }
+
   test("exact dedup: single scan — null-key passthrough rides the aggregate") {
     val p = plan("f2_dedup_exact")
     // r15 fused dedupExact's null-key union branch into the keyed

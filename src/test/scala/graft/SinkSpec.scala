@@ -51,6 +51,25 @@ class SinkSpec extends SparkSpec {
     assert(back.count() == 2)
   }
 
+  test("k2's declared DOUBLE read of dirty ndjson values: only JSON numbers sum") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("ndjson_dirty").toString
+    val sink = new graft.sinks.NdjsonGzipSink(base)
+    val id = CollectionId("p", "c")
+    // a number, a numeric string and a non-numeric string, one line each
+    sink.insert(id, Seq(2.5).toDF("value"), batchId = 0)
+    sink.insert(id, Seq("1.25").toDF("value"), batchId = 1)
+    sink.insert(id, Seq("n/a").toDF("value"), batchId = 2)
+    // the read k2_ndjson_roundtrip runs per collection: every line still
+    // counts, but only the JSON number sums — PERMISSIVE nulls a string
+    // value, numeric or not
+    val back = spark.read.schema("value DOUBLE").json(sink.path(id))
+      .agg(count(lit(1)), count($"value"), sum($"value")).head()
+    assert(back.getLong(0) == 3L)
+    assert(back.getLong(1) == 1L)
+    assert(back.getDouble(2) == 2.5)
+  }
+
   test("ndjson locale-exact mode matches the reference's serialization byte-for-byte") {
     import spark.implicits._
     import java.util.zip.GZIPInputStream

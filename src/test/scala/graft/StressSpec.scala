@@ -324,7 +324,7 @@ class StressSpec extends SparkSpec {
   // in practice (the round-5 bench regression); the 64-link parity test in
   // DedupFunctionsSpec is too small to catch round-count blowups, so pin
   // the behavior at a realistic diameter.
-  test("10k-link chain CC: star converges within 25 rounds, propagation fails loudly, auto escalates") {
+  test("10k-link chain CC: alternating star converges within 25 rounds") {
     import spark.implicits._
     import graft.functions.DedupFunctions
     // minhashCandidates-shaped candidate pairs: (id_a < id_b) long ids,
@@ -333,28 +333,16 @@ class StressSpec extends SparkSpec {
       .select($"id".as("id_a"), ($"id" + 1).as("id_b"))
 
     // O(log n) bound in practice: 25 rounds or the variant throws.
-    // Results are consumed inside local scopes so the checkpointed plans
-    // become unreachable before the drain below.
+    // The result is consumed inside a helper's frame (not a local of this
+    // one) so the checkpointed plans become unreachable before the drain
+    // below.
     def assertOneComponent(labels: org.apache.spark.sql.DataFrame): Unit = {
       assert(labels.filter($"label" =!= 1L).isEmpty, "one component labeled 1")
       assert(labels.count() == 10000L)
     }
-    locally {
-      assertOneComponent(DedupFunctions
-        .connectedComponentsAlternating(chain, "id_a", "id_b", maxIter = 25,
-          localMaxEdges = 0))
-    }
-
-    // propagation cannot cross a 10k diameter in its default budget and
-    // must FAIL (a silently split duplicate family is the worst outcome);
-    // auto escalates to the star variant instead
-    assertThrows[IllegalStateException] {
-      DedupFunctions.connectedComponents(chain, "id_a", "id_b").collect()
-    }
-    locally {
-      assertOneComponent(DedupFunctions
-        .connectedComponentsAuto(chain, "id_a", "id_b", localMaxEdges = 0))
-    }
+    assertOneComponent(DedupFunctions
+      .connectedComponentsAlternating(chain, "id_a", "id_b", maxIter = 25,
+        localMaxEdges = 0))
 
     // iterative CC localCheckpoints one edge set per round; the bench's
     // drain must release them all (a 20-round run would otherwise leave
