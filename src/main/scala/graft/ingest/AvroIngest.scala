@@ -481,14 +481,10 @@ object AvroIngest {
           }
         val decoded = DataFrameBridge.ofRows(spark, rows, rowSchema)
         // F2 per-batch duplicate drop on (user, time) — the reference's
-        // AvroDuplicateHandler runs on the DECODED record (null keys pass).
-        // dedupExact reads its input once; the lazy checkpoint is there to
-        // pin the input order its monotonically_increasing_id uid for
-        // null-key rows is drawn from, so a recomputed stage sees the same
-        // rows under the same uids. It can go once that uid is deterministic
+        // AvroDuplicateHandler runs on the DECODED record (null keys pass)
         if (dedupBatch && rowSchema.fieldNames.contains(names.userField) &&
             rowSchema.fieldNames.contains(names.timeField))
-          graft.operators.EventOps.dedupExact(decoded.localCheckpoint(false), names)
+          graft.operators.EventOps.dedupExact(decoded, names)
         else decoded
       }
 

@@ -3,11 +3,20 @@ package graft.operators
 import graft.ingest.{JsonDialect, JsonEventParser}
 import graft.schema.FieldNames
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
+import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.{ColumnBridge, DataFrameBridge}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, MapType, StructType}
+
+import scala.jdk.CollectionConverters._
 
 /** The reference's filter/predicate operators (SURVEY.md §2.3) re-expressed
   * as composable DataFrame transforms. All of these are narrow (no shuffle)
-  * except the day-split promotion histogram, which is one tiny aggregate.
+  * except the batch dedup's one exchange and the day-split promotion
+  * histogram, which is one tiny aggregate.
   */
 object EventOps {
 
@@ -30,62 +39,92 @@ object EventOps {
     df.withColumn(names.checkpointField, current_timestamp())
 
   /** F2 (batch flavor) — exact duplicate drop on the reference's dedup key
-    * `(_user, _time)` (ref kinesis/AvroDuplicateHandler.java:93-111).
-    * Rows with a null user or time pass through UNdeduplicated — the
-    * reference only drops on a PRESENT key (isUnique), and a plain
-    * `dropDuplicates` over the whole frame would silently collapse all
-    * null-key rows.
+    * `(_user, _time)`: a hash lookup per key, like the reference's
+    * (ref kinesis/AvroDuplicateHandler.java:93-111). Rows with a null user
+    * or time pass through UNdeduplicated — the reference only drops on a
+    * PRESENT key (isUnique), and a plain `dropDuplicates` over the whole
+    * frame would silently collapse all null-key rows.
     *
-    * The KEPT row of a keyed group is deterministic: the lexicographic
-    * minimum of the remaining columns (in frame order) wins, via a
-    * `min(struct(...))` aggregate — same single shuffle as
-    * `dropDuplicates`, but a stage recomputed after a shuffle-fetch
-    * failure (or a rerun of the query) reproduces the identical survivor,
-    * where `dropDuplicates` keeps an arbitrary first row per key.
-    * Null-key rows have no such guarantee. Each is grouped on a
-    * `monotonically_increasing_id`, which depends on the order its input
-    * partition yields rows in: a map stage recomputed over input whose
-    * order is not fixed can give a row another id, so it can hash to
-    * another reducer and be duplicated or lost. Callers must pin that
-    * order; the Avro path's `localCheckpoint` before this call
-    * (`AvroIngest.processBatch`) exists for exactly that. Frames carrying
-    * a non-orderable column (e.g. a map) fall back to the
-    * arbitrary-keeper `dropDuplicates`.
+    * One hash exchange places keyed rows by `xxhash64(user, time)` and
+    * null-key rows by a hash of their own content (map columns, which
+    * cannot be hashed, are skipped). Placement depends on row content
+    * alone, so a map stage recomputed after a fetch failure — even over
+    * input whose order is not fixed, such as a shuffle read — sends every
+    * row to the same reducer again: none is duplicated or lost.
+    *
+    * Each reduce partition folds its rows through a hash table from key to
+    * current survivor. A row replaces the survivor when it is smaller under
+    * the ascending ordering of the remaining columns in frame order — the
+    * ordering `min(struct(rest))` compares with — so the kept row is the
+    * lexicographic minimum, the same under any arrival order, rerun or
+    * recomputed stage. Null-key rows stream straight through. Frames with a
+    * non-orderable column (e.g. a map) keep the first row that arrives per
+    * key.
+    *
+    * Memory: the table holds one row per distinct key of a reduce
+    * partition, which is that partition's output, and does not spill. The
+    * streaming callers' micro-batches are capped by their source
+    * (`maxOffsetsPerTrigger`, `maxFilesPerTrigger`).
+    *
+    * The result is a frame over the folded Catalyst rows
+    * ([[DataFrameBridge.ofRows]]). In a batch session with adaptive
+    * execution on, building it runs the map stage (AQE plans the reduce
+    * side from the map outputs); streaming micro-batches run with AQE off,
+    * so there the frame stays lazy until its sink writes it.
     */
   def dedupExact(df: DataFrame, names: FieldNames = FieldNames()): DataFrame = {
-    val keyCols = Seq(names.userField, names.timeField)
-    val rest = df.columns.filterNot(keyCols.contains).toSeq
-    val hasKey =
-      col(names.userField).isNotNull && col(names.timeField).isNotNull
-    val orderable = rest.forall(c =>
-      org.apache.spark.sql.catalyst.expressions.RowOrdering
-        .isOrderable(df.schema(c).dataType))
-    // ONE scan for both populations: the old shape unioned the
-    // aggregated keyed rows with `df.where(!hasKey)` — a SECOND full
-    // evaluation of the input (for the ingest queries that is a second
-    // full JSON parse of every record). Instead, null-key rows ride the
-    // same aggregate as their own singleton groups via a synthetic group
-    // id that is null for keyed rows and globally unique for null-key
-    // rows (partition id ⊕ offset — uniqueness, not the value, is what
-    // matters, and a singleton group's min(struct(rest)) is the row
-    // itself). Grouping on (user, time, uid) cannot mix the two
-    // populations: keyed rows have uid null, null-key rows never share a
-    // uid.
-    require(!df.columns.contains("_graft_uid"),
-      "dedupExact: input already carries the synthetic _graft_uid column")
-    val uid = when(!hasKey, monotonically_increasing_id())
-    val grouped = keyCols :+ "_graft_uid"
-    if (rest.isEmpty || !orderable)
-      df.withColumn("_graft_uid", uid)
-        .dropDuplicates(grouped)
-        .drop("_graft_uid")
-    else
-      df.withColumn("_graft_uid", uid)
-        .groupBy(grouped.map(col): _*)
-        .agg(min(struct(rest.map(col): _*)).as("_graft_rest"))
-        .select(df.columns.toSeq.map(c =>
-          if (keyCols.contains(c)) col(c)
-          else col("_graft_rest").getField(c).as(c)): _*)
+    val schema = df.schema
+    val (u, t) = (schema.fieldIndex(names.userField), schema.fieldIndex(names.timeField))
+    val rest = schema.indices.filterNot(i => i == u || i == t)
+    def ref(i: Int) = BoundReference(i, schema(i).dataType, schema(i).nullable)
+    // a float key groups -0.0 with 0.0 and every NaN together, as a
+    // Spark aggregate would (xxhash64 already places them alike)
+    val keyExprs = Seq(u, t).map(ref).map {
+      case r if r.dataType == DoubleType || r.dataType == FloatType => NormalizeNaNAndZero(r)
+      case r => r
+    }
+    val order =
+      if (rest.forall(i => RowOrdering.isOrderable(schema(i).dataType)))
+        rest.map(i => SortOrder(ref(i), Ascending))
+      else Nil
+    val folded = dedupPlacement(df, names).queryExecution.toRdd.mapPartitions { rows =>
+      val keyOf = UnsafeProjection.create(keyExprs)
+      val smaller: (InternalRow, InternalRow) => Boolean =
+        if (order.isEmpty) (_, _) => false
+        else GenerateOrdering.generate(order).lt
+      val survivors = new java.util.HashMap[UnsafeRow, InternalRow]()
+      rows.filter { row =>
+        val nullKey = row.isNullAt(u) || row.isNullAt(t)
+        if (!nullKey) {
+          val key = keyOf(row)
+          val kept = survivors.get(key)
+          if (kept == null) survivors.put(key.copy(), row.copy())
+          else if (smaller(row, kept)) survivors.replace(key, row.copy())
+        }
+        nullKey
+      } ++ survivors.values.iterator.asScala
+    }
+    DataFrameBridge.ofRows(df.sparkSession, folded, schema)
+  }
+
+  /** The one hash exchange [[dedupExact]] folds over: keyed rows placed by
+    * `xxhash64(user, time)`, null-key rows by a hash of their non-map
+    * columns.
+    */
+  private[graft] def dedupPlacement(df: DataFrame, names: FieldNames): DataFrame = {
+    val cols = df.queryExecution.analyzed.output.map(ColumnBridge.column)
+    def at(field: String) = cols(df.schema.fieldIndex(field))
+    val (user, time) = (at(names.userField), at(names.timeField))
+    df.repartition(when(user.isNotNull && time.isNotNull, xxhash64(user, time))
+      .otherwise(xxhash64(df.schema.indices.filterNot(i => hasMap(df.schema(i).dataType))
+        .map(cols): _*)))
+  }
+
+  private def hasMap(dt: DataType): Boolean = dt match {
+    case _: MapType => true
+    case a: ArrayType => hasMap(a.elementType)
+    case s: StructType => s.fields.exists(f => hasMap(f.dataType))
+    case _ => false
   }
 
   /** Result of the real-time/historical split (F4). */

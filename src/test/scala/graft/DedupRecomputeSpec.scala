@@ -1,0 +1,86 @@
+package graft
+
+import graft.operators.EventOps
+import org.apache.spark.{FetchFailureInjection, ListenerBusWait}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.graftshim.DataFrameBridge
+import org.apache.spark.sql.types._
+
+import java.util.concurrent.atomic.AtomicInteger
+
+/** Yields each partition in another order every time it is computed, as a
+  * shuffle read does when its blocks arrive in another order.
+  */
+object ArrivalOrder {
+  private val computes = new AtomicInteger
+  def vary[T](rows: Iterator[T]): Iterator[T] = {
+    val v = rows.toVector
+    val k = if (v.isEmpty) 0 else computes.incrementAndGet() % v.size
+    (v.drop(k) ++ v.take(k)).iterator
+  }
+}
+
+/** Batch dedup under a recomputed map stage: the output of a run whose
+  * reduce stage loses its map outputs once must equal a clean run's, row
+  * for row, when the input's order within partitions is not fixed.
+  */
+class DedupRecomputeSpec extends SparkSpec {
+
+  private val schema = StructType(Seq(
+    StructField("_user", StringType), StructField("_time", TimestampType),
+    StructField("v", LongType), StructField("s", StringType)))
+
+  // 4 partitions × 500 rows: a third have a null user or time (several
+  // of them identical), the rest repeat 60 users × 5 times
+  private val rows = (0 until 2000).map { i =>
+    val t = new java.sql.Timestamp(1700000000000L + (i % 5) * 1000L)
+    if (i % 3 == 0) Row(null, t, (i % 40).toLong, "null-user")
+    else if (i % 31 == 0) Row(s"u${i % 60}", null, i.toLong, "null-time")
+    else Row(s"u${i % 60}", t, (i * 7919 % 1000).toLong, s"s${i % 13}")
+  }
+
+  private def multiset(rs: Array[Row]): Map[Seq[Any], Int] =
+    rs.toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+
+  private def run(inject: Boolean): Map[Seq[Any], Int] = {
+    val src = spark.sparkContext.parallelize(rows, 4).mapPartitions(ArrivalOrder.vary)
+    val out = EventOps.dedupExact(spark.createDataFrame(src, schema))
+    val rdd = out.queryExecution.toRdd
+    multiset(DataFrameBridge.ofRows(spark,
+      if (inject) FetchFailureInjection.failFirstAttempt(rdd) else rdd, out.schema).collect())
+  }
+
+  for ((mode, conf) <- Seq(
+      "AQE off (streaming batches)" -> Map("spark.sql.adaptive.enabled" -> "false"),
+      "AQE on, no coalescing" -> Map("spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false")))
+    test(s"dedupExact: a recomputed map stage keeps the output multiset — $mode") {
+      val before = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      val failed = new AtomicInteger
+      val listener = new SparkListener {
+        override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+          if (e.stageInfo.failureReason.exists(_.contains("injected"))) failed.incrementAndGet()
+      }
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val clean = run(inject = false)
+        val faulted = run(inject = true)
+        ListenerBusWait.drain(spark.sparkContext)
+        assert(failed.get() == 1, "the injected fetch failure did not fail a stage")
+        val keyed = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+          .map(r => (r.get(0), r.get(1))).distinct.size
+        assert(clean.values.sum == rows.count(r => r.isNullAt(0) || r.isNullAt(1)) + keyed)
+        val diff = (clean.keySet ++ faulted.keySet).filter(k => clean.get(k) != faulted.get(k))
+        assert(diff.isEmpty, s"${diff.size} rows differ after the recompute, e.g. " +
+          diff.take(3).map(k => s"$k: clean ${clean.get(k)}, recomputed ${faulted.get(k)}"))
+      } finally {
+        spark.sparkContext.removeSparkListener(listener)
+        before.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
+        }
+      }
+    }
+}

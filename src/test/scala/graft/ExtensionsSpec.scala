@@ -81,19 +81,28 @@ class ExtensionsSpec extends SparkSpec {
     assert(files.map(_.getName).toSet == (0 until 20).map(p => s"proj$p.json").toSet)
     // steady state: nothing rewritten
     assert(!registry.saveShardedIfChanged(dir, conf))
-    // one project evolves → exactly that shard rewritten
-    val before = files.map(f => f.getName -> f.lastModified()).toMap
-    Thread.sleep(20)
+    // one project evolves → exactly that shard rewritten. Every shard
+    // first gets a trailing newline (still valid JSON), written through the
+    // same filesystem so its checksum stays valid; a rewrite drops it
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
+    def shard(name: String) = new org.apache.hadoop.fs.Path(s"$dir/$name")
+    def read(name: String) = {
+      val in = fs.open(shard(name))
+      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+      finally in.close()
+    }
+    files.map(_.getName).foreach { name =>
+      val body = read(name)
+      val out = fs.create(shard(name), true)
+      try out.write((body + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
     registry.addColumns(CollectionId("proj7", "coll0"),
       StructType(Seq(StructField("extra", StringType))))
     assert(registry.saveShardedIfChanged(dir, conf))
-    val after = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".json"))
-      .map(f => f.getName -> f.lastModified()).toMap
-    assert(after("proj7.json") > before("proj7.json"))
-    assert(before.filterNot(_._1 == "proj7.json").forall {
-      case (n, t) => after(n) == t
-    }, "an unchanged project's shard was rewritten")
+    val rewritten = files.map(_.getName).filterNot(read(_).endsWith("\n")).toSeq
+    assert(rewritten == Seq("proj7.json"), s"rewritten shards: $rewritten")
+    assert(read("proj7.json").contains("\"extra\""))
 
     // fresh load: all 1000 collections back, loaded state already durable
     val loaded = new EventSchema.Registry()

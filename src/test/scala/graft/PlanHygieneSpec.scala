@@ -66,21 +66,47 @@ class PlanHygieneSpec extends SparkSpec {
     }
   }
 
-  test("exact dedup: single scan — null-key passthrough rides the aggregate") {
-    val p = plan("f2_dedup_exact")
-    // r15 fused dedupExact's null-key union branch into the keyed
-    // aggregate via a synthetic singleton-group id; the only Union left
-    // is the per-collection ingest union (ONE occurrence). Two means the
-    // second full parse of every record is back.
-    val unions = p.sliding("Union".length).count(_ == "Union")
-    assert(unions <= 1, s"dedup re-grew the second input scan ($unions Unions):\n$p")
+  test("exact dedup: one hash exchange, no sort, no sort aggregate") {
+    import graft.operators.EventOps
+    import graft.schema.FieldNames
+    import spark.implicits._
+    val t = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    val in = Seq(("u1", t, 1.0), ("u1", t, 2.0), (null, t, 3.0)).toDF("_user", "_time", "v")
+    // the exchange dedupExact folds over (a local relation adds none); a
+    // struct min() plans a partial and a final SortAggregate instead
+    val p = EventOps.dedupPlacement(in, FieldNames()).queryExecution.explainString(SimpleMode)
+    assert(p.linesIterator.count(_.contains("Exchange ")) == 1, s"dedup placement:\n$p")
+    assert(!p.contains("Sort"), s"dedup placement sorts:\n$p")
+    assert(!p.contains("Union"), s"dedup placement scans its input twice:\n$p")
+    // the frame dedupExact returns reads that one shuffle and no other
+    val out = EventOps.dedupExact(in)
+    assert(shuffles(out.queryExecution.toRdd) == 1)
+    assert(!out.queryExecution.explainString(SimpleMode).contains("Sort"))
+    val f2 = plan("f2_dedup_exact")
+    assert(!f2.contains("SortAggregate"), s"f2 dedup sorts again:\n$f2")
   }
 
-  test("avro decode frames: Catalyst rows off the wire, no object (de)serialization") {
+  /** Shuffle dependencies in `rdd`'s lineage. */
+  private def shuffles(rdd: org.apache.spark.rdd.RDD[_]): Int =
+    rdd.dependencies.map {
+      case s: org.apache.spark.ShuffleDependency[_, _, _] => 1 + shuffles(s.rdd)
+      case d => shuffles(d.rdd)
+    }.sum
+
+  /** Whether any RDD in `rdd`'s lineage is checkpointed. */
+  private def checkpointed(rdd: org.apache.spark.rdd.RDD[_]): Boolean =
+    rdd.isCheckpointed || rdd.dependencies.exists(d => checkpointed(d.rdd))
+
+  /** Eight tagged Avro records over two collections through
+    * `AvroIngest.processBatch` once per `(cfg, dedupBatch)`: for each
+    * frame handed to the sink, its write shape, its executed plan and
+    * whether its lineage holds a checkpoint.
+    */
+  private def avroFrames(
+      runs: (graft.streaming.IngestConfig, Boolean)*): Seq[(String, String, Boolean)] = {
     import graft.ingest.AvroIngest
     import graft.schema.{CollectionId, EventSchema}
     import graft.sinks.EventSink
-    import graft.streaming.IngestConfig
     import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
     import org.apache.avro.io.EncoderFactory
     import org.apache.spark.sql.DataFrame
@@ -103,31 +129,45 @@ class PlanHygieneSpec extends SparkSpec {
       enc.flush()
       (s"p.${ids(i % 2).collection}", out.toByteArray)
     }.toDF("key", "value")
-    // the frames each write shape hands the sink, as executed plans
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val frames = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Boolean)]()
+    def seen(shape: String, df: DataFrame): Unit = {
+      df.collect()
+      frames.add((shape, df.queryExecution.executedPlan.toString,
+        checkpointed(df.queryExecution.toRdd)))
+    }
     val sink = new EventSink {
       override def getColumns(id: CollectionId) = None
-      override def insert(id: CollectionId, df: DataFrame): Unit = {
-        df.collect()
-        plans.add("per collection" -> df.queryExecution.executedPlan.toString)
-      }
+      override def insert(id: CollectionId, df: DataFrame): Unit = seen("per collection", df)
       override def supportsConsolidated: Boolean = true
-      override def insertConsolidated(rows: DataFrame, batchId: Long): Unit = {
-        rows.collect()
-        plans.add("cohort" -> rows.queryExecution.executedPlan.toString)
-      }
+      override def insertConsolidated(rows: DataFrame, batchId: Long): Unit = seen("cohort", rows)
     }
-    Seq(0, 2).foreach { threshold =>
-      AvroIngest.processBatch(records, registry, sink,
-        cfg = IngestConfig(consolidateThreshold = threshold))
+    runs.foreach { case (cfg, dedupBatch) =>
+      AvroIngest.processBatch(records, registry, sink, cfg = cfg, dedupBatch = dedupBatch)
     }
-    val shapes = plans.toArray.toSeq.map(_.asInstanceOf[(String, String)])
-    assert(shapes.map(_._1).toSet == Set("per collection", "cohort"))
-    shapes.foreach { case (shape, p) =>
+    frames.toArray.toSeq.map(_.asInstanceOf[(String, String, Boolean)])
+  }
+
+  test("avro decode frames: Catalyst rows off the wire, no object (de)serialization") {
+    import graft.streaming.IngestConfig
+    val frames = avroFrames(
+      IngestConfig(consolidateThreshold = 0) -> false, IngestConfig(consolidateThreshold = 2) -> false)
+    assert(frames.map(_._1).toSet == Set("per collection", "cohort"))
+    frames.foreach { case (shape, p, _) =>
       // an external-Row decode (mapPartitions under Encoders.row) plans as
       // DeserializeToObject → MapPartitions → SerializeFromObject
       assert(!p.contains("SerializeFromObject") && !p.contains("DeserializeToObject"),
         s"$shape avro frame regained the Row serializer boundary:\n$p")
+    }
+  }
+
+  test("avro dedupBatch frame: no local checkpoint, no sort aggregate") {
+    import graft.streaming.IngestConfig
+    val frames = avroFrames(IngestConfig() -> true)
+    assert(frames.nonEmpty)
+    frames.foreach { case (_, p, cp) =>
+      // the checkpoint pinned the input order of a row-position uid
+      assert(!cp, s"the dedup frame reads a checkpoint:\n$p")
+      assert(!p.contains("SortAggregate"), s"the dedup frame sorts:\n$p")
     }
   }
 
