@@ -5,6 +5,7 @@ import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.avro.io.{BinaryDecoder, Decoder, DecoderFactory}
 import org.apache.avro.util.Utf8
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{SpecificInternalRow, UnsafeProjection}
@@ -14,6 +15,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import java.nio.ByteBuffer
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** Avro wire path (SURVEY.md §2.1 S3-S5, §2.2 D5-D6).
@@ -26,13 +28,19 @@ import scala.jdk.CollectionConverters._
   * [[CatalystDecoder]], mirroring the reference's AvroPageDatumReader
   * (m/org/apache/avro/io/AvroPageDatumReader.java:58-157) including the
   * writer-schema-shorter-than-reader null-fill (:84-108) and the bulk
-  * truncated-schema projection (setLastColumnIndex:196-206). The decoder
-  * writes Catalyst values into a reused internal row; the inline, cohort
-  * and bulk frames wrap its output RDD as a DataFrame
-  * (`DataFrameBridge.ofRows`), so no external `Row` or `Encoders.row`
-  * serializer sits on the batch path. The Row-returning API
-  * ([[decodeRecord]], [[decodeTagged]], [[readBulkObject]]) converts the
-  * same decoder's rows.
+  * truncated-schema projection (setLastColumnIndex:196-206).
+  *
+  * A batch ([[processBatch]]) is routed once: one pass over the source's
+  * Catalyst rows puts each record's payload bytes into a per-partition
+  * bucket for its collection — the reference's per-table buffers
+  * (`MiddlewareBuffer.java:34-54`) — and the buckets are kept as a plain
+  * RDD, outside Spark SQL's columnar cache. Each write's frame decodes
+  * only its own buckets; the decoder writes Catalyst values into a reused
+  * internal row, and the inline, cohort and bulk frames wrap its output
+  * RDD as a DataFrame (`DataFrameBridge.ofRows`), so no external `Row`,
+  * `Encoders.row` serializer or typed tuple pass sits on the batch path.
+  * The Row-returning API ([[decodeRecord]], [[decodeTagged]],
+  * [[readBulkObject]]) converts the same decoder's rows.
   */
 object AvroIngest {
 
@@ -358,14 +366,13 @@ object AvroIngest {
       }
     } catch { case _: Exception => None }
 
-  /** Every row `decode` produces from `rows`, leaving out the records it
-    * cannot decode (record-skip, F3) and those it maps to null.
+  /** Every row `decode` produces from `payloads`, leaving out the ones it
+    * cannot decode (record-skip, F3).
     */
-  private def decodeEach(rows: Iterator[InternalRow])(
-      decode: InternalRow => InternalRow): Iterator[InternalRow] =
-    rows.flatMap { r =>
-      val out = try decode(r) catch { case _: Exception => null }
-      if (out == null) Iterator.empty else Iterator.single(out)
+  private def decodeEach(payloads: Iterator[Array[Byte]])(
+      decode: Array[Byte] => InternalRow): Iterator[InternalRow] =
+    payloads.flatMap { p =>
+      try Iterator.single(decode(p)) catch { case _: Exception => Iterator.empty }
     }
 
   /** Tag-3 payload → the object-store pointer it carries (UTF-8 key). */
@@ -400,27 +407,39 @@ object AvroIngest {
     * planner the JSON `IngestStream.processBatch` uses too. This function
     * supplies only the Avro frame builders; a failed write aborts the batch.
     *
-    * Single-pass shape (round-1 verdict #4): one routing-only scan of the
-    * source tags every record with its collection and is persisted; each
-    * collection then filters the cached routed batch and decodes ONLY its
-    * own records, with the inserted-row count folded into the sink write
-    * via `Observation` — so the record body is decoded exactly once, and
-    * with C collections the source is scanned once, not 2C times (the
-    * reference's stress shape is 100 collections,
-    * t/io/rakam/presto/KafkaStressTest.java:107-137).
+    * One routing pass ([[route]]) reads the source's Catalyst rows once and
+    * turns each source partition into one map of buckets, collection →
+    * payloads (tag-3 pointers under [[BulkKey]] when `bulkFetch` is set;
+    * records that do not route are dropped). The buckets are persisted as
+    * an RDD (`MEMORY_AND_DISK`), not through Spark SQL's cache manager, and
+    * the job that fills that cache also returns each bucket's size — the
+    * per-collection counts the planner needs, with no shuffle. Absent
+    * collections then run no job at all.
     *
-    * A frame (per collection, or a same-schema cohort) is the routed
-    * batch's Catalyst rows mapped through a per-task [[CatalystDecoder]]
-    * and wrapped back into a DataFrame: its plan is a scan of the decoded
-    * rows, with no object deserialization or Row serialization. The decode
-    * runs lazily inside the frame's write job. Undecodable records are
-    * skipped (F3).
+    * Each frame reads only its own buckets: a per-collection frame takes
+    * its collection's bucket of every cached partition, a cohort frame its
+    * members' buckets, the bulk expansion the marker bucket. So a frame
+    * decodes O(its own rows), not O(batch), which matters at the
+    * reference's 100-collection stress shape
+    * (t/io/rakam/presto/KafkaStressTest.java:107-137), where `dedupBatch`
+    * keeps every collection on the per-collection path. A frame is its
+    * payloads mapped through a per-task [[CatalystDecoder]] and wrapped
+    * back into a DataFrame: its plan is a scan of the decoded rows, and
+    * the decode runs lazily inside the frame's write job, the record body
+    * decoded exactly once. Undecodable records are skipped (F3).
+    *
+    * Memory: each routed payload is held once, as the byte array the
+    * source row carried (no key, no per-row routing columns); a partition
+    * that does not fit in memory spills to disk whole. Recompute: a lost
+    * cached block is rebuilt from the same source partition, and a
+    * partition's buckets depend on that partition's records alone, so a
+    * recomputed block holds the same payloads in the same order.
     *
     * `records` needs `key: string` and `value: binary` columns (the Kafka
-    * source shape). Bulk pointers (tag 3) must be handled by the caller via
-    * [[readBulkObject]] (object-store access is environment-specific).
-    * Returns per-collection inserted row counts; collections with no rows
-    * are left out.
+    * source shape). Bulk pointers (tag 3) are expanded through `bulkFetch`
+    * when given ([[readBulkObject]] framing; object-store access is
+    * environment-specific) and dropped otherwise. Returns per-collection
+    * inserted row counts; collections with no rows are left out.
     */
   def processBatch(records: org.apache.spark.sql.DataFrame,
                    registry: graft.schema.EventSchema.Registry,
@@ -432,53 +451,34 @@ object AvroIngest {
                    dedupBatch: Boolean = false)
       : Map[CollectionId, Long] = {
     val spark = records.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-
     val names = cfg.names
     val schemas = registry.all // (tiny) driver-side snapshot, serialized to tasks
     val schemaPairs: Map[CollectionId, (String, StructType)] = schemas.map {
       case (id, st) => id -> (avroSchema(st, id.collection, names).toString, st)
     }
 
-    // bulk pointers (tag 3) ride the routed pass under a marker routing key
-    // so the source is still scanned exactly ONCE per batch
-    val wantBulk = bulkFetch.isDefined
-    val routed = records.select(col("key").cast("string"), col("value"))
-      .as[(String, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (key, payload) =>
-          routingOf(key, payload, keySep) match {
-            case Some(id) => (id.project, id.collection, key, payload)
-            case None =>
-              if (wantBulk && kindOf(payload) == RecordKind.BulkPointer)
-                (BulkMarker, BulkMarker, key, payload)
-              else (null, null, key, payload)
-          }
-        }
-      }.toDF("_project", "_collection", "key", "value")
-      .filter(col("_project").isNotNull)
+    val routed = route(records, keySep, wantBulk = bulkFetch.isDefined)
+      .setName(RoutedName)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // one tiny aggregation tells which collections are present (absent
-      // ones skip their decode+write jobs entirely) and how big each is
-      val present = routed.groupBy(col("_project"), col("_collection")).count()
-        .collect()
-        .map(r => CollectionId(r.getString(0), r.getString(1)) -> r.getLong(2))
-        .toMap
+      val (pointerBucket, present) = routed
+        .map(_.map { case (id, payloads) => id -> payloads.length.toLong })
+        .collect().flatten
+        .groupMapReduce(_._1)(_._2)(_ + _)
+        .partition(_._1 == BulkKey)
 
       def decodeSingle(id: CollectionId, rowSchema: StructType): DataFrame = {
         val avroJson = schemaPairs(id)._1
-        val rows = routed
-          .filter(col("_project") === id.project && col("_collection") === id.collection)
-          .select(col("value")).queryExecution.toRdd
-          .mapPartitions { it =>
+        val rows = routed.mapPartitions { parts =>
+          val payloads = parts.flatMap(_.get(id).fold(Iterator.empty[Array[Byte]])(_.iterator))
+          if (!payloads.hasNext) Iterator.empty
+          else {
             // the avro schema parses once per partition, not per record
             val dec = new CatalystDecoder(rowSchema, names)
             val reader = new Schema.Parser().parse(avroJson)
-            val r = dec.reader(reader, reader)
-            decodeEach(it)(row => r.decodeInline(row.getBinary(0)))
+            decodeEach(payloads)(dec.reader(reader, reader).decodeInline)
           }
+        }
         val decoded = DataFrameBridge.ofRows(spark, rows, rowSchema)
         // F2 per-batch duplicate drop on (user, time) — the reference's
         // AvroDuplicateHandler runs on the DECODED record (null keys pass)
@@ -493,43 +493,27 @@ object AvroIngest {
         * members share the StructType but keep their record names).
         */
       def decodeCohort(ids: Seq[CollectionId], rowSchema: StructType): DataFrame = {
-        val members: Map[(String, String), String] =
-          ids.map(id => (id.project, id.collection) -> schemaPairs(id)._1).toMap
+        val members = ids.map(id => id -> schemaPairs(id)._1)
         val outSchema = StructType(rowSchema.fields ++ Seq(
           StructField("_project", StringType, nullable = false),
           StructField("_collection", StringType, nullable = false)))
-        val memberB = spark.sparkContext.broadcast(members)
-        val rows = routed
-          .select(col("_project"), col("_collection"), col("value")).queryExecution.toRdd
-          .mapPartitions { it =>
-            val m = memberB.value
-            val dec = new CatalystDecoder(rowSchema, names, routing = true)
-            // one reader per member per task (Schema.Parser is single-use;
-            // parsed lazily so a task touching few members pays for few),
-            // with the member's routing values; None = not a member
-            type Member = Option[(dec.Reader, UTF8String, UTF8String)]
-            val readers = scala.collection.mutable.HashMap.empty[(UTF8String, UTF8String), Member]
-            decodeEach(it) { row =>
-              val key = (row.getUTF8String(0), row.getUTF8String(1))
-              val member = readers.getOrElse(key, {
-                val (p, c) = (key._1.toString, key._2.toString)
-                val resolved: Member = m.get((p, c)).map { avroJson =>
-                  val reader = new Schema.Parser().parse(avroJson)
-                  (dec.reader(reader, reader), UTF8String.fromString(p), UTF8String.fromString(c))
-                }
-                // the key points into the input row's buffer: store a copy
-                readers((key._1.clone(), key._2.clone())) = resolved
-                resolved
-              })
-              member match {
-                case None => null
-                case Some((r, p, c)) =>
-                  val out = r.decodeInline(row.getBinary(2))
-                  dec.route(p, c)
-                  out
-              }
+        val rows = routed.mapPartitions { parts =>
+          val dec = new CatalystDecoder(rowSchema, names, routing = true)
+          for {
+            buckets <- parts
+            (id, avroJson) <- members.iterator
+            payloads <- buckets.get(id).iterator
+            // one reader per member a partition holds
+            reader = new Schema.Parser().parse(avroJson)
+            (r, p, c) = (dec.reader(reader, reader), UTF8String.fromString(id.project),
+              UTF8String.fromString(id.collection))
+            row <- decodeEach(payloads.iterator) { payload =>
+              val out = r.decodeInline(payload)
+              dec.route(p, c)
+              out
             }
-          }
+          } yield row
+        }
         DataFrameBridge.ofRows(spark, rows, outSchema)
       }
 
@@ -543,13 +527,12 @@ object AvroIngest {
         .filter { case (_, n) => n > 0 }
 
       bulkFetch match {
-        case None => inline
-        case Some(fetch) =>
-          // S4: expand tag-3 pointers (already tagged in the cached routed
-          // batch — no second source scan) through the injected fetcher
-          val pointers = routed.filter(col("_project") === BulkMarker)
-            .select(col("value")).as[Array[Byte]]
-            .flatMap(bulkPointerOf(_))
+        case Some(fetch) if pointerBucket.nonEmpty =>
+          // S4: expand the tag-3 pointers of the marker buckets (no second
+          // source scan) through the injected fetcher
+          val pointers = spark.createDataset(routed.flatMap(
+            _.get(BulkKey).iterator.flatMap(_.iterator.flatMap(bulkPointerOf))))(
+            org.apache.spark.sql.Encoders.STRING)
           val bulk = writeBulk(pointers, registry, sink, fetch, cfg,
             // disjoint replay-marker space: an inline write and a bulk
             // write of the SAME collection in the SAME batch must not
@@ -557,9 +540,44 @@ object AvroIngest {
             if (batchId >= 0) batchId + BulkBatchIdOffset else batchId)
           (inline.keySet ++ bulk.keySet).map(id =>
             id -> (inline.getOrElse(id, 0L) + bulk.getOrElse(id, 0L))).toMap
+        case _ => inline
       }
-    } finally routed.unpersist(false)
+    } finally routed.unpersist(blocking = false)
   }
+
+  /** Routes each record once (the reference's per-table buffers,
+    * `MiddlewareBuffer.java:34-54`): a record with an inline routing goes,
+    * as its payload bytes, into its source partition's bucket for its
+    * collection, in arrival order; with `wantBulk`, tag-3 pointers go into
+    * the [[BulkKey]] bucket. The rest (tombstones, legacy and unknown tags,
+    * invalid keys, pointers with no fetcher) are dropped here (F3
+    * record-skip). One map of buckets per source partition.
+    */
+  private def route(records: DataFrame, keySep: Char,
+                    wantBulk: Boolean): RDD[Map[CollectionId, Array[Array[Byte]]]] = {
+    import org.apache.spark.sql.functions.col
+    records.select(col("key").cast("string"), col("value")).queryExecution.toRdd
+      .mapPartitions { rows =>
+        val buckets = mutable.HashMap.empty[CollectionId, mutable.ArrayBuffer[Array[Byte]]]
+        rows.foreach { row =>
+          val key = if (row.isNullAt(0)) null else row.getUTF8String(0).toString
+          val payload = row.getBinary(1) // a copy: the input row is reused
+          routingOf(key, payload, keySep)
+            .orElse(Option.when(wantBulk && kindOf(payload) == RecordKind.BulkPointer)(BulkKey))
+            .foreach(buckets.getOrElseUpdate(_, mutable.ArrayBuffer.empty) += payload)
+        }
+        Iterator.single(buckets.iterator.map { case (id, ps) => id -> ps.toArray }.toMap)
+      }
+  }
+
+  /** The name of the routed batch's cached RDD. */
+  private[graft] val RoutedName: String = "AvroIngest routed batch"
+
+  /** Bucket key of tag-3 pointers in the routed batch. The empty name is
+    * collision-proof: `CollectionId.normalize` requires non-empty
+    * project/collection, so no real routing key can equal it.
+    */
+  private val BulkKey: CollectionId = CollectionId("", "")
 
   /** Keeps bulk-expansion batch markers disjoint from inline ones. */
   val BulkBatchIdOffset: Long = 1L << 40
@@ -611,12 +629,6 @@ object AvroIngest {
                   sink: graft.sinks.EventSink): Map[CollectionId, Long] =
     processBulk(pointers, registry, sink,
       HadoopObjectFetcher(pointers.sparkSession))
-
-  /** Routing-key marker for tag-3 rows inside the routed batch. The empty
-    * string is collision-proof: `CollectionId.normalize` requires
-    * non-empty project/collection, so no real routing key can equal it.
-    */
-  private val BulkMarker: String = ""
 
   /** S4 — distributed bulk-object expansion: fetch each pointed-to object
     * ONCE (cached bytes); `fetch` is the injected object-store client
@@ -685,7 +697,7 @@ object AvroIngest {
       val membership = fetched.queryExecution.toRdd.mapPartitions { it =>
         val frames = new BulkReaders(schemaFor, names)
         it.flatMap { row =>
-          val counts = scala.collection.mutable.HashMap.empty[CollectionId, Long]
+          val counts = mutable.HashMap.empty[CollectionId, Long]
           try walkBulk(row.getBinary(1), frames, _ => true) { (id, _) =>
             counts(id) = counts.getOrElse(id, 0L) + 1
           } catch { case _: Exception => counts.clear() }
@@ -704,7 +716,7 @@ object AvroIngest {
             else {
               // an object decodes whole or not at all: a corrupt frame
               // drops the object's rows, never half of them
-              val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+              val out = mutable.ArrayBuffer.empty[InternalRow]
               try {
                 walkBulk(row.getBinary(1), frames, _ == id)((_, r) => out += project(r).copy())
                 out
@@ -755,9 +767,9 @@ object AvroIngest {
   private final class BulkReaders(schemaFor: CollectionId => (Schema, StructType),
                                   names: FieldNames) {
     private val decoders =
-      scala.collection.mutable.HashMap.empty[CollectionId, (CatalystDecoder, Schema)]
+      mutable.HashMap.empty[CollectionId, (CatalystDecoder, Schema)]
     private val readers =
-      scala.collection.mutable.HashMap.empty[(CollectionId, Int), CatalystDecoder#Reader]
+      mutable.HashMap.empty[(CollectionId, Int), CatalystDecoder#Reader]
 
     def decoder(id: CollectionId): CatalystDecoder = entry(id)._1
 

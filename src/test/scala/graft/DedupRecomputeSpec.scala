@@ -1,13 +1,16 @@
 package graft
 
 import graft.operators.EventOps
-import org.apache.spark.{FetchFailureInjection, ListenerBusWait}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.{FetchFailed, FetchFailureInjection, ListenerBusWait}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted,
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.graftshim.DataFrameBridge
 import org.apache.spark.sql.types._
 
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 /** Yields each partition in another order every time it is computed, as a
   * shuffle read does when its blocks arrive in another order.
@@ -43,12 +46,14 @@ class DedupRecomputeSpec extends SparkSpec {
   private def multiset(rs: Array[Row]): Map[Seq[Any], Int] =
     rs.toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
 
-  private def run(inject: Boolean): Map[Seq[Any], Int] = {
+  /** The output multiset, and the id of the shuffle under the frame. */
+  private def run(inject: Boolean): (Map[Seq[Any], Int], Int) = {
     val src = spark.sparkContext.parallelize(rows, 4).mapPartitions(ArrivalOrder.vary)
     val out = EventOps.dedupExact(spark.createDataFrame(src, schema))
     val rdd = out.queryExecution.toRdd
-    multiset(DataFrameBridge.ofRows(spark,
-      if (inject) FetchFailureInjection.failFirstAttempt(rdd) else rdd, out.schema).collect())
+    (multiset(DataFrameBridge.ofRows(spark,
+      if (inject) FetchFailureInjection.failFirstAttempt(rdd) else rdd, out.schema).collect()),
+      FetchFailureInjection.shuffleOf(rdd))
   }
 
   for ((mode, conf) <- Seq(
@@ -57,18 +62,39 @@ class DedupRecomputeSpec extends SparkSpec {
         "spark.sql.adaptive.coalescePartitions.enabled" -> "false")))
     test(s"dedupExact: a recomputed map stage keeps the output multiset — $mode") {
       val before = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
-      val failed = new AtomicInteger
+      // (stage, shuffle) of every task that failed on a fetch, and the
+      // (stage, attempt) of every stage attempt that ran or failed. The
+      // injected task drops all map outputs of its shuffle, so a sibling
+      // reduce task may fail first, on a missing output location: any
+      // fetch failure of that shuffle counts, whatever its message.
+      val fetchFailures = new ConcurrentLinkedQueue[(Int, Int)]
+      val submitted = new ConcurrentLinkedQueue[(Int, Int)]
+      val failedAttempts = new ConcurrentLinkedQueue[(Int, Int)]
       val listener = new SparkListener {
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit = e.reason match {
+          case f: FetchFailed => fetchFailures.add((e.stageId, f.shuffleId))
+          case _ => ()
+        }
+        override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+          submitted.add((e.stageInfo.stageId, e.stageInfo.attemptNumber()))
         override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-          if (e.stageInfo.failureReason.exists(_.contains("injected"))) failed.incrementAndGet()
+          if (e.stageInfo.failureReason.isDefined)
+            failedAttempts.add((e.stageInfo.stageId, e.stageInfo.attemptNumber()))
       }
       conf.foreach { case (k, v) => spark.conf.set(k, v) }
       spark.sparkContext.addSparkListener(listener)
       try {
-        val clean = run(inject = false)
-        val faulted = run(inject = true)
+        val (clean, _) = run(inject = false)
+        val (faulted, shuffleId) = run(inject = true)
         ListenerBusWait.drain(spark.sparkContext)
-        assert(failed.get() == 1, "the injected fetch failure did not fail a stage")
+        val reducers = fetchFailures.asScala.collect { case (stage, `shuffleId`) => stage }.toSet
+        assert(reducers.size == 1,
+          s"the injected fetch failure did not fail one stage reading shuffle $shuffleId: $reducers")
+        val reducer = reducers.head
+        assert(failedAttempts.asScala.toSeq == Seq(reducer -> 0),
+          s"stage $reducer should fail once, in its first attempt: ${failedAttempts.asScala}")
+        assert(submitted.asScala.exists { case (s, attempt) => s == reducer && attempt > 0 },
+          s"stage $reducer never ran a second attempt")
         val keyed = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
           .map(r => (r.get(0), r.get(1))).distinct.size
         assert(clean.values.sum == rows.count(r => r.isNullAt(0) || r.isNullAt(1)) + keyed)

@@ -111,7 +111,7 @@ class NdjsonV2Spec extends SparkSpec {
       .option("checkpointLocation", ckpt.toString)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(60000)
+    assert(q.awaitTermination(60000), "the AvailableNow query did not finish within 60 s")
 
     assert(gzLines(out.resolve("demo/ev")).toSet == Set("x1", "x2"))
   }
@@ -217,7 +217,8 @@ class NdjsonV2Spec extends SparkSpec {
     // both run epoch 0 against the same base path
     val q1 = start(in1, "ev1")
     val q2 = start(in2, "ev2")
-    q1.awaitTermination(60000); q2.awaitTermination(60000)
+    assert(q1.awaitTermination(60000) && q2.awaitTermination(60000),
+      "an AvailableNow query did not finish within 60 s")
 
     assert(gzLines(out.resolve("demo/ev1")).toSet == Set("a1", "a2"))
     assert(gzLines(out.resolve("demo/ev2")) == Seq("b1"))

@@ -3,6 +3,7 @@ package graft
 import graft.util.ParallelWrites
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 class ParallelWritesSpec extends AnyFunSuite {
@@ -13,15 +14,14 @@ class ParallelWritesSpec extends AnyFunSuite {
   }
 
   test("tasks actually overlap at parallelism > 1") {
-    val peak = new AtomicInteger
-    val active = new AtomicInteger
-    ParallelWrites.run((1 to 8).toList, 4) { _ =>
-      val now = active.incrementAndGet()
-      peak.updateAndGet(p => math.max(p, now))
-      Thread.sleep(50)
-      active.decrementAndGet()
+    // the first two tasks meet on a latch: one that waits alone (tasks run
+    // serially) times out and reports false
+    val met = new CountDownLatch(2)
+    val waits = ParallelWrites.run((1 to 8).toList, 4) { _ =>
+      met.countDown()
+      met.await(30, TimeUnit.SECONDS)
     }
-    assert(peak.get() > 1, s"peak concurrency ${peak.get()} — tasks ran serially")
+    assert(waits.forall(identity), s"a task waited alone: $waits")
   }
 
   test("every task completes before the first failure is rethrown") {

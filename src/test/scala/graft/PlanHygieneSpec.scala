@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SqlCacheProbe
 import org.apache.spark.sql.execution.SimpleMode
 
 /** Plan-shape regression gates for the scale-critical queries: these pin
@@ -97,13 +98,17 @@ class PlanHygieneSpec extends SparkSpec {
   private def checkpointed(rdd: org.apache.spark.rdd.RDD[_]): Boolean =
     rdd.isCheckpointed || rdd.dependencies.exists(d => checkpointed(d.rdd))
 
+  /** What the sink saw of one frame `AvroIngest.processBatch` handed it. */
+  private final case class AvroFrame(shape: String, plan: String, checkpointed: Boolean,
+                                     problems: Seq[String])
+
   /** Eight tagged Avro records over two collections through
     * `AvroIngest.processBatch` once per `(cfg, dedupBatch)`: for each
-    * frame handed to the sink, its write shape, its executed plan and
-    * whether its lineage holds a checkpoint.
+    * frame handed to the sink, its write shape, its executed plan, whether
+    * its lineage holds a checkpoint, and what it or the session holds of
+    * Spark SQL's cache while the batch writes.
     */
-  private def avroFrames(
-      runs: (graft.streaming.IngestConfig, Boolean)*): Seq[(String, String, Boolean)] = {
+  private def avroFrames(runs: (graft.streaming.IngestConfig, Boolean)*): Seq[AvroFrame] = {
     import graft.ingest.AvroIngest
     import graft.schema.{CollectionId, EventSchema}
     import graft.sinks.EventSink
@@ -129,11 +134,13 @@ class PlanHygieneSpec extends SparkSpec {
       enc.flush()
       (s"p.${ids(i % 2).collection}", out.toByteArray)
     }.toDF("key", "value")
-    val frames = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Boolean)]()
+    val frames = new java.util.concurrent.ConcurrentLinkedQueue[AvroFrame]()
+    // plans an earlier suite left cached in the shared session
+    val before = SqlCacheProbe.entries(spark)
     def seen(shape: String, df: DataFrame): Unit = {
       df.collect()
-      frames.add((shape, df.queryExecution.executedPlan.toString,
-        checkpointed(df.queryExecution.toRdd)))
+      frames.add(AvroFrame(shape, df.queryExecution.executedPlan.toString,
+        checkpointed(df.queryExecution.toRdd), sqlCacheUse(shape, df, before)))
     }
     val sink = new EventSink {
       override def getColumns(id: CollectionId) = None
@@ -144,15 +151,45 @@ class PlanHygieneSpec extends SparkSpec {
     runs.foreach { case (cfg, dedupBatch) =>
       AvroIngest.processBatch(records, registry, sink, cfg = cfg, dedupBatch = dedupBatch)
     }
-    frames.toArray.toSeq.map(_.asInstanceOf[(String, String, Boolean)])
+    frames.toArray.toSeq.map(_.asInstanceOf[AvroFrame])
   }
+
+  /** How a frame the Avro path built, or the session while it writes,
+    * uses Spark SQL's cache; empty when it does not. The one cached plan
+    * allowed is a cohort frame's own, which the write planner persists to
+    * count it before the sink writes it.
+    */
+  private def sqlCacheUse(shape: String, df: org.apache.spark.sql.DataFrame,
+                          before: Int): Seq[String] = {
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val own = if (shape == "cohort" && SqlCacheProbe.holds(spark, df)) 1 else 0
+    val entries = SqlCacheProbe.entries(spark) - before - own
+    val analyzed = df.queryExecution.analyzed
+    // the RDDs under the frame as built (below a cohort's own cache)
+    val lineage = analyzed.collect { case r: LogicalRDD => rdds(r.rdd) }.flatten
+    Seq(
+      Option.when(entries != 0)(s"$entries other cached plan(s) while the batch writes"),
+      Option.when(analyzed.exists(_.isInstanceOf[InMemoryRelation]))("an InMemoryRelation in the plan"),
+      Option.when(analyzed.toString.contains("SerializeFromObject"))("a SerializeFromObject in the plan")
+    ).flatten ++ lineage.collect {
+      // a persisted RDD other than the routed buckets: Spark SQL's cached
+      // columnar batches (named after the plan they cache)
+      case r if r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE &&
+          r.name != graft.ingest.AvroIngest.RoutedName => s"a cached RDD in the lineage: ${r.name}"
+    }
+  }
+
+  /** `rdd` and every RDD in its lineage. */
+  private def rdds(rdd: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.rdd.RDD[_]] =
+    rdd +: rdd.dependencies.flatMap(d => rdds(d.rdd))
 
   test("avro decode frames: Catalyst rows off the wire, no object (de)serialization") {
     import graft.streaming.IngestConfig
     val frames = avroFrames(
       IngestConfig(consolidateThreshold = 0) -> false, IngestConfig(consolidateThreshold = 2) -> false)
-    assert(frames.map(_._1).toSet == Set("per collection", "cohort"))
-    frames.foreach { case (shape, p, _) =>
+    assert(frames.map(_.shape).toSet == Set("per collection", "cohort"))
+    frames.foreach { case AvroFrame(shape, p, _, _) =>
       // an external-Row decode (mapPartitions under Encoders.row) plans as
       // DeserializeToObject → MapPartitions → SerializeFromObject
       assert(!p.contains("SerializeFromObject") && !p.contains("DeserializeToObject"),
@@ -160,11 +197,25 @@ class PlanHygieneSpec extends SparkSpec {
     }
   }
 
+  test("avro frames read the routed buckets, not Spark SQL's columnar cache") {
+    import graft.streaming.IngestConfig
+    val frames = avroFrames(IngestConfig(consolidateThreshold = 0) -> false,
+      IngestConfig(consolidateThreshold = 2) -> false, IngestConfig() -> true)
+    assert(frames.map(_.shape).toSet == Set("per collection", "cohort"))
+    frames.foreach { f =>
+      // the routed batch used to be a typed-tuple pass persisted as a
+      // DataFrame, re-scanned and re-filtered by every frame
+      assert(f.problems.isEmpty, s"${f.shape} avro frame: ${f.problems.mkString("; ")}\n${f.plan}")
+      if (f.shape != "cohort")
+        assert(!f.plan.contains("InMemory"), s"${f.shape} avro frame scans a cache:\n${f.plan}")
+    }
+  }
+
   test("avro dedupBatch frame: no local checkpoint, no sort aggregate") {
     import graft.streaming.IngestConfig
     val frames = avroFrames(IngestConfig() -> true)
     assert(frames.nonEmpty)
-    frames.foreach { case (_, p, cp) =>
+    frames.foreach { case AvroFrame(_, p, cp, _) =>
       // the checkpoint pinned the input order of a row-position uid
       assert(!cp, s"the dedup frame reads a checkpoint:\n$p")
       assert(!p.contains("SortAggregate"), s"the dedup frame sorts:\n$p")

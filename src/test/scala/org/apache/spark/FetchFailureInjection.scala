@@ -16,8 +16,7 @@ import scala.reflect.ClassTag
   */
 object FetchFailureInjection {
   def failFirstAttempt[T: ClassTag](rdd: RDD[T]): RDD[T] = {
-    val shuffleId = nearestShuffle(rdd).getOrElse(
-      throw new IllegalArgumentException(s"no shuffle in the lineage of $rdd")).shuffleId
+    val shuffleId = shuffleOf(rdd)
     rdd.mapPartitionsWithIndex { (partition, rows) =>
       if (partition != 0 || TaskContext.get().stageAttemptNumber() > 0) rows
       else {
@@ -29,6 +28,10 @@ object FetchFailureInjection {
       }
     }
   }
+
+  /** The id of the shuffle whose map outputs [[failFirstAttempt]] drops. */
+  def shuffleOf(rdd: RDD[_]): Int = nearestShuffle(rdd).getOrElse(
+    throw new IllegalArgumentException(s"no shuffle in the lineage of $rdd")).shuffleId
 
   private def nearestShuffle(rdd: RDD[_]): Option[ShuffleDependency[_, _, _]] =
     rdd.dependencies.collectFirst { case s: ShuffleDependency[_, _, _] => s }
