@@ -32,7 +32,7 @@ object Bench {
     "agg_approx_sketch",
     "mm_features",
     "doc_pipeline_kept",    // composed clean funnel (lang+quality+dedup)
-    "d2_rakam_ingest",      // rakam-dialect schema-fixed ingest
+    "d2_rakam_ingest",      // rakam-dialect declared-schema ingest
     "text_chunks",          // token-window chunking
     "decontam_hits",        // probe-gram contamination join
     "q11_retention",        // cohort retention

@@ -299,7 +299,7 @@ object SparkEntry {
   /** Full JSON ingest of the events wire stream → per-collection frames. */
   private def ingested(s: SparkSession, dir: String): Map[CollectionId, DataFrame] = {
     val registry = new EventSchema.Registry()
-    val (_, parsed) = JsonIngest.ingestLazy(eventsAsFabricJson(s, dir), registry)
+    val (_, parsed) = JsonIngest.ingest(eventsAsFabricJson(s, dir), registry)
     parsed
   }
 
@@ -456,7 +456,7 @@ object SparkEntry {
                           "yyyy-MM-dd'T'HH:mm:ss"), lit("\""))),
           lit("null")),
         lit("}}")).as("value")).as(Encoders.STRING)
-      // Schema-fixed parse against a metastore-declared TIMESTAMP column —
+      // Declared-schema parse against a metastore-declared TIMESTAMP column —
       // the reference's shape: column types never change once created
       // (MetadataDao.java:114-133), so a Rakam client sending a numeric
       // into `seen_at` nulls that value rather than retyping the column.
@@ -470,11 +470,11 @@ object SparkEntry {
       // passes + a distinct-collect of the collection universe, then a
       // full recompute when the caller materializes the returned frame)
       // collapses to a single cohort parse pass (guide §1.2 step 1).
-      // withRouting already validated + normalized every collection name
+      // decouple already validated + normalized every collection name
       // with the same CollectionId.isValid/normalize the old loop applied
       // driver-side, and parseAllRouted's per-record semantics are exactly
       // parseCollection's — same parseEvent, same schema.
-      val routed = JsonIngest.withRouting(wire, JsonDialect.Rakam)
+      val routed = EventOps.decouple(wire, JsonDialect.Rakam)
         .filter($"_project".isNotNull)
       JsonIngest.parseAllRouted(routed, schema, JsonDialect.Rakam)
         .groupBy($"_collection".as("collection")).agg(
@@ -530,7 +530,7 @@ object SparkEntry {
               pmod($"event_id", lit(100000L))).cast("binary")),
             lit("\""))),
         lit("}}")).as("value")).as(Encoders.STRING)
-      // schema-fixed parse against metastore-DECLARED column types (the
+      // declared-schema parse against metastore-DECLARED column types (the
       // d2 pattern): inference would type the JSON string values as
       // STRING; a pre-created DECIMAL/BINARY column coerces instead
       val id = CollectionId("demo", "dbin")
@@ -542,7 +542,7 @@ object SparkEntry {
       // parse → parquet write below), so caching it only paid a full
       // cache-build pass for zero reuse — wire → route → parse → write
       // now fuses into one codegen'd pass (guide §5: cache only on reuse)
-      val routed = JsonIngest.withRouting(wire, JsonDialect.Fabric)
+      val routed = EventOps.decouple(wire, JsonDialect.Fabric)
         .filter($"_project".isNotNull)
       val parsed = JsonIngest.parseCollection(routed, id, schema,
         JsonDialect.Fabric)
@@ -644,7 +644,7 @@ object SparkEntry {
       val maxDay = dec.agg(max(to_date($"_time"))).head().getDate(0)
       val split = EventOps.daySplit(dec, $"_time", today = lit(maxDay))
       val registry = new EventSchema.Registry()
-      val (routed, parsed) = JsonIngest.ingestLazy(
+      val (routed, parsed) = JsonIngest.ingest(
         split.realTime.select("value").as(Encoders.STRING), registry)
       val base = java.nio.file.Files.createTempDirectory("graft_e2e").toString
       val sink = new ColumnarSink(base)

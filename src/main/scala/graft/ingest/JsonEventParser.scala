@@ -185,57 +185,18 @@ object JsonEventParser {
         }
     }
 
-  /** Cheap routing extract: streams tokens and early-exits once project and
-    * collection are both seen (the reference's two-phase parse pattern —
-    * TokenBuffer routing pre-pass / DecoupleMessage,
-    * FabricJsonDeserializer.java:105-179, KafkaDecoupleMessage.java:46-114).
-    * Unlike [[parseEnvelope]] this never materializes property values.
-    */
-  def routing(json: String, dialect: JsonDialect): Option[CollectionId] =
-    try {
-      val p = factory.createParser(json)
-      try {
-        if (p.nextToken() != JsonToken.START_OBJECT) return None
-        val (projField, collField, scope) = dialect match {
-          case JsonDialect.Fabric => ("_project", "_collection", "data")
-          case JsonDialect.Rakam  => ("project", "collection", null)
-        }
-        var proj: String = null
-        var coll: String = null
-        def scan(): Unit = {
-          while (p.nextToken() != JsonToken.END_OBJECT) {
-            val name = p.currentName()
-            p.nextToken()
-            if (name == projField && p.currentToken() == JsonToken.VALUE_STRING) proj = p.getText
-            else if (name == collField && p.currentToken() == JsonToken.VALUE_STRING) coll = p.getText
-            else if (scope != null && name == scope && p.currentToken() == JsonToken.START_OBJECT) {
-              scan(); if (proj != null && coll != null) return
-            }
-            else p.skipChildren()
-            if (proj != null && coll != null) return
-          }
-        }
-        if (scope == null) scan()
-        else {
-          // routing fields live inside the scope object; walk top level for it
-          while (p.nextToken() != JsonToken.END_OBJECT && (proj == null || coll == null)) {
-            val name = p.currentName()
-            p.nextToken()
-            if (name == scope && p.currentToken() == JsonToken.START_OBJECT) scan()
-            else p.skipChildren()
-          }
-        }
-        if (proj != null && coll != null && CollectionId.isValid(proj, coll))
-          Some(CollectionId.normalize(proj, coll))
-        else None
-      } finally p.close()
-    } catch { case _: Exception => None }
-
   /** Pre-parse extraction of (routing, event-time) only — the reference's
-    * DecoupleMessage (KafkaDecoupleMessage.java:46-114): streams tokens,
-    * `skipChildren()` on everything else, early-exits once all three fields
-    * are seen. Time is returned as epoch millis (numeric value passed
-    * through; string value sniffed with [[parseTimestamp]]).
+    * DecoupleMessage (KafkaDecoupleMessage.java:46-114) and the engine's one
+    * JSON routing scan: streams tokens, `skipChildren()` on everything else,
+    * early-exits once routing and `_time` are known. Time is returned as
+    * epoch millis (numeric value passed through; string value sniffed with
+    * [[parseTimestamp]]).
+    *
+    * Routes exactly as [[parseEnvelope]] does, so a record is inferred,
+    * counted and parsed under the collection it was routed to: the first
+    * occurrence of each key wins (`data`/`properties`, `_project`/
+    * `_collection`, `_time`), and Rakam routing is read at the top level
+    * only — a `project` property never re-routes an event.
     */
   def decouple(json: String, dialect: JsonDialect, names: FieldNames)
       : Option[(CollectionId, Option[Long])] =
@@ -243,49 +204,51 @@ object JsonEventParser {
       val p = factory.createParser(json)
       try {
         if (p.nextToken() != JsonToken.START_OBJECT) return None
-        val (projField, collField, propsScope) = dialect match {
-          case JsonDialect.Fabric => ("_project", "_collection", "data")
-          case JsonDialect.Rakam  => ("project", "collection", "properties")
-        }
-        var proj: String = null; var coll: String = null
+        val fabric = dialect == JsonDialect.Fabric
+        val (projField, collField, propsField) =
+          if (fabric) ("_project", "_collection", "data")
+          else ("project", "collection", "properties")
+        var proj: String = null; var projSeen = false
+        var coll: String = null; var collSeen = false
         var time: Option[Long] = None; var timeSeen = false
-        def inProps(): Unit = {
-          while (p.nextToken() != JsonToken.END_OBJECT) {
+        var propsSeen = false
+        def routed = projSeen && collSeen
+        def string(): String =
+          if (p.currentToken() == JsonToken.VALUE_STRING) p.getText
+          else { p.skipChildren(); null }
+        // consumes a routing key's value; false for any other key
+        def routingKey(name: String): Boolean = {
+          if (name == projField) {
+            if (projSeen) p.skipChildren() else { projSeen = true; proj = string() }
+          } else if (name == collField) {
+            if (collSeen) p.skipChildren() else { collSeen = true; coll = string() }
+          }
+          name == projField || name == collField
+        }
+        // Fabric: everything lives inside `data`. Rakam: `_time` inside
+        // `properties`, routing at the top level.
+        def inProps(): Unit =
+          while (!(routed && timeSeen) && p.nextToken() != JsonToken.END_OBJECT) {
             val name = p.currentName(); p.nextToken()
-            if (name == projField && p.currentToken() == JsonToken.VALUE_STRING) proj = p.getText
-            else if (name == collField && p.currentToken() == JsonToken.VALUE_STRING) coll = p.getText
+            if (fabric && routingKey(name)) ()
             else if (name == names.timeField && !timeSeen) {
               timeSeen = true
-              p.currentToken() match {
-                case JsonToken.VALUE_NUMBER_INT => time = Some(p.getLongValue)
-                case JsonToken.VALUE_STRING => time = parseTimestamp(p.getText).map(_.getTime)
-                case _ => p.skipChildren()
+              time = p.currentToken() match {
+                case JsonToken.VALUE_NUMBER_INT =>
+                  try Some(p.getLongValue) catch { case _: Exception => None }
+                case JsonToken.VALUE_STRING => parseTimestamp(p.getText).map(_.getTime)
+                case _ => p.skipChildren(); None
               }
             } else p.skipChildren()
-            val needRouting = dialect == JsonDialect.Fabric
-            if ((!needRouting || (proj != null && coll != null)) && timeSeen) return
           }
-        }
-        dialect match {
-          case JsonDialect.Fabric =>
-            // everything lives inside `data`
-            var done = false
-            while (!done && p.nextToken() != JsonToken.END_OBJECT) {
-              val name = p.currentName(); p.nextToken()
-              if (name == propsScope && p.currentToken() == JsonToken.START_OBJECT) {
-                inProps(); done = true
-              } else p.skipChildren()
-            }
-          case JsonDialect.Rakam =>
-            // routing at top level, `_time` inside `properties`
-            while (p.nextToken() != JsonToken.END_OBJECT &&
-                   !(proj != null && coll != null && timeSeen)) {
-              val name = p.currentName(); p.nextToken()
-              if (name == projField && p.currentToken() == JsonToken.VALUE_STRING) proj = p.getText
-              else if (name == collField && p.currentToken() == JsonToken.VALUE_STRING) coll = p.getText
-              else if (name == propsScope && p.currentToken() == JsonToken.START_OBJECT) inProps()
-              else p.skipChildren()
-            }
+        def done = if (fabric) propsSeen else routed && (timeSeen || propsSeen)
+        while (!done && p.nextToken() != JsonToken.END_OBJECT) {
+          val name = p.currentName(); p.nextToken()
+          if (!fabric && routingKey(name)) ()
+          else if (name == propsField && !propsSeen) {
+            propsSeen = true
+            if (p.currentToken() == JsonToken.START_OBJECT) inProps() else p.skipChildren()
+          } else p.skipChildren()
         }
         if (proj != null && coll != null && CollectionId.isValid(proj, coll))
           Some((CollectionId.normalize(proj, coll), time))

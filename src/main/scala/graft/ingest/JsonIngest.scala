@@ -1,8 +1,9 @@
 package graft.ingest
 
+import graft.operators.EventOps
 import graft.schema.{CollectionId, EventSchema, FieldNames}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,45 +13,26 @@ import org.apache.spark.sql.types._
   * reference evolves schemas mid-batch (FabricJsonDeserializer.java:266-301).
   * The Spark-native resolution (SURVEY.md §7.3) is:
   *
-  *   pass 1  INFER  — one distributed sweep: per-partition type inference
-  *                    (tiny per-collection schemas cross the wire, never data),
-  *                    merged on the driver in partition order → deterministic
-  *                    authoritative order (existing-then-new, D9).
-  *   pass 2  PARSE  — per collection: filter on the pre-extracted routing
-  *                    columns (cheap; no JSON re-parse) then full-parse the
-  *                    matching rows against the now-fixed StructType.
+  *   route  — `EventOps.decouple`, the one JSON routing scan: each raw
+  *            record gains `_project`/`_collection`/`_time` columns
+  *            (null routing = malformed, dropped).
+  *   pass 1 INFER — one distributed sweep: per-partition type inference
+  *                  (tiny per-collection schemas cross the wire, never
+  *                  data), merged on the driver in partition order →
+  *                  deterministic authoritative order (existing-then-new,
+  *                  D9), then evolved into the registry ([[evolve]]).
+  *   pass 2 PARSE — per collection (or per same-schema cohort): filter on
+  *                  the routing columns (no JSON re-parse) then full-parse
+  *                  the matching rows against the now-fixed StructType.
   *
-  * The raw batch is cached between passes, so the full JSON parse runs at
-  * most twice per record regardless of collection count — the same two-phase
-  * shape the reference uses (routing pre-pass + full parse, SURVEY §4).
-  * Nothing here accumulates data on the driver: only schemas do.
+  * The routed batch is cached once between the passes (by [[ingest]], or
+  * by `IngestStream.processBatch` for the streaming path), so the full JSON
+  * parse runs at most twice per record regardless of collection count —
+  * the same two-phase shape the reference uses (routing pre-pass + full
+  * parse, SURVEY §4). Nothing here accumulates data on the driver: only
+  * schemas do.
   */
 object JsonIngest {
-
-  /** Routing pre-pass: `value` plus extracted `_project`/`_collection`
-    * columns (null = malformed / unroutable record, dropped downstream —
-    * record-skip semantics F3).
-    */
-  def withRouting(raw: Dataset[String], dialect: JsonDialect): DataFrame = {
-    val spark = raw.sparkSession
-    import spark.implicits._
-    raw.mapPartitions { it =>
-      it.map { json =>
-        JsonEventParser.routing(json, dialect) match {
-          case Some(id) => (json, id.project, id.collection)
-          case None     => (json, null.asInstanceOf[String], null.asInstanceOf[String])
-        }
-      }
-    }.toDF("value", "_project", "_collection")
-  }
-
-  /** Pass 1: infer per-collection schemas across the whole dataset.
-    * Returns observed schemas in deterministic first-seen order (partition
-    * index, then document order within the partition).
-    */
-  def inferSchemas(raw: Dataset[String], dialect: JsonDialect,
-                   names: FieldNames = FieldNames()): Map[CollectionId, StructType] =
-    inferSchemasWithCounts(raw, dialect, names)._1
 
   /** Pass 1 with per-collection row counts folded into the same sweep.
     * The streaming hot path needs both the observed schemas and the
@@ -101,8 +83,26 @@ object JsonIngest {
     (merged.toMap, counts.toMap)
   }
 
+  /** Pass 1 plus the registry step, shared by [[ingest]] and the streaming
+    * batch: the observed schemas of `routed` merged into `registry`
+    * (existing columns first in registered order, new columns appended —
+    * metastore semantics D8/D9). Returns each present collection's
+    * authoritative schema and its row count in `routed`.
+    */
+  def evolve(routed: DataFrame, registry: EventSchema.Registry,
+             dialect: JsonDialect, names: FieldNames)
+      : (Map[CollectionId, StructType], Map[CollectionId, Long]) = {
+    val (observed, counts) = inferSchemasWithCounts(
+      routed.select(col("value")).as(Encoders.STRING), dialect, names)
+    (observed.map { case (id, obs) =>
+      registry.getOrCreate(id)
+      id -> registry.addColumns(id, obs)
+    }, counts)
+  }
+
   /** Pass 2: parse the rows of one collection against its fixed schema.
-    * `routed` must be the output of [[withRouting]] (cached by [[ingest]]).
+    * `routed` holds `value`, `_project` and `_collection`, as
+    * `EventOps.decouple` emits them.
     */
   def parseCollection(routed: DataFrame, id: CollectionId, schema: StructType,
                       dialect: JsonDialect, names: FieldNames = FieldNames()): DataFrame = {
@@ -136,11 +136,11 @@ object JsonIngest {
       schema, dialect, names)
 
   /** [[parseCohort]] over EVERY routed row: when the whole batch shares
-    * one fixed schema, the member set is redundant — [[withRouting]] has
-    * already validated and normalized each row's collection
-    * (JsonEventParser.routing applies CollectionId.isValid + normalize),
-    * so filtering the cohort to "all valid collections" is a no-op. One
-    * scan, no membership broadcast, no per-collection loop.
+    * one fixed schema, the member set is redundant — `EventOps.decouple`
+    * has already validated and normalized each row's collection
+    * (CollectionId.isValid + normalize), so filtering the cohort to "all
+    * valid collections" is a no-op. One scan, no membership broadcast, no
+    * per-collection loop.
     */
   def parseAllRouted(routed: DataFrame, schema: StructType,
                      dialect: JsonDialect,
@@ -170,57 +170,22 @@ object JsonIngest {
       }(Encoders.row(outSchema))
   }
 
-  /** Full batch ingest: route → infer → evolve registry → per-collection
-    * parse. Registry order is authoritative (metastore semantics D8/D9):
-    * existing columns first in registered order, new columns appended.
+  /** Batch ingest: route → infer → evolve registry → per-collection
+    * parse. Registry order is authoritative (metastore semantics D8/D9).
+    * The parsed frames are lazy plans over the routed batch, which is
+    * returned too, cached: the caller unpersists it once the frames are
+    * consumed.
     */
   def ingest(raw: Dataset[String], registry: EventSchema.Registry,
              dialect: JsonDialect = JsonDialect.Fabric,
-             names: FieldNames = FieldNames()): Map[CollectionId, DataFrame] = {
-    val (routed, parsed) = ingestLazy(raw, registry, dialect, names)
-    // materialize off the shared cached batch; caller-visible DataFrames
-    // are checkpointed, so the cache is safe to unpersist lazily
-    try parsed.map { case (id, df) => id -> df.localCheckpoint(false) }
-    finally routed.unpersist(false)
-  }
-
-  /** Schema-fixed fast path (the reference's fixed-schema mode: unknown
-    * collections are skipped rather than created,
-    * MessageEventTransformer.java:65-93): no inference job, no driver
-    * round-trip — one routing pass + one parse pass against the registry's
-    * authoritative schemas. Use when the stream's schemas are stable
-    * (`IngestConfig.schemaFixed`).
-    */
-  def ingestFixed(raw: Dataset[String], registry: EventSchema.Registry,
-                  dialect: JsonDialect = JsonDialect.Fabric,
-                  names: FieldNames = FieldNames())
+             names: FieldNames = FieldNames())
       : (DataFrame, Map[CollectionId, DataFrame]) = {
-    val routed = withRouting(raw, dialect)
+    val routed = EventOps.decouple(raw, dialect, names)
       .filter(col("_project").isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val parsed = registry.all.map { case (id, schema) =>
+    val (schemas, _) = evolve(routed, registry, dialect, names)
+    (routed, schemas.map { case (id, schema) =>
       id -> parseCollection(routed, id, schema, dialect, names)
-    }
-    (routed, parsed)
-  }
-
-  /** [[ingest]] with lazy plans (no checkpoint), returning also the routed
-    * cache handle so the caller controls unpersist timing (tests and the
-    * e2e query).
-    */
-  def ingestLazy(raw: Dataset[String], registry: EventSchema.Registry,
-                 dialect: JsonDialect = JsonDialect.Fabric,
-                 names: FieldNames = FieldNames())
-      : (DataFrame, Map[CollectionId, DataFrame]) = {
-    val routed = withRouting(raw, dialect)
-      .filter(col("_project").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val observed = inferSchemas(routed.select(col("value")).as(Encoders.STRING), dialect, names)
-    val parsed = observed.map { case (id, obs) =>
-      registry.getOrCreate(id)
-      val authoritative = registry.addColumns(id, obs)
-      id -> parseCollection(routed, id, authoritative, dialect, names)
-    }
-    (routed, parsed)
+    })
   }
 }

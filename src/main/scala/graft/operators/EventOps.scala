@@ -141,34 +141,37 @@ object EventOps {
     *  - the rest is historical (re-routed, not merged — F5)
     *
     * `timeCol` may be any timestamp column (pre-parse callers pass the
-    * cheaply-extracted event time, see [[Decouple]]). The histogram is one
-    * small aggregate over day indices (≤ thousands of distinct days), safe
-    * to collect.
+    * cheaply-extracted event time, see [[decouple]]). The histogram is one
+    * small aggregate over event days (≤ thousands of distinct days), safe
+    * to collect. `today` is evaluated once, by that histogram job, and both
+    * slices filter against the value it saw: every later job that reads a
+    * slice splits the batch the same way, even across midnight.
     */
   def daySplit(df: DataFrame, timeCol: Column,
                today: Column = current_date(),
                outdatedDayIndex: Int = 1,
                promoteMinRecords: Long = 1000,
                promoteMinFraction: Double = 0.25): DaySplit = {
-    val dayIdx = datediff(today, to_date(timeCol))
-    val tagged = df.withColumn("_day_idx", dayIdx)
-    val inWindow = col("_day_idx").between(0, outdatedDayIndex)
-
-    // histogram of ALL days in one job (tiny result — ≤ thousands of
-    // distinct days), split driver-side: the previous shape ran a second
-    // full pass just to count the in-window rows the first pass filtered
-    // out. Driver-side heuristic exactly like the reference's
-    // Int2ObjectArrayMap pass.
-    val hist = tagged
-      .groupBy(col("_day_idx")).count().collect()
-      .map(r => (if (r.isNullAt(0)) Int.MinValue else r.getInt(0)) -> r.getLong(1)).toMap
-    val total = hist.values.sum
-    val promoted = hist.collect {
-      case (day, cnt) if day != Int.MinValue &&
-        !(day >= 0 && day <= outdatedDayIndex) && // out-of-window days only
-        cnt > promoteMinRecords && total > 0 && cnt > promoteMinFraction * total => day
+    val day = unix_date(to_date(timeCol))
+    // histogram of ALL days in one job, split driver-side exactly like the
+    // reference's Int2ObjectArrayMap pass
+    val hist = df.select(day.as("_day"), unix_date(to_date(today)).as("_today"))
+      .groupBy(col("_day")).agg(count(lit(1)), max(col("_today"))).collect()
+    // `today` as the histogram job saw it; a slice that re-evaluated the
+    // column in a later job could see another day
+    val pinned = hist.collect { case r if !r.isNullAt(2) => r.getInt(2) }.reduceOption(_ max _)
+    val counts = hist.map { r =>
+      (if (r.isNullAt(0) || pinned.isEmpty) None else Some(pinned.get - r.getInt(0))) -> r.getLong(1)
+    }
+    val total = counts.map(_._2).sum
+    val promoted = counts.collect {
+      case (Some(idx), cnt) if !(idx >= 0 && idx <= outdatedDayIndex) && // out-of-window days only
+        cnt > promoteMinRecords && cnt > promoteMinFraction * total => idx
     }.toSet
 
+    val dayIdx = pinned.fold(lit(null).cast("int"))(t => lit(t) - day)
+    val tagged = df.withColumn("_day_idx", dayIdx)
+    val inWindow = col("_day_idx").between(0, outdatedDayIndex)
     val isRealTime =
       if (promoted.isEmpty) inWindow
       else inWindow || col("_day_idx").isin(promoted.toSeq: _*)
@@ -182,7 +185,9 @@ object EventOps {
     * kafka/KafkaDecoupleMessage.java:46-114): reads ONLY `_time` and the
     * routing fields from the raw JSON, so the split can re-route historical
     * records without ever fully parsing them. Emits the raw value plus
-    * `_project`/`_collection`/`_time` columns (nulls = malformed).
+    * `_project`/`_collection`/`_time` columns (nulls = malformed). The one
+    * JSON routing scan: the streaming batch, `JsonIngest.ingest` and the
+    * declared-schema queries all route through it.
     */
   def decouple(raw: Dataset[String], dialect: JsonDialect,
                names: FieldNames = FieldNames()): DataFrame = {

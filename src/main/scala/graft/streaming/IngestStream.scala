@@ -52,7 +52,6 @@ final case class IngestConfig(
     splitEnabled: Boolean = true,                 // false on the historical drain
     commitRetries: Int = 3,                       // C4, TargetConnectorCommitter.java:35-39
     commitRetryBaseMillis: Long = 1000,
-    schemaFixed: Boolean = false,                 // registry authoritative; skip inference
     writeParallelism: Int = 4,                    // B3 writer queues, S3DatabaseHandler:389-479
     availableNow: Boolean = false,                // drain-everything trigger (bench/backfill)
     consolidateThreshold: Int = 64)               // collections/batch above which same-schema
@@ -195,11 +194,16 @@ object IngestStream {
   }
 
   /** One micro-batch of the JSON pipeline — also the batch path for bulk
-    * loads. Decouple, day-split and infer here; the writes go through
+    * loads: decouple → whitelist → day-split → historical hand-off →
+    * infer/evolve (`JsonIngest.evolve`) → per-collection writes through
     * [[BatchWriter]] with JSON frame builders (`JsonIngest.parseCollection`
     * / `parseCohort` plus `_shard_time`) and the C7 dead-letter policy.
-    * Returns per-collection inserted row counts, dead-lettered collections
-    * included at 0.
+    *
+    * The decoupled batch is the one Spark SQL cache of the batch: the
+    * real-time slice, inference and every write read it through the
+    * split's filter, which is deterministic because `EventOps.daySplit`
+    * pins `today`. Returns per-collection inserted row counts,
+    * dead-lettered collections included at 0.
     */
   def processBatch(spark: SparkSession, raw: Dataset[String],
                    registry: EventSchema.Registry, sink: EventSink,
@@ -208,8 +212,6 @@ object IngestStream {
                    batchId: Long = -1L,
                    decoupledIn: Option[DataFrame] = None)
       : Map[graft.schema.CollectionId, Long] = {
-    import spark.implicits._
-
     // pre-parse decouple (D-split reads only _time/_collection, ref
     // KafkaDecoupleMessage) + whitelist. A caller that already decoupled
     // (the dedup query feeds routing columns through the state op) passes
@@ -233,41 +235,14 @@ object IngestStream {
         }
 
       // D1-D9: infer, evolve, parse the real-time slice; D10 + insert per
-      // table. The decouple pre-pass already extracted routing columns, so
-      // the inference pass reuses them instead of re-parsing. Schemas only
-      // at this point — per-collection DataFrames are constructed inside
-      // the write tasks: Dataset construction runs the ANALYZER eagerly,
-      // and building C plans up front on the driver serialized
-      // ~C × analysis-latency before the first write at high cardinality
-      // (measured: the dominant cost at C=1000).
+      // table. Schemas only at this point — per-collection DataFrames are
+      // constructed inside the write tasks: Dataset construction runs the
+      // ANALYZER eagerly, and building C plans up front on the driver
+      // serialized ~C × analysis-latency before the first write at high
+      // cardinality (measured: the dominant cost at C=1000).
       val routed = realTime.select("value", "_project", "_collection")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // inference mode folds the per-collection sizes into the same sweep
-      // (one job instead of two per trigger); schema-fixed mode has no
-      // inference pass, so sizes come from one tiny aggregation
-      val (batchSchemas, batchSizes): (Map[graft.schema.CollectionId,
-                                           org.apache.spark.sql.types.StructType],
-                                       Map[graft.schema.CollectionId, Long]) =
-        if (cfg.schemaFixed) {
-          val sizes = routed.groupBy(col("_project"), col("_collection")).count()
-            .collect()
-            .map(r => graft.schema.CollectionId(r.getString(0), r.getString(1)) ->
-              r.getLong(2)).toMap
-          // only collections PRESENT in this batch get a write job — with
-          // 10k registered, mostly-idle collections on a 15 s trigger the
-          // unfiltered registry would schedule 10k empty jobs (and grow an
-          // empty batch=N dir per collection per trigger); the Avro path
-          // filters the same way (AvroIngest.processBatch)
-          (registry.all.filter { case (id, _) => sizes.contains(id) }, sizes)
-        } else {
-          val (observed, counts) = JsonIngest.inferSchemasWithCounts(
-            routed.select(col("value")).as(Encoders.STRING),
-            cfg.dialect, cfg.names)
-          (observed.map { case (id, obs) =>
-            registry.getOrCreate(id)
-            id -> registry.addColumns(id, obs)
-          }, counts)
-        }
+      val (batchSchemas, batchSizes) =
+        JsonIngest.evolve(routed, registry, cfg.dialect, cfg.names)
       // C7 failure policy: dead-letter each affected collection's raw rows
       // and advance, or abort the batch
       def failAll(ids: Seq[graft.schema.CollectionId], e: Throwable)
@@ -288,19 +263,17 @@ object IngestStream {
           case None => throw e // abort the batch: offsets never commit
         }
 
-      try {
-        BatchWriter.write(batchSchemas, batchSizes, sink, cfg, batchId)(
-          single = (id, schema) => EventOps.withShardTime(
-            JsonIngest.parseCollection(routed, id, schema, cfg.dialect, cfg.names),
-            cfg.names),
-          // a cohort parses all member rows in ONE pass over the cached batch
-          cohort = (ids, schema) => EventOps.withShardTime(
-            JsonIngest.parseCohort(routed,
-              ids.map(id => (id.project, id.collection)).toSet,
-              schema, cfg.dialect, cfg.names),
-            cfg.names),
-          onFailure = failAll)
-      } finally routed.unpersist(false)
+      BatchWriter.write(batchSchemas, batchSizes, sink, cfg, batchId)(
+        single = (id, schema) => EventOps.withShardTime(
+          JsonIngest.parseCollection(routed, id, schema, cfg.dialect, cfg.names),
+          cfg.names),
+        // a cohort parses all member rows in ONE pass over the cached batch
+        cohort = (ids, schema) => EventOps.withShardTime(
+          JsonIngest.parseCohort(routed,
+            ids.map(id => (id.project, id.collection)).toSet,
+            schema, cfg.dialect, cfg.names),
+          cfg.names),
+        onFailure = failAll)
     } finally decoupled.unpersist(false)
   }
 

@@ -90,6 +90,28 @@ class EventOpsSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("daySplit pins today: a clock flip after the split neither loses nor duplicates a record") {
+    import spark.implicits._
+    def date(d: String) = java.sql.Date.valueOf(d)
+    // three records on each day around a two-day window that ends 03-10
+    val days = Seq("2024-03-08", "2024-03-09", "2024-03-10", "2024-03-11", "2024-03-12")
+    val df = days.flatMap(d => (1 to 3).map(i => (java.sql.Timestamp.valueOf(s"$d 12:00:00"), s"$d#$i")))
+      .toDF("_time", "id")
+    // `today` read off a clock the test moves, evaluated wherever Spark
+    // evaluates it
+    val today = udf(() => DaySplitClock.today).asNondeterministic()
+    DaySplitClock.today = date("2024-03-10")
+    val split = EventOps.daySplit(df, col("_time"), today = today())
+    // midnight passes before each slice's job
+    DaySplitClock.today = date("2024-03-11")
+    val realTime = split.realTime.select("id").as[String].collect().toSeq
+    DaySplitClock.today = date("2024-03-12")
+    val historical = split.historical.select("id").as[String].collect().toSeq
+    assert((realTime ++ historical).sorted == df.select("id").as[String].collect().toSeq.sorted,
+      s"realTime $realTime + historical $historical is not the input")
+    assert(realTime.map(_.take(10)).toSet == Set("2024-03-09", "2024-03-10"))
+  }
+
   test("dedupExact drops repeated (_user,_time) pairs; null keys all pass") {
     import spark.implicits._
     val t = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
@@ -169,4 +191,9 @@ class EventOpsSpec extends SparkSpec {
     assert(df.columns.contains("_shard_time"))
     assert(df.select("_shard_time").distinct().count() == 1)
   }
+}
+
+/** A wall clock the day-split test moves by hand. */
+object DaySplitClock {
+  @volatile var today: java.sql.Date = java.sql.Date.valueOf("2024-03-10")
 }

@@ -44,9 +44,9 @@ class JsonEventParserSpec extends AnyFunSuite {
   }
 
   test("routing names are path segments: separators/traversal/reserved skip the record") {
-    def route(proj: String, coll: String) = JsonEventParser.routing(
+    def route(proj: String, coll: String) = JsonEventParser.decouple(
       s"""{"data":{"_project":"$proj","_collection":"$coll","v":1}}""",
-      JsonDialect.Fabric)
+      JsonDialect.Fabric, names)
     assert(route("demo", "clicks").isDefined)
     // each of these would land bytes outside basePath/<project>/<collection>
     // (or inside the reserved '_'-prefixed control dirs) if allowed through
@@ -221,23 +221,6 @@ class JsonIngestSpec extends SparkSpec {
     assert(rows.length == 5 && rows.map(_.getAs[Long]("n")).sum == 1000)
   }
 
-  test("schema-fixed fast path: parses known collections, skips unknown") {
-    import spark.implicits._
-    import org.apache.spark.sql.types._
-    val registry = new EventSchema.Registry()
-    registry.put(CollectionId("p", "known"), StructType(Seq(
-      StructField("_time", TimestampType), StructField("x", DoubleType))))
-    val raw = Seq(
-      """{"data":{"_project":"p","_collection":"known","_time":1700000000000,"x":1}}""",
-      """{"data":{"_project":"p","_collection":"unknown","_time":1700000000000}}"""
-    ).toDS()
-    val (routed, parsed) = JsonIngest.ingestFixed(raw, registry)
-    try {
-      assert(parsed.keySet == Set(CollectionId("p", "known"))) // unknown skipped
-      assert(parsed.values.head.count() == 1)
-      assert(parsed.values.head.schema.fieldNames.toSeq == Seq("_time", "x"))
-    } finally routed.unpersist()
-  }
   test("distributed ingest: routing, inference merge, evolution, parse") {
     import spark.implicits._
     val raw = Seq(
@@ -248,16 +231,18 @@ class JsonIngestSpec extends SparkSpec {
       """{"data":{"_project":"p"}}"""
     ).toDS().repartition(2)
     val registry = new EventSchema.Registry()
-    val out = JsonIngest.ingest(raw, registry, JsonDialect.Fabric)
-    assert(out.keySet == Set(CollectionId("p", "a"), CollectionId("p", "b")))
-    val a = out(CollectionId("p", "a"))
-    // default columns first (registry order), then observed fields
-    assert(a.schema.fieldNames.take(2).toSeq == Seq("_time", "_user"))
-    assert(a.schema("x").dataType == DoubleType)
-    assert(a.count() == 2)
-    assert(a.where($"newcol".isNotNull).count() == 1) // null-filled for row 1
-    val b = out(CollectionId("p", "b"))
-    assert(b.schema("flag").dataType == BooleanType)
-    assert(b.count() == 1)
+    val (routed, out) = JsonIngest.ingest(raw, registry, JsonDialect.Fabric)
+    try {
+      assert(out.keySet == Set(CollectionId("p", "a"), CollectionId("p", "b")))
+      val a = out(CollectionId("p", "a"))
+      // default columns first (registry order), then observed fields
+      assert(a.schema.fieldNames.take(2).toSeq == Seq("_time", "_user"))
+      assert(a.schema("x").dataType == DoubleType)
+      assert(a.count() == 2)
+      assert(a.where($"newcol".isNotNull).count() == 1) // null-filled for row 1
+      val b = out(CollectionId("p", "b"))
+      assert(b.schema("flag").dataType == BooleanType)
+      assert(b.count() == 1)
+    } finally routed.unpersist()
   }
 }

@@ -222,6 +222,26 @@ class PipelineParitySpec extends SparkSpec {
       assert(flush.meanMillis >= 0.0)
     } finally spark.streams.removeListener(listener)
   }
+
+  test("processBatch: a Rakam `project` property never moves an event into another project") {
+    import spark.implicits._
+    val now = System.currentTimeMillis()
+    def rakam(proj: String, props: String) =
+      s"""{"project":"$proj","collection":"c","properties":{$props"_time":$now}}"""
+    val raw = Seq(rakam("p", """"project":"evil","x":1,"""), rakam("evil", """"y":2,""")).toDS()
+    val registry = new EventSchema.Registry()
+    val sink = new MemorySink
+    val counts = IngestStream.processBatch(spark, raw, registry, sink, None,
+      IngestConfig(dialect = JsonDialect.Rakam))
+    val (p, evil) = (CollectionId("p", "c"), CollectionId("evil", "c"))
+    assert(counts == Map(p -> 1L, evil -> 1L))
+    assert(sink.rows(p) == 1 && sink.rows(evil) == 1)
+    // `project` is a data column of p/c, not a routing key
+    assert(sink.inserted.get(p).head.select("project", "x").collect().toSeq ==
+      Seq(org.apache.spark.sql.Row("evil", 1.0)))
+    assert(sink.inserted.get(evil).head.select("y").collect().toSeq ==
+      Seq(org.apache.spark.sql.Row(2.0)))
+  }
 }
 
 class IngestRoundTripPropertySpec extends SparkSpec {
@@ -277,11 +297,57 @@ class IngestRoundTripPropertySpec extends SparkSpec {
       // record-skip semantics: malformed input yields None, never an
       // exception that would poison the partition
       for (d <- Seq(JsonDialect.Fabric, JsonDialect.Rakam)) {
-        JsonEventParser.routing(s, d)
         JsonEventParser.decouple(s, d, names)
         JsonEventParser.inferEvent(s, d, names)
       }
     }
+  }
+
+  test("property: decouple routes every record to parseEnvelope's collection") {
+    // duplicate keys, routing names shadowed inside the properties, a
+    // non-object envelope ahead of the real one, `_time` before and after
+    // the routing fields
+    val name = Gen.frequency(6 -> Gen.oneOf("\"p\"", "\"q\"", "\"evil\""),
+      1 -> Gen.oneOf("\"_bad\"", "\"a/b\"", "1", "null", "{\"x\":\"p\"}"))
+    val time = Gen.oneOf("1700000000000", "\"2024-01-02 03:04:05\"", "\"junk\"", "1.5",
+      "null", "99999999999999999999", "{\"t\":1}")
+    val shadow = Gen.oneOf("\"project\":\"evil\"", "\"collection\":\"evil\"",
+      "\"_project\":\"evil\"", "\"_collection\":\"evil\"", "\"x\":[1,{\"_collection\":\"evil\"}]",
+      "\"nested\":{\"_project\":\"evil\",\"project\":\"evil\",\"_time\":1}")
+    def obj(fields: Seq[String]): String = fields.mkString("{", ",", "}")
+    def keyed(k: String, g: Gen[String], min: Int): Gen[Seq[String]] =
+      Gen.choose(min, 2).flatMap(Gen.listOfN(_, g.map(v => s""""$k":$v""")))
+    def shuffled(xs: Seq[String]): Gen[Seq[String]] =
+      Gen.listOfN(xs.size, Gen.choose(0, Int.MaxValue)).map(ks => xs.zip(ks).sortBy(_._2).map(_._1))
+    val fabric = for {
+      p <- keyed("_project", name, 0); c <- keyed("_collection", name, 0)
+      t <- keyed("_time", time, 0); sh <- Gen.choose(0, 3).flatMap(Gen.listOfN(_, shadow))
+      data <- shuffled(p ++ c ++ t ++ sh)
+      before <- Gen.oneOf(Nil, Seq("\"data\":\"first\""), Seq("\"id\":\"e1\""))
+      after <- Gen.oneOf(Nil, Seq("\"metadata\":{}"),
+        Seq("\"data\":{\"_project\":\"evil\",\"_collection\":\"evil\"}"))
+    } yield JsonDialect.Fabric -> obj(before ++ Seq(s""""data":${obj(data)}""") ++ after)
+    val rakam = for {
+      p <- keyed("project", name, 1); c <- keyed("collection", name, 1)
+      t <- keyed("_time", time, 0); sh <- Gen.choose(0, 3).flatMap(Gen.listOfN(_, shadow))
+      props <- shuffled(t ++ sh)
+      envelopes <- Gen.oneOf(Seq(obj(props)), Seq("\"first\"", obj(props)),
+        Seq(obj(props), "{\"_time\":1}"))
+      api <- Gen.oneOf(Nil, Seq("\"api\":{}"))
+      top <- shuffled(p ++ c ++ envelopes.map(e => s""""properties":$e""") ++ api)
+    } yield JsonDialect.Rakam -> obj(top)
+    val probes = Seq(
+      JsonDialect.Rakam -> """{"project":"p","collection":"c","properties":{"project":"evil","_time":1}}""",
+      JsonDialect.Fabric -> """{"data":{"_project":"p","_collection":"a","_collection":"b","_time":1}}""")
+    val routedCount = (probes ++ samples(Gen.oneOf(fabric, rakam), 400)).count { case (d, json) =>
+      val envelope = JsonEventParser.parseEnvelope(json, d).map(_._1)
+      envelope.foreach { id =>
+        assert(JsonEventParser.decouple(json, d, names).map(_._1).contains(id), s"$d: $json")
+      }
+      envelope.isDefined
+    }
+    // the property holds on routed records, so the generator must make many
+    assert(routedCount >= 100, s"only $routedCount generated records route")
   }
 
   test("property: arrays infer from first element and round-trip") {

@@ -222,6 +222,47 @@ class PlanHygieneSpec extends SparkSpec {
     }
   }
 
+  test("json processBatch: the decoupled batch is the one Spark SQL cache while it writes") {
+    import graft.schema.{CollectionId, EventSchema}
+    import graft.sinks.EventSink
+    import graft.streaming.{IngestConfig, IngestStream}
+    import org.apache.spark.sql.DataFrame
+    import spark.implicits._
+    val now = System.currentTimeMillis()
+    val raw = (0 until 8).map { i =>
+      val c = if (i % 2 == 0) "a" else "b"
+      s"""{"data":{"_project":"p","_collection":"$c","_time":$now,"_user":"u$i","x":$i}}"""
+    }.toDS()
+    // plans an earlier suite left cached in the shared session
+    val before = SqlCacheProbe.entries(spark)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    def write(shape: String, df: DataFrame): Unit = {
+      // a cohort frame's own cache is the write planner's, not the batch's
+      val own = if (shape == "cohort" && SqlCacheProbe.holds(spark, df)) 1 else 0
+      seen.add(shape -> (SqlCacheProbe.entries(spark) - before - own))
+      df.collect()
+    }
+    val sink = new EventSink {
+      override def getColumns(id: CollectionId) = None
+      override def insert(id: CollectionId, df: DataFrame): Unit = write("per collection", df)
+      override def supportsConsolidated: Boolean = true
+      override def insertConsolidated(rows: DataFrame, batchId: Long): Unit = write("cohort", rows)
+    }
+    Seq(0, 2).foreach { threshold =>
+      IngestStream.processBatch(spark, raw, new EventSchema.Registry(), sink, None,
+        IngestConfig(consolidateThreshold = threshold))
+    }
+    val frames = seen.toArray.toSeq.map(_.asInstanceOf[(String, Int)])
+    assert(frames.map(_._1).toSet == Set("per collection", "cohort"))
+    frames.foreach { case (shape, batchCaches) =>
+      // a persisted real-time slice would be a second columnar cache of
+      // the same rows, built and rescanned every batch
+      assert(batchCaches == 1,
+        s"$shape write saw $batchCaches cached plans of the batch; want only the decoupled frame")
+    }
+    assert(SqlCacheProbe.entries(spark) == before, "the batch left a plan cached")
+  }
+
   test("decontamination probes broadcast; no shuffle of the corpus against itself") {
     val p = plan("decontam_hits")
     assert(p.contains("BroadcastHashJoin"), s"probe grams not broadcast:\n$p")
