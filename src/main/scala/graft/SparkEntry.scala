@@ -296,7 +296,8 @@ object SparkEntry {
       "recall_floor_bp", "recall_ok", "n_appended", "identical")
   }
 
-  /** Full JSON ingest of the events wire stream → per-collection frames. */
+  /** Full JSON ingest of the events wire stream → per-collection frames
+    * (their routed batch is freed with them, see `JsonIngest.ingest`). */
   private def ingested(s: SparkSession, dir: String): Map[CollectionId, DataFrame] = {
     val registry = new EventSchema.Registry()
     val (_, parsed) = JsonIngest.ingest(eventsAsFabricJson(s, dir), registry)
@@ -472,11 +473,11 @@ object SparkEntry {
       // collapses to a single cohort parse pass (guide §1.2 step 1).
       // decouple already validated + normalized every collection name
       // with the same CollectionId.isValid/normalize the old loop applied
-      // driver-side, and parseAllRouted's per-record semantics are exactly
-      // parseCollection's — same parseEvent, same schema.
+      // driver-side, and the one parse loop with no member filter keeps
+      // every routed row — same parseEvent, same schema.
       val routed = EventOps.decouple(wire, JsonDialect.Rakam)
         .filter($"_project".isNotNull)
-      JsonIngest.parseAllRouted(routed, schema, JsonDialect.Rakam)
+      JsonIngest.parse(routed, None, schema, JsonDialect.Rakam)
         .groupBy($"_collection".as("collection")).agg(
           count(lit(1)).as("n_events"),
           count($"seen_at").as("n_seen"),                     // numeric → null

@@ -1,6 +1,7 @@
 package graft.ingest
 
 import graft.schema.{CollectionId, FieldNames}
+import graft.streaming.BatchWriter
 import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.avro.io.{BinaryDecoder, Decoder, DecoderFactory}
@@ -8,7 +9,7 @@ import org.apache.avro.util.Utf8
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{SpecificInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, SpecificInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, DateTimeUtils, GenericArrayData}
 import org.apache.spark.sql.graftshim.DataFrameBridge
 import org.apache.spark.sql.types._
@@ -34,10 +35,11 @@ import scala.jdk.CollectionConverters._
   * Catalyst rows puts each record's payload bytes into a per-partition
   * bucket for its collection — the reference's per-table buffers
   * (`MiddlewareBuffer.java:34-54`) — and the buckets are kept as a plain
-  * RDD, outside Spark SQL's columnar cache. Each write's frame decodes
-  * only its own buckets; the decoder writes Catalyst values into a reused
-  * internal row, and the inline, cohort and bulk frames wrap its output
-  * RDD as a DataFrame (`DataFrameBridge.ofRows`), so no external `Row`,
+  * RDD, outside Spark SQL's columnar cache. One frame builder serves every
+  * write, a collection being a cohort of one: it decodes only its members'
+  * buckets, the decoder writes Catalyst values into a reused internal row,
+  * and the frame (like the bulk expansion's) wraps its output RDD as a
+  * DataFrame (`DataFrameBridge.ofRows`), so no external `Row`,
   * `Encoders.row` serializer or typed tuple pass sits on the batch path.
   * The Row-returning API ([[decodeRecord]], [[decodeTagged]],
   * [[readBulkObject]]) converts the same decoder's rows.
@@ -164,7 +166,7 @@ object AvroIngest {
     * rows must copy them through an `UnsafeProjection`.
     *
     * @param routing appends the `_project`/`_collection` columns of a
-    *                cohort frame, set through [[route]]
+    *                batch frame, set through [[route]]
     */
   final class CatalystDecoder(rowSchema: StructType,
                               names: FieldNames = FieldNames(),
@@ -225,7 +227,7 @@ object AvroIngest {
       }
     }
 
-    /** Sets the routing columns of a cohort row. */
+    /** Sets the routing columns of a batch frame's row. */
     def route(project: UTF8String, collection: UTF8String): Unit = {
       row.update(width, project)
       row.update(width + 1, collection)
@@ -405,7 +407,8 @@ object AvroIngest {
     * schema-fixed — the wire format carries no field names), group by
     * collection, and write through [[graft.streaming.BatchWriter]], the
     * planner the JSON `IngestStream.processBatch` uses too. This function
-    * supplies only the Avro frame builders; a failed write aborts the batch.
+    * supplies only the one Avro frame builder; a failed write aborts the
+    * batch.
     *
     * One routing pass ([[route]]) reads the source's Catalyst rows once and
     * turns each source partition into one map of buckets, collection →
@@ -416,17 +419,19 @@ object AvroIngest {
     * per-collection counts the planner needs, with no shuffle. Absent
     * collections then run no job at all.
     *
-    * Each frame reads only its own buckets: a per-collection frame takes
-    * its collection's bucket of every cached partition, a cohort frame its
-    * members' buckets, the bulk expansion the marker bucket. So a frame
-    * decodes O(its own rows), not O(batch), which matters at the
-    * reference's 100-collection stress shape
+    * Each frame reads only its own buckets: the frame of a member set (one
+    * collection, or a same-schema cohort) takes those members' buckets of
+    * every cached partition, in one decode loop; the bulk expansion takes
+    * the marker bucket. So a frame decodes O(its own rows), not O(batch),
+    * which matters at the reference's 100-collection stress shape
     * (t/io/rakam/presto/KafkaStressTest.java:107-137), where `dedupBatch`
     * keeps every collection on the per-collection path. A frame is its
-    * payloads mapped through a per-task [[CatalystDecoder]] and wrapped
-    * back into a DataFrame: its plan is a scan of the decoded rows, and
-    * the decode runs lazily inside the frame's write job, the record body
-    * decoded exactly once. Undecodable records are skipped (F3).
+    * payloads mapped through a per-task [[CatalystDecoder]], each row
+    * tagged with its `_project`/`_collection`, and wrapped back into a
+    * DataFrame: its plan is a scan of the decoded rows, and the decode runs
+    * lazily inside the frame's write job, the record body decoded exactly
+    * once. A partition holding none of the members builds no decoder.
+    * Undecodable records are skipped (F3).
     *
     * Memory: each routed payload is held once, as the byte array the
     * source row carried (no key, no per-row routing columns); a partition
@@ -467,63 +472,49 @@ object AvroIngest {
         .groupMapReduce(_._1)(_._2)(_ + _)
         .partition(_._1 == BulkKey)
 
-      def decodeSingle(id: CollectionId, rowSchema: StructType): DataFrame = {
-        val avroJson = schemaPairs(id)._1
-        val rows = routed.mapPartitions { parts =>
-          val payloads = parts.flatMap(_.get(id).fold(Iterator.empty[Array[Byte]])(_.iterator))
-          if (!payloads.hasNext) Iterator.empty
+      /** The one Avro frame builder: every member's rows decoded in one
+        * pass over its buckets, each record against its OWN collection's
+        * reader schema (cohort members share the StructType but keep their
+        * record names), tagged with its routing columns. A partition that
+        * holds none of the members builds no decoder.
+        */
+      def decode(ids: Seq[CollectionId], rowSchema: StructType): DataFrame = {
+        val members = ids.map(id => id -> schemaPairs(id)._1)
+        val rows = routed.mapPartitions(_.flatMap { buckets =>
+          val held = members.filter { case (id, _) => buckets.contains(id) }
+          if (held.isEmpty) Iterator.empty
           else {
-            // the avro schema parses once per partition, not per record
-            val dec = new CatalystDecoder(rowSchema, names)
-            val reader = new Schema.Parser().parse(avroJson)
-            decodeEach(payloads)(dec.reader(reader, reader).decodeInline)
+            val dec = new CatalystDecoder(rowSchema, names, routing = true)
+            held.iterator.flatMap { case (id, avroJson) =>
+              // the avro schema parses once per member a partition holds
+              val reader = new Schema.Parser().parse(avroJson)
+              val r = dec.reader(reader, reader)
+              val (p, c) = (UTF8String.fromString(id.project), UTF8String.fromString(id.collection))
+              decodeEach(buckets(id).iterator) { payload =>
+                val out = r.decodeInline(payload)
+                dec.route(p, c)
+                out
+              }
+            }
           }
-        }
-        val decoded = DataFrameBridge.ofRows(spark, rows, rowSchema)
+        })
+        val decoded = DataFrameBridge.ofRows(spark, rows, BatchWriter.withRouting(rowSchema))
         // F2 per-batch duplicate drop on (user, time) — the reference's
-        // AvroDuplicateHandler runs on the DECODED record (null keys pass)
+        // AvroDuplicateHandler runs on the DECODED record (null keys pass);
+        // dedupBatch keeps frames to one collection, so the routing
+        // columns are constant here
         if (dedupBatch && rowSchema.fieldNames.contains(names.userField) &&
             rowSchema.fieldNames.contains(names.timeField))
           graft.operators.EventOps.dedupExact(decoded, names)
         else decoded
       }
 
-      /** Same-schema cohort: decode every member's rows in ONE pass (each
-        * record still resolves against its OWN collection's reader schema —
-        * members share the StructType but keep their record names).
-        */
-      def decodeCohort(ids: Seq[CollectionId], rowSchema: StructType): DataFrame = {
-        val members = ids.map(id => id -> schemaPairs(id)._1)
-        val outSchema = StructType(rowSchema.fields ++ Seq(
-          StructField("_project", StringType, nullable = false),
-          StructField("_collection", StringType, nullable = false)))
-        val rows = routed.mapPartitions { parts =>
-          val dec = new CatalystDecoder(rowSchema, names, routing = true)
-          for {
-            buckets <- parts
-            (id, avroJson) <- members.iterator
-            payloads <- buckets.get(id).iterator
-            // one reader per member a partition holds
-            reader = new Schema.Parser().parse(avroJson)
-            (r, p, c) = (dec.reader(reader, reader), UTF8String.fromString(id.project),
-              UTF8String.fromString(id.collection))
-            row <- decodeEach(payloads.iterator) { payload =>
-              val out = r.decodeInline(payload)
-              dec.route(p, c)
-              out
-            }
-          } yield row
-        }
-        DataFrameBridge.ofRows(spark, rows, outSchema)
-      }
-
       // dedupBatch keeps every collection on the per-collection path: its
       // (user, time) dedup key must never span collections
-      val inline: Map[CollectionId, Long] = graft.streaming.BatchWriter.write(
+      val inline: Map[CollectionId, Long] = BatchWriter.write(
         schemas.filter { case (id, _) => present.contains(id) }, present,
         sink, cfg, batchId, cohorts = !dedupBatch)(
-        single = decodeSingle, cohort = decodeCohort,
-        onFailure = (_, e) => throw e)
+        rows = decode, onFailure = (_, e) => throw e)
         .filter { case (_, n) => n > 0 }
 
       bulkFetch match {
@@ -706,11 +697,18 @@ object AvroIngest {
         }
       }.collect().groupBy(_._2)
 
-      def decodeSingle(id: CollectionId, rowSchema: StructType): DataFrame = {
-        val ptrs = membership(id).map(_._1).toSet
+      // the members' records of the objects that hold them, each row
+      // projected with its collection's routing columns
+      def decode(ids: Seq[CollectionId], rowSchema: StructType): DataFrame = {
+        val ptrs = ids.flatMap(membership(_).map(_._1)).toSet
+        val fields = rowSchema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+          BoundReference(i, f.dataType, f.nullable)
+        }
         val rows = fetched.queryExecution.toRdd.mapPartitions { it =>
           val frames = new BulkReaders(schemaFor, names)
-          val project = UnsafeProjection.create(rowSchema)
+          val project = ids.map(id => id -> UnsafeProjection.create(fields ++ Seq(
+            Literal(UTF8String.fromString(id.project), StringType),
+            Literal(UTF8String.fromString(id.collection), StringType)))).toMap
           it.flatMap { row =>
             if (!ptrs.contains(row.getString(0))) Nil
             else {
@@ -718,22 +716,21 @@ object AvroIngest {
               // drops the object's rows, never half of them
               val out = mutable.ArrayBuffer.empty[InternalRow]
               try {
-                walkBulk(row.getBinary(1), frames, _ == id)((_, r) => out += project(r).copy())
+                walkBulk(row.getBinary(1), frames, project.contains)((id, r) =>
+                  out += project(id)(r).copy())
                 out
               } catch { case _: Exception => Nil }
             }
           }
         }
-        DataFrameBridge.ofRows(spark, rows, rowSchema)
+        DataFrameBridge.ofRows(spark, rows, BatchWriter.withRouting(rowSchema))
       }
 
-      graft.streaming.BatchWriter.write(
+      BatchWriter.write(
         membership.map { case (id, _) => id -> schemaPairs(id)._2 },
         membership.map { case (id, objects) => id -> objects.map(_._3).sum },
         sink, cfg, batchId, cohorts = false)(
-        single = decodeSingle,
-        cohort = (_, _) => throw new IllegalStateException("bulk writes never form cohorts"),
-        onFailure = (_, e) => throw e)
+        rows = decode, onFailure = (_, e) => throw e)
         .filter { case (_, n) => n > 0 }
     } finally fetched.unpersist(false)
   }

@@ -2,8 +2,10 @@ package graft.ingest
 
 import graft.operators.EventOps
 import graft.schema.{CollectionId, EventSchema, FieldNames}
-import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graftshim.DataFrameBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -21,9 +23,11 @@ import org.apache.spark.sql.types._
   *                  data), merged on the driver in partition order →
   *                  deterministic authoritative order (existing-then-new,
   *                  D9), then evolved into the registry ([[evolve]]).
-  *   pass 2 PARSE — per collection (or per same-schema cohort): filter on
-  *                  the routing columns (no JSON re-parse) then full-parse
-  *                  the matching rows against the now-fixed StructType.
+  *   pass 2 PARSE — one loop ([[parse]]) for any member set: one
+  *                  collection, a same-schema cohort or every routed row.
+  *                  It filters on the routing columns (no JSON re-parse),
+  *                  then full-parses the matching rows against the
+  *                  now-fixed StructType.
   *
   * The routed batch is cached once between the passes (by [[ingest]], or
   * by `IngestStream.processBatch` for the streaming path), so the full JSON
@@ -100,91 +104,71 @@ object JsonIngest {
     }, counts)
   }
 
-  /** Pass 2: parse the rows of one collection against its fixed schema.
-    * `routed` holds `value`, `_project` and `_collection`, as
-    * `EventOps.decouple` emits them.
+  /** Pass 2, the one JSON parse loop: the routed rows of `members` (every
+    * routed row when None) parsed against `schema` by
+    * `JsonEventParser.parseEvent`, each tagged with its `_project` and
+    * `_collection` — the frame `BatchWriter` writes, for one collection
+    * as for a same-schema cohort. `routed` holds `value`, `_project` and
+    * `_collection`, as `EventOps.decouple` emits them.
+    *
+    * Members are picked by a Catalyst predicate on the routing columns
+    * (per project, `_collection IN (...)`, which Spark plans as a hash-set
+    * probe past ten names and as an equality for one), so only member rows
+    * leave the scan of the cached batch and reach the parser: one pass for
+    * C collections. Rows with no routing (malformed, see `decouple`) never
+    * parse.
     */
-  def parseCollection(routed: DataFrame, id: CollectionId, schema: StructType,
-                      dialect: JsonDialect, names: FieldNames = FieldNames()): DataFrame = {
+  def parse(routed: DataFrame, members: Option[Seq[CollectionId]],
+            schema: StructType, dialect: JsonDialect,
+            names: FieldNames = FieldNames()): DataFrame = {
     val spark = routed.sparkSession
     import spark.implicits._
-    val subset = routed
-      .filter($"_project" === id.project && $"_collection" === id.collection)
-      .select($"value").as[String]
-    val enc = Encoders.row(schema)
-    subset.mapPartitions { it =>
-      it.flatMap { json =>
-        JsonEventParser.parseEvent(json, dialect, schema, names).map(_._2)
-      }
-    }(enc)
+    val routable = col("_project").isNotNull && col("_collection").isNotNull
+    val picked = members.fold(routable)(_.groupBy(_.project).map { case (p, ids) =>
+      col("_project") === p && col("_collection").isin(ids.map(_.collection): _*)
+    }.reduceOption(_ || _).getOrElse(lit(false)))
+    routed.filter(picked)
+      .select(col("value"), col("_project"), col("_collection")).as[(String, String, String)]
+      .mapPartitions(_.flatMap { case (json, p, c) =>
+        JsonEventParser.parseEvent(json, dialect, schema, names)
+          .map(t => Row.fromSeq(t._2.toSeq :+ p :+ c))
+      })(Encoders.row(graft.streaming.BatchWriter.withRouting(schema)))
   }
 
-  /** Pass-2 variant for a same-schema COHORT of collections: parse every
-    * member's rows against the shared fixed schema in one distributed pass,
-    * tagging each output row with its routing columns so one partitioned
-    * write can land the whole cohort (`EventSink.insertConsolidated`).
-    * Per-record semantics are exactly [[parseCollection]]'s (the same
-    * `JsonEventParser.parseEvent` call against the same authoritative
-    * schema) — only the job structure changes: ONE scan of the cached
-    * batch for C collections instead of C filtered scans, which is what
-    * keeps the driver off the critical path at 10k live collections.
-    */
+  /** [[parse]] of one collection, in its schema alone. */
+  def parseCollection(routed: DataFrame, id: CollectionId, schema: StructType,
+                      dialect: JsonDialect, names: FieldNames = FieldNames()): DataFrame =
+    parse(routed, Some(Seq(id)), schema, dialect, names).drop("_project", "_collection")
+
+  /** [[parse]] of a same-schema cohort, given as (project, collection). */
   def parseCohort(routed: DataFrame, members: Set[(String, String)],
                   schema: StructType, dialect: JsonDialect,
                   names: FieldNames = FieldNames()): DataFrame =
-    parseTagged(routed, Some(routed.sparkSession.sparkContext.broadcast(members)),
+    parse(routed, Some(members.toSeq.map { case (p, c) => CollectionId(p, c) }),
       schema, dialect, names)
-
-  /** [[parseCohort]] over EVERY routed row: when the whole batch shares
-    * one fixed schema, the member set is redundant — `EventOps.decouple`
-    * has already validated and normalized each row's collection
-    * (CollectionId.isValid + normalize), so filtering the cohort to "all
-    * valid collections" is a no-op. One scan, no membership broadcast, no
-    * per-collection loop.
-    */
-  def parseAllRouted(routed: DataFrame, schema: StructType,
-                     dialect: JsonDialect,
-                     names: FieldNames = FieldNames()): DataFrame =
-    parseTagged(routed, None, schema, dialect, names)
-
-  /** The per-row parse loop behind [[parseCohort]] and [[parseAllRouted]]:
-    * rows of `members` (every routed row when None) parsed against
-    * `schema`, tagged with their `_project`/`_collection`.
-    */
-  private def parseTagged(routed: DataFrame,
-                          members: Option[Broadcast[Set[(String, String)]]],
-                          schema: StructType, dialect: JsonDialect,
-                          names: FieldNames): DataFrame = {
-    val outSchema = StructType(schema.fields ++ Seq(
-      StructField("_project", StringType, nullable = false),
-      StructField("_collection", StringType, nullable = false)))
-    routed.select(col("value"), col("_project"), col("_collection"))
-      .mapPartitions { it =>
-        val m = members.map(_.value)
-        it.flatMap { r =>
-          val p = r.getString(1); val c = r.getString(2)
-          if (p == null || c == null || m.exists(!_((p, c)))) Iterator.empty
-          else JsonEventParser.parseEvent(r.getString(0), dialect, schema, names)
-            .map(t => Row.fromSeq(t._2.toSeq :+ p :+ c)).iterator
-        }
-      }(Encoders.row(outSchema))
-  }
 
   /** Batch ingest: route → infer → evolve registry → per-collection
     * parse. Registry order is authoritative (metastore semantics D8/D9).
-    * The parsed frames are lazy plans over the routed batch, which is
-    * returned too, cached: the caller unpersists it once the frames are
-    * consumed.
+    *
+    * Inference and every parsed frame read the routed batch, so it is
+    * computed once and persisted as a plain RDD of its Catalyst rows,
+    * outside Spark SQL's cache manager (which would hold it for the life of
+    * the session). The parsed frames are lazy plans over it. The RDD is
+    * returned too: a caller may unpersist it once the frames are consumed;
+    * otherwise Spark's ContextCleaner frees it once the frames are garbage.
     */
   def ingest(raw: Dataset[String], registry: EventSchema.Registry,
              dialect: JsonDialect = JsonDialect.Fabric,
              names: FieldNames = FieldNames())
-      : (DataFrame, Map[CollectionId, DataFrame]) = {
-    val routed = EventOps.decouple(raw, dialect, names)
+      : (RDD[InternalRow], Map[CollectionId, DataFrame]) = {
+    val decoupled = EventOps.decouple(raw, dialect, names)
       .filter(col("_project").isNotNull)
+    val cached = decoupled.queryExecution.toRdd.map(_.copy())
+      .setName("JsonIngest routed batch")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val routed = DataFrameBridge.ofRows(raw.sparkSession, cached, decoupled.schema)
     val (schemas, _) = evolve(routed, registry, dialect, names)
-    (routed, schemas.map { case (id, schema) =>
+    (cached, schemas.map { case (id, schema) =>
       id -> parseCollection(routed, id, schema, dialect, names)
     })
   }

@@ -96,7 +96,7 @@ object CollectionId {
     * imposes no charset) they must not smuggle separators or traversal
     * ("a/b" would write outside the collection dir, ".." escapes
     * basePath) and must not collide with the reserved '_'-prefixed
-    * control dirs (`_staging`, `_epochs`, `_graft_commits`). Names are
+    * control dirs (`_graft_commits`). Names are
     * further restricted to PRINTABLE ASCII: path behavior for wider
     * charsets is locale-dependent (a JVM under a POSIX locale cannot
     * even create the directory), and a table name that works on one

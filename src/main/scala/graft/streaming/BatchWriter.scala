@@ -5,13 +5,15 @@ import graft.sinks.EventSink
 import graft.util.{ObservedCount, ParallelWrites}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** The write planner for one micro-batch, shared by every wire format
   * (`IngestStream.processBatch` for JSON, `AvroIngest.processBatch` for
-  * tagged Avro). It runs inside the `foreachBatch` commit barrier and owns
-  * the whole write policy; a wire format only supplies frame builders.
+  * tagged Avro, the bulk expansion). It runs inside the `foreachBatch`
+  * commit barrier and owns the whole write policy; a wire format supplies
+  * one frame builder, and a collection is a cohort of one — the
+  * reference's one `insert(Page)` per table (DatabaseHandler.java:13-30).
   *
   * - Shape: above `IngestConfig.consolidateThreshold` collections, on a
   *   sink that supports it, non-empty collections with an EXACT schema
@@ -31,15 +33,21 @@ import org.apache.spark.storage.StorageLevel
   */
 object BatchWriter {
 
+  /** `schema` plus the routing columns a frame builder appends. */
+  def withRouting(schema: StructType): StructType = StructType(schema.fields ++ Seq(
+    StructField("_project", StringType, nullable = false),
+    StructField("_collection", StringType, nullable = false)))
+
   /** Writes `schemas` (the collections present in the batch, each with its
     * authoritative schema) and returns the rows inserted per collection.
     *
     * @param sizes     rows per collection in this batch
     * @param cohorts   false keeps every collection on the per-collection
     *                  path (e.g. a dedup key must never span collections)
-    * @param single    one collection's rows in its schema
-    * @param cohort    the members' rows in their shared schema plus
-    *                  `_project`/`_collection` routing columns
+    * @param rows      the rows of the given collections in their shared
+    *                  schema plus `_project`/`_collection` routing columns;
+    *                  a per-collection write drops the two routing columns,
+    *                  a cohort write partitions by them
     * @param onFailure what a failed write of these collections returns —
     *                  dead-letter and report counts, or rethrow to abort
     *                  the batch (offsets never commit)
@@ -47,8 +55,7 @@ object BatchWriter {
   def write(schemas: Map[CollectionId, StructType], sizes: Map[CollectionId, Long],
             sink: EventSink, cfg: IngestConfig, batchId: Long,
             cohorts: Boolean = true)(
-      single: (CollectionId, StructType) => DataFrame,
-      cohort: (Seq[CollectionId], StructType) => DataFrame,
+      rows: (Seq[CollectionId], StructType) => DataFrame,
       onFailure: (Seq[CollectionId], Throwable) => Seq[(CollectionId, Long)])
       : Map[CollectionId, Long] = {
     type Entry = (CollectionId, StructType)
@@ -57,7 +64,7 @@ object BatchWriter {
       IngestStream.withRetry(cfg.commitRetries, cfg.commitRetryBaseMillis)(f)
 
     def runSingle(id: CollectionId, schema: StructType): Seq[(CollectionId, Long)] = {
-      val df = single(id, schema)
+      val df = rows(Seq(id), schema).drop("_project", "_collection")
       // the inserted-row count rides on the write job itself (a fresh
       // Observation per attempt, inside the retry); the batch id flows
       // through for sink-side replay idempotence
@@ -67,7 +74,7 @@ object BatchWriter {
 
     def runCohort(group: Seq[Entry]): Seq[(CollectionId, Long)] = {
       val ids = group.map(_._1)
-      val df = cohort(ids, group.head._2).persist(StorageLevel.MEMORY_AND_DISK)
+      val df = rows(ids, group.head._2).persist(StorageLevel.MEMORY_AND_DISK)
       try {
         // the counts job is the cohort's first materialization of the
         // frame — inside the failure scope, so a poisoned record fails the

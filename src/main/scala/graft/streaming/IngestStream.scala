@@ -16,10 +16,20 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 trait HistoricalHandler extends Serializable {
   def handle(raw: DataFrame): Unit
+
+  /** The hand-off of micro-batch `batchId` (-1 outside a stream), which a
+    * crash before the offset commit replays. A handler that can key its
+    * output by the batch overrides this to be replay-idempotent; the
+    * default is the plain [[handle]], at-least-once.
+    */
+  def handle(raw: DataFrame, batchId: Long): Unit = handle(raw)
 }
 
 /** Historical re-publish to a Kafka topic (needs the kafka connector on the
-  * classpath at runtime).
+  * classpath at runtime). At-least-once, as the reference's
+  * KafkaHistoricalDataHandler (:40-69) is: a producer cannot take back
+  * records, so a batch replayed after a crash between the hand-off and the
+  * offset commit publishes its late records again.
   */
 final class KafkaHistoricalHandler(bootstrap: String, topic: String) extends HistoricalHandler {
   override def handle(raw: DataFrame): Unit =
@@ -30,10 +40,18 @@ final class KafkaHistoricalHandler(bootstrap: String, topic: String) extends His
       .save()
 }
 
-/** File-backed historical hand-off (test/local stand-in for the topic). */
+/** File-backed historical hand-off (test/local stand-in for the topic).
+  * Inside a stream each batch overwrites its own `path/batch=N`, like
+  * `IngestStream.DeadLetter`, so a replayed batch rewrites its late
+  * records instead of appending them twice; outside one it appends to
+  * `path`. `spark.read.text(path)` reads every batch back.
+  */
 final class FileHistoricalHandler(path: String) extends HistoricalHandler {
-  override def handle(raw: DataFrame): Unit =
-    raw.select("value").write.mode("append").text(path)
+  override def handle(raw: DataFrame): Unit = handle(raw, -1L)
+
+  override def handle(raw: DataFrame, batchId: Long): Unit =
+    if (batchId < 0) raw.select("value").write.mode("append").text(path)
+    else raw.select("value").write.mode("overwrite").text(s"$path/batch=$batchId")
 }
 
 /** Engine configuration — the reference's operating envelope
@@ -176,28 +194,26 @@ object IngestStream {
     * records instead and still let the stream advance (SURVEY §7.4.4).
     */
   final class DeadLetter(path: String) extends Serializable {
-    /** Batch-keyed and overwriting, like every other write in the barrier:
-      * a replayed micro-batch rewrites the same `batch=N` directory
-      * instead of appending duplicates (the one path that exists to
-      * PRESERVE data must itself be exactly-once under replay). The
-      * batch-less overload keeps the old appending layout for callers
-      * outside a streaming batch.
+    /** Inside a stream (`batchId` ≥ 0) batch-keyed and overwriting, like
+      * every other write in the barrier: a replayed micro-batch rewrites
+      * the same `batch=N` directory instead of appending duplicates (the
+      * one path that exists to PRESERVE data must itself be exactly-once
+      * under replay). Outside a stream it appends.
       */
-    def handle(id: graft.schema.CollectionId, raw: DataFrame, cause: Throwable,
-               batchId: Long): Unit =
-      raw.select(col("value")).write.mode("overwrite")
-        .text(s"$path/${id.project}/${id.collection}/batch=$batchId")
-
-    def handle(id: graft.schema.CollectionId, raw: DataFrame, cause: Throwable): Unit =
-      raw.select(col("value"))
-        .write.mode("append").text(s"$path/${id.project}/${id.collection}")
+    def handle(id: graft.schema.CollectionId, raw: DataFrame, batchId: Long): Unit = {
+      val dir = s"$path/${id.project}/${id.collection}"
+      if (batchId < 0) raw.select(col("value")).write.mode("append").text(dir)
+      else raw.select(col("value")).write.mode("overwrite").text(s"$dir/batch=$batchId")
+    }
   }
 
   /** One micro-batch of the JSON pipeline — also the batch path for bulk
     * loads: decouple → whitelist → day-split → historical hand-off →
-    * infer/evolve (`JsonIngest.evolve`) → per-collection writes through
-    * [[BatchWriter]] with JSON frame builders (`JsonIngest.parseCollection`
-    * / `parseCohort` plus `_shard_time`) and the C7 dead-letter policy.
+    * infer/evolve (`JsonIngest.evolve`) → writes through [[BatchWriter]]
+    * with the one JSON frame builder (`JsonIngest.parse` of the members
+    * plus `_shard_time`) and the C7 dead-letter policy. The historical
+    * hand-off and the dead letters are keyed by `batchId` (≥ 0 inside a
+    * stream), so a replay can rewrite them.
     *
     * The decoupled batch is the one Spark SQL cache of the batch: the
     * real-time slice, inference and every write read it through the
@@ -229,8 +245,9 @@ object IngestStream {
             outdatedDayIndex = cfg.outdatedDayIndex,
             promoteMinRecords = cfg.promoteMinRecords,
             promoteMinFraction = cfg.promoteMinFraction)
-          // F5: hand historical records off INSIDE the barrier
-          historical.foreach(h => h.handle(split.historical))
+          // F5: hand historical records off INSIDE the barrier, keyed by
+          // the batch so a replay can rewrite them, not append
+          historical.foreach(_.handle(split.historical, batchId))
           split.realTime
         }
 
@@ -249,29 +266,17 @@ object IngestStream {
           : Seq[(graft.schema.CollectionId, Long)] =
         deadLetter match {
           case Some(dl) => // C7: preserve + advance instead of skip/abort
-            ids.foreach { id =>
-              val rows = routed.filter(
-                col("_project") === id.project &&
-                  col("_collection") === id.collection)
-              // batch-keyed when inside a streaming batch: replay after a
-              // crash between dead-letter and offset commit must not
-              // duplicate the preserved records
-              if (batchId >= 0) dl.handle(id, rows, e, batchId)
-              else dl.handle(id, rows, e)
-            }
+            // batch-keyed: a replay after a crash between dead-letter and
+            // offset commit must not duplicate the preserved records
+            ids.foreach(id => dl.handle(id, routed.filter(
+              col("_project") === id.project && col("_collection") === id.collection), batchId))
             ids.map(_ -> 0L)
           case None => throw e // abort the batch: offsets never commit
         }
 
       BatchWriter.write(batchSchemas, batchSizes, sink, cfg, batchId)(
-        single = (id, schema) => EventOps.withShardTime(
-          JsonIngest.parseCollection(routed, id, schema, cfg.dialect, cfg.names),
-          cfg.names),
-        // a cohort parses all member rows in ONE pass over the cached batch
-        cohort = (ids, schema) => EventOps.withShardTime(
-          JsonIngest.parseCohort(routed,
-            ids.map(id => (id.project, id.collection)).toSet,
-            schema, cfg.dialect, cfg.names),
+        rows = (ids, schema) => EventOps.withShardTime(
+          JsonIngest.parse(routed, Some(ids), schema, cfg.dialect, cfg.names),
           cfg.names),
         onFailure = failAll)
     } finally decoupled.unpersist(false)

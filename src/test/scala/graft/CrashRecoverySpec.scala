@@ -2,7 +2,7 @@ package graft
 
 import graft.schema.{CollectionId, EventSchema}
 import graft.sinks.{ColumnarSink, EventSink}
-import graft.streaming.{IngestConfig, IngestStream}
+import graft.streaming.{FileHistoricalHandler, IngestConfig, IngestStream}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
@@ -300,6 +300,40 @@ class CrashRecoverySpec extends SparkSpec {
     val want = contentOf(oSink)
     assert(got == want, s"cohort crash recovery diverged:\n$got\nvs\n$want")
     assert(got.keySet == collections.map(_.collection).toSet)
+  }
+
+  test("crash after the historical hand-off: the replay rewrites the late records, no duplicates") {
+    val inDir = Files.createTempDirectory("cr6_in")
+    val ckpt = Files.createTempDirectory("cr6_ckpt").toString
+    val sinkDir = Files.createTempDirectory("cr6_sink").toString
+    val histDir = Files.createTempDirectory("cr6_hist").toString + "/data"
+    val t = System.currentTimeMillis()
+    val old = t - 40L * 24 * 3600 * 1000
+    val late = (0 until 3).map(i => fabric("c0", old + i, s""","late":$i"""))
+    writeLines(inDir, "b1.json", batchOne(t) ++ late)
+
+    // run 1: the hand-off lands inside the barrier, then the first sink
+    // insert fails, so the batch's offsets never commit
+    val failing = new FailingSink(new ColumnarSink(sinkDir), 1, afterWrite = false)
+    val q1 = IngestStream.start(spark, IngestStream.fileSource(spark, inDir.toString),
+      new EventSchema.Registry(), failing, Some(new FileHistoricalHandler(histDir)), ckpt, cfg)
+    intercept[StreamingQueryException] {
+      q1.processAllAvailable()
+      q1.awaitTermination()
+    }
+    q1.stop()
+    assert(spark.read.text(histDir).count() == late.size, "the hand-off did not run before the crash")
+
+    // run 2 replays the batch, hand-off included
+    val q2 = IngestStream.start(spark, IngestStream.fileSource(spark, inDir.toString),
+      new EventSchema.Registry(), new ColumnarSink(sinkDir),
+      Some(new FileHistoricalHandler(histDir)), ckpt, cfg)
+    try q2.processAllAvailable() finally q2.stop()
+
+    val handedOff = spark.read.text(histDir).select("value").collect().map(_.getString(0)).toSeq
+    assert(handedOff.sorted == late.sorted, s"historical records after the replay: $handedOff")
+    val (oracleSink, _) = oracleRun(inDir.toString)
+    assert(contentOf(new ColumnarSink(sinkDir)) == contentOf(oracleSink))
   }
 
   test("crash under schema churn: recovery replays the evolution and the registry converges") {

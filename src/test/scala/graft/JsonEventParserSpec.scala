@@ -53,7 +53,7 @@ class JsonEventParserSpec extends AnyFunSuite {
     assert(route("demo", "a/b").isEmpty)
     assert(route("demo", "..").isEmpty)
     assert(route("a\\\\b", "c").isEmpty)
-    assert(route("_staging", "c").isEmpty) // v2 scan skips + cleanup deletes
+    assert(route("_staging", "c").isEmpty)
     assert(route("demo", "_reserved").isEmpty)
     assert(route(".hidden", "c").isEmpty)
     assert(!graft.schema.CollectionId.isValid("demo", "a/b"))

@@ -37,8 +37,8 @@ class PlanHygieneSpec extends SparkSpec {
   test("rakam ingest: one cohort parse pass — no per-collection union or cache") {
     val p = plan("d2_rakam_ingest")
     // r15 collapsed the per-collection loop (routing cache + C filtered
-    // parse passes unioned back together) into a single parseAllRouted
-    // pass; a Union or InMemoryTableScan here means the loop came back
+    // parse passes unioned back together) into a single pass of the one
+    // parse loop over every routed row; a Union or InMemoryTableScan here means the loop came back
     assert(!p.contains("Union"), s"d2 regained the per-collection union:\n$p")
     assert(!p.contains("InMemoryTableScan"), s"d2 regained the routing cache:\n$p")
   }
@@ -261,6 +261,17 @@ class PlanHygieneSpec extends SparkSpec {
         s"$shape write saw $batchCaches cached plans of the batch; want only the decoupled frame")
     }
     assert(SqlCacheProbe.entries(spark) == before, "the batch left a plan cached")
+  }
+
+  test("JSON ingest queries leave no plan in Spark SQL's cache") {
+    // the routed batch behind `JsonIngest.ingest`'s frames is cached
+    // outside the cache manager, which would keep it for the session
+    Seq("d7_ingest_route", "k1_sink_roundtrip").foreach { name =>
+      val before = SqlCacheProbe.entries(spark)
+      SparkEntry.queries(name)(spark, dir).collect()
+      val left = SqlCacheProbe.entries(spark) - before
+      assert(left == 0, s"$name left $left plan(s) cached")
+    }
   }
 
   test("decontamination probes broadcast; no shuffle of the corpus against itself") {
