@@ -1588,8 +1588,8 @@ object SimilarityFunctions {
   }
 
   /** Refuses mixing root-level and batch-keyed inverted-file layouts (one
-    * shallow listing; same data-loss mechanics as the sink's layoutGuard:
-    * partition inference drops root files once `batch=` dirs exist).
+    * shallow listing): partition inference drops root files once `batch=`
+    * dirs exist.
     */
   private def invGuard(spark: org.apache.spark.sql.SparkSession,
                        invPath: String, expectBatchDirs: Boolean): Unit = {

@@ -573,9 +573,9 @@ object AvroIngest {
   /** Keeps bulk-expansion batch markers disjoint from inline ones. */
   val BulkBatchIdOffset: Long = 1L << 40
 
-  /** Production S4 object fetcher (the default): resolves each pointer as a
-    * Hadoop FileSystem path (`s3a://bucket/key`, `gs://`, `hdfs://`,
-    * `file:`) — the reference's S3 client fetch
+  /** Production S4 object fetcher (pass it as `bulkFetch`): resolves each
+    * pointer as a Hadoop FileSystem path (`s3a://bucket/key`, `gs://`,
+    * `hdfs://`, `file:`) — the reference's S3 client fetch
     * (kinesis/KinesisMessageEventTransformer.java:80-84) generalized to any
     * Hadoop-supported store, credentials riding the standard `fs.s3a.*`
     * configuration. Hadoop `Configuration` is not serializable, so the
@@ -611,15 +611,6 @@ object AvroIngest {
           .toArray)
     }
   }
-
-  /** [[processBulk]] wired to the production [[HadoopObjectFetcher]]; the
-    * `fetch`-taking overload stays for tests and exotic stores.
-    */
-  def processBulk(pointers: org.apache.spark.sql.Dataset[String],
-                  registry: graft.schema.EventSchema.Registry,
-                  sink: graft.sinks.EventSink): Map[CollectionId, Long] =
-    processBulk(pointers, registry, sink,
-      HadoopObjectFetcher(pointers.sparkSession))
 
   /** S4 — distributed bulk-object expansion: fetch each pointed-to object
     * ONCE (cached bytes); `fetch` is the injected object-store client

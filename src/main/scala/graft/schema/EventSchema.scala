@@ -77,11 +77,10 @@ object EventSchema {
     */
   final class Registry(names: FieldNames = FieldNames()) extends Serializable {
     private val schemas = new java.util.concurrent.ConcurrentHashMap[CollectionId, StructType]()
-    // monotonic change counters: let persistence skip the (FS round-trip)
-    // save when nothing evolved since the last one — globally for the
-    // single-file layout, per PROJECT for the sharded layout (so one hot
-    // collection in one project never rewrites every other project's file)
-    private val version = new java.util.concurrent.atomic.AtomicLong(0)
+    // monotonic change counters per PROJECT: let persistence skip the (FS
+    // round-trip) save of a shard when nothing in its project evolved since
+    // the last one (so one hot collection in one project never rewrites
+    // every other project's file)
     private val projectVersions =
       new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
     private val savedVersions =
@@ -102,7 +101,6 @@ object EventSchema {
     def persistMillis: Long = persistNanos.get() / 1000000L
 
     private def bump(project: String): Unit = {
-      version.incrementAndGet()
       projectVersions.merge(project, 1L, (a, b) => a + b)
     }
 
@@ -155,7 +153,6 @@ object EventSchema {
         .foreach(schemas.remove)
       projectVersions.remove(project)
       removedProjects.add(project)
-      version.incrementAndGet()
     }
 
     /** K4 at-rest persistence: serialize the registry as JSON so a restarted
@@ -171,21 +168,11 @@ object EventSchema {
         }
         .mkString("[", ",", "]")
 
-    def toJson: String = entriesJson(all.toSeq)
-
-    def save(path: java.nio.file.Path): Unit =
-      java.nio.file.Files.writeString(path, toJson)
-
-    /** Hadoop-FS flavor so the registry can live next to the streaming
-      * checkpoint on any scheme (file:/hdfs:/s3a:). Written via
-      * rename-with-OVERWRITE (FileContext) — one atomic step, so a crash
-      * mid-save leaves either the old registry or the new one, never
-      * neither (delete-then-rename would have a window with NO file, and a
-      * restart would silently start from an empty registry).
+    /** Written via rename-with-OVERWRITE (FileContext) — one atomic step,
+      * so a crash mid-save leaves either the old shard or the new one,
+      * never neither (delete-then-rename would have a window with NO file,
+      * and a restart would silently start from an empty registry).
       */
-    def save(path: String, conf: org.apache.hadoop.conf.Configuration): Unit =
-      writeAtomic(path, toJson, conf)
-
     private def writeAtomic(path: String, body: String,
                             conf: org.apache.hadoop.conf.Configuration): Unit = {
       val p = new org.apache.hadoop.fs.Path(path)
@@ -200,31 +187,16 @@ object EventSchema {
           org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     }
 
-    /** Per-batch persistence entry point: skips the filesystem round-trip
-      * when nothing evolved since the last save to `path` (the steady
-      * state — stable schemas, every trigger). Returns whether a save ran.
-      */
-    def saveIfChanged(path: String,
-                      conf: org.apache.hadoop.conf.Configuration): Boolean = this.synchronized {
-      val v = version.get()
-      val saved = savedVersions.get(path)
-      if (saved != null && saved.longValue() == v) false
-      else {
-        save(path, conf)
-        savedVersions.put(path, v)
-        true
-      }
-    }
-
-    /** Sharded (per-project) persistence: `dir/<project>.json`, one file
-      * per project, each written with the same atomic rename as the
-      * single-file layout. Nothing bounds how many COLLECTIONS one file
-      * can hold in the single-file layout — at 10k collections every
-      * trigger would re-serialize all of them inside the commit barrier;
-      * sharding bounds each write to the projects that actually evolved
-      * this batch (the reference's metastore equivalently writes only the
-      * touched `tables`/`columns` rows, MetadataDao.java:89-133).
-      * Returns whether any shard was written.
+    /** The registry's one at-rest layout, per-project shards:
+      * `dir/<project>.json`, each written with an atomic rename. A single
+      * registry file would grow with the collection count — at 10k
+      * collections every trigger would re-serialize all of them inside the
+      * commit barrier; sharding bounds each write to the projects that
+      * actually evolved this batch (the reference's metastore equivalently
+      * writes only the touched `tables`/`columns` rows,
+      * MetadataDao.java:89-133). Skips the filesystem when nothing
+      * evolved since the last save to `dir` (the steady state). Returns
+      * whether any shard was written.
       */
     def saveShardedIfChanged(dir: String,
                              conf: org.apache.hadoop.conf.Configuration): Boolean = this.synchronized {
@@ -249,11 +221,11 @@ object EventSchema {
       val projects = schemas.keySet.asScala.map(_.project).toSet
       var any = false
       projects.foreach { project =>
-        // version FIRST, entries second (mirroring saveIfChanged): a
-        // concurrent addColumns between the two can only make the
-        // recorded version STALE — a redundant rewrite next batch — never
-        // newer than the serialized entries, which would silently skip
-        // persisting the evolved schema until the project's next change
+        // version FIRST, entries second: a concurrent addColumns between
+        // the two can only make the recorded version STALE — a redundant
+        // rewrite next batch — never newer than the serialized entries,
+        // which would silently skip persisting the evolved schema until
+        // the project's next change
         val v = projectVersions.getOrDefault(project, 0L)
         val key = s"$dir|$project"
         val saved = savedVersions.get(key)
@@ -292,17 +264,15 @@ object EventSchema {
     private def shardPath(dir: String, project: String): String =
       dir + "/" + java.net.URLEncoder.encode(project, "UTF-8") + ".json"
 
-    /** Load every shard under `dir` (merge-on-load per entry, exactly like
-      * the single-file loader). A FILE at `dir` is read as a legacy
-      * single-file registry, so pre-sharding checkpoints still resume.
-      * Returns whether anything was read.
+    /** Load every shard under `dir`, merge-on-load per entry (the file's
+      * column order leads, columns registered in memory fold in). Returns
+      * whether anything was read.
       */
     def loadSharded(dir: String,
                     conf: org.apache.hadoop.conf.Configuration): Boolean = {
       val p = new org.apache.hadoop.fs.Path(dir)
       val fs = p.getFileSystem(conf)
       if (!fs.exists(p)) return false
-      if (fs.getFileStatus(p).isFile) return load(dir, conf)
       val shards = fs.listStatus(p)
         .filter(st => st.isFile && st.getPath.getName.endsWith(".json"))
       if (shards.isEmpty) return false
@@ -314,10 +284,13 @@ object EventSchema {
           finally in.close()
         fromJson(body)
       }
-      // same durability rule as the single-file load: only an
-      // empty-before-load registry may mark the loaded state as already
-      // saved (pre-registered in-memory schemas must survive the next
-      // saveShardedIfChanged even if the files lack them)
+      // The just-loaded state IS the durable state under `dir` — but only
+      // when the registry was empty before the load. If schemas were
+      // pre-registered in memory (e.g. startAvro), they may be absent from
+      // the files; marking the merged state durable would make
+      // saveShardedIfChanged skip them until some later evolution, and a
+      // crash in that window would drop them. Leave savedVersions
+      // unseeded so the first save persists the merged registry.
       if (!hadEntries) {
         import scala.jdk.CollectionConverters._
         projectVersions.asScala.foreach { case (project, v) =>
@@ -326,31 +299,6 @@ object EventSchema {
       }
       true
     }
-
-    /** Load if present; returns whether anything was read. */
-    def load(path: String, conf: org.apache.hadoop.conf.Configuration): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) return false
-      val in = fs.open(p)
-      val body =
-        try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      val hadEntries = !schemas.isEmpty
-      fromJson(body)
-      // The just-loaded state IS the durable state at this path — but only
-      // when the registry was empty before the load. If schemas were
-      // pre-registered in memory (e.g. startAvro), they may be absent from
-      // the file; marking the merged state durable would make saveIfChanged
-      // skip them until some later evolution, and a crash in that window
-      // would drop them. Leave savedVersions unseeded so the first
-      // saveIfChanged persists the merged registry.
-      if (!hadEntries) savedVersions.put(path, version.get())
-      true
-    }
-
-    def load(path: java.nio.file.Path): Unit =
-      fromJson(java.nio.file.Files.readString(path))
 
     private def fromJson(body: String): Unit = {
       val root = graft.ingest.JsonEventParser.mapperRead(body)

@@ -21,9 +21,10 @@ trait EventSink extends Serializable {
     */
   def insert(id: CollectionId, df: DataFrame): Unit
 
-  /** Streaming insert with the micro-batch id: sinks that can use it for
-    * idempotence override this (`ColumnarSink.insertBatch`); default is the
-    * plain at-least-once append.
+  /** Streaming insert with the micro-batch id (-1 outside a stream):
+    * sinks that can use it for idempotence override this
+    * (`ColumnarSink.insertBatch`); default is the plain at-least-once
+    * [[insert]].
     */
   def insert(id: CollectionId, df: DataFrame, batchId: Long): Unit =
     insert(id, df)
@@ -63,6 +64,25 @@ object EventSink {
   def consolidatable(schema: StructType): Boolean =
     !schema.fieldNames.exists(f =>
       ReservedPartitionNames.contains(f.toLowerCase(java.util.Locale.ROOT)))
+
+  /** The one at-rest layout: every write of every file writer (the sinks,
+    * the file historical hand-off, the dead letters) lands in its own
+    * `batch=<key>` directory, written with overwrite. A stream batch keys
+    * it by its id, so a replay rewrites its own output (the reference's S3
+    * sink keys objects by table and batch the same way,
+    * S3DatabaseHandler.java:219-233). A write outside a stream
+    * (`batchId < 0`) gets a fresh non-numeric key: it appends, and it can
+    * never collide with a stream batch. No writer leaves a file next to
+    * the `batch=` dirs, where Spark's partition discovery would drop it
+    * from every read.
+    */
+  def batchKey(batchId: Long): String =
+    if (batchId >= 0) batchId.toString
+    else s"load-${java.util.UUID.randomUUID()}"
+
+  /** `dir/batch=<key>` under [[batchKey]]'s rule. */
+  def batchDir(dir: String, batchId: Long): String =
+    s"$dir/batch=${batchKey(batchId)}"
 }
 
 /** K1 (modernized) — columnar table sink. The reference's Raptor/ORC path
@@ -72,9 +92,11 @@ object EventSink {
   * both for free (footer stats replace `computeShardStats`, the partition
   * layout replaces the MySQL shard table).
   *
-  * Layout: `basePath/project=<p>/collection=<c>/…` so partition pruning on
-  * (project, collection) is free at query time. Schema evolution is
-  * append + `mergeSchema=true` on read — the D9 rebuild at rest.
+  * Layout: `basePath/project=<p>/collection=<c>/batch=<key>/…` so
+  * partition pruning on (project, collection) is free at query time. Every
+  * write lands in its own batch directory ([[EventSink.batchKey]]). Schema
+  * evolution is one directory per write + `mergeSchema=true` on read — the
+  * D9 rebuild at rest.
   */
 final class ColumnarSink(basePath: String, format: String = "parquet",
                          compression: String = "snappy",
@@ -277,75 +299,11 @@ final class ColumnarSink(basePath: String, format: String = "parquet",
       dropped.withColumnRenamed(c, orig)
     }
 
-  /** Plain inserts land part files at the collection ROOT while the
-    * batch-keyed path lands them under `batch=N` dirs — Spark's partition
-    * inference IGNORES root-level files once partition dirs exist, so
-    * mixing the two shapes on one collection would silently drop the
-    * root-level rows from every read. One collection must stick to ONE
-    * shape (streaming always uses the batch-keyed path; bulk loads always
-    * use this one) — [[layoutGuard]] turns the mix into a loud error
-    * instead of quiet data loss, for one driver-side listing per insert.
+  /** A write outside a stream: appends under a fresh `batch=<key>`
+    * directory ([[EventSink.batchKey]]), through [[insertBatch]].
     */
-  override def insert(id: CollectionId, df: DataFrame): Unit = {
-    layoutGuard(df.sparkSession, id, expectBatchDirs = false)
-    // append mode lands new part files among existing ones — the stats
-    // delta is a before/after listing (driver-side, bounded by the
-    // collection's file count, and only taken when stats are on)
-    val before =
-      if (statsColumns.isEmpty) Set.empty[String]
-      else listDataFiles(df.sparkSession, path(id)).toSet
-    escapeReserved(df).write.mode(SaveMode.Append)
-      .format(format)
-      .option("compression", compression)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .save(path(id))
-    if (statsColumns.nonEmpty)
-      appendStats(df.sparkSession,
-        listDataFiles(df.sparkSession, path(id)).filterNot(before))
-  }
-
-  /** A guard pass is cached per (collection, expected shape): every write
-    * that could invalidate it goes through this instance and is itself
-    * guarded in the OPPOSITE direction (a plain insert refuses once
-    * `batch=` dirs exist; a batch insert refuses once root files exist),
-    * so a collection that passed once cannot be flipped by this sink.
-    * Cross-instance writers bypass the cache — the guard is
-    * defense-in-depth, not a lock. At 1k live collections this turns C
-    * shallow listings per trigger into C on the FIRST trigger only.
-    */
-  private val layoutGuardPassed =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(CollectionId, Boolean)]()
-
-  /** Fails loudly when an insert would mix the root-level and batch-keyed
-    * layouts in one collection directory (data loss on read: partition
-    * inference ignores root files next to `batch=` dirs). One SHALLOW
-    * listStatus of the collection dir, amortized away by the pass cache.
-    */
-  private def layoutGuard(spark: SparkSession, id: CollectionId,
-                          expectBatchDirs: Boolean): Unit = {
-    if (layoutGuardPassed.contains((id, expectBatchDirs))) return
-    val dir = new org.apache.hadoop.fs.Path(path(id))
-    val fs = hadoopFs(dir, spark)
-    if (!fs.exists(dir)) return // nothing to mix with; nothing to cache yet
-    val entries = fs.listStatus(dir)
-      .filterNot(st => st.getPath.getName.startsWith("_") ||
-        st.getPath.getName.startsWith("."))
-    val offending =
-      if (expectBatchDirs) entries.filter(_.isFile) // root files present?
-      else entries.filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("batch="))
-    if (offending.nonEmpty)
-      throw new IllegalStateException(
-        s"collection ${id.project}/${id.collection} already uses the " +
-          s"${if (expectBatchDirs) "root-level (plain insert)" else "batch-keyed (streaming insert)"} " +
-          "layout — mixing layouts makes partition inference silently drop " +
-          "the root-level files; use one insert shape per collection " +
-          s"(first offender: ${offending.head.getPath})")
-    // an EMPTY dir passes both shapes but pins neither — caching it would
-    // let a later write of the other shape slip past; only a pass observed
-    // against committed entries of this shape is durable
-    if (entries.nonEmpty) { layoutGuardPassed.add((id, expectBatchDirs)); () }
-  }
+  override def insert(id: CollectionId, df: DataFrame): Unit =
+    insertBatch(id, df, -1L)
 
   /** Idempotent variant for streaming replays: `foreachBatch` is
     * at-least-once, so a crashed batch can re-run. A batch manifest under
@@ -358,28 +316,33 @@ final class ColumnarSink(basePath: String, format: String = "parquet",
   override def insert(id: CollectionId, df: DataFrame, batchId: Long): Unit =
     insertBatch(id, df, batchId)
 
+  /** Lands `df` in the collection's `batch=<key>` directory with
+    * overwrite: `batch=N` inside a stream, a fresh key for `batchId < 0`
+    * (an append). Writes the data files, then their stats slice, then the
+    * commit marker `_graft_commits/<p>/<c>/<key>` as the write's last act.
+    */
   def insertBatch(id: CollectionId, df: DataFrame, batchId: Long): Unit = {
-    layoutGuard(df.sparkSession, id, expectBatchDirs = true)
     // Markers resolve through the Hadoop FileSystem of basePath — data
     // writes already do — so idempotence holds on file:/hdfs:/s3a: alike.
     // One directory level per component keeps the layout unambiguous for
     // names containing underscores.
     // escaped like the data layout: injective, and keeps characters Hadoop
     // Path/URI parsing treats specially (':', '%') out of raw components
-    val marker = new org.apache.hadoop.fs.Path(s"${commitsDir(id)}/$batchId")
+    val key = EventSink.batchKey(batchId)
+    val marker = new org.apache.hadoop.fs.Path(s"${commitsDir(id)}/$key")
     val fs = marker.getFileSystem(
       df.sparkSession.sparkContext.hadoopConfiguration)
     if (fs.exists(marker)) return // replay: already committed
+    val dir = s"${path(id)}/batch=$key"
     escapeReserved(df).write.mode(SaveMode.Overwrite)
       .format(format)
       .option("compression", compression)
       .option("maxRecordsPerFile", maxRecordsPerFile)
-      .save(s"${path(id)}/batch=$batchId")
+      .save(dir)
     // stats BEFORE the marker: the marker is the commit's last act. A
     // crash between the two replays the whole batch (marker absent →
     // overwrite supersedes the files, whose index entries go stale).
-    appendStats(df.sparkSession,
-      listDataFiles(df.sparkSession, s"${path(id)}/batch=$batchId"))
+    appendStats(df.sparkSession, listDataFiles(df.sparkSession, dir))
     fs.mkdirs(marker.getParent)
     val out = fs.create(marker, true)
     // non-empty ⟺ the stats slice landed → prunedRead may trust the dir
@@ -389,15 +352,17 @@ final class ColumnarSink(basePath: String, format: String = "parquet",
 
   /** B6-at-cardinality — consolidated cohort insert: ONE partitioned write
     * lands every (project, collection) of a same-schema cohort under the
-    * standard layout `project=…/collection=…/batch=<id>/…`, byte-identical
+    * standard layout `project=…/collection=…/batch=<key>/…`, byte-identical
     * to what C separate [[insertBatch]] calls would produce (cohorts share
-    * one exact schema, so no foreign columns appear in any file). Dynamic
-    * partition overwrite scopes the overwrite to exactly the (project,
-    * collection, batch) triples present in `rows`, so a replayed
-    * micro-batch rewrites its own output in place — the same
-    * effectively-once contract as [[insertBatch]], without a marker file.
-    * At 10k live collections this turns C driver-side job submissions per
-    * trigger into O(#distinct schema shapes).
+    * one exact schema, so no foreign columns appear in any file). The key
+    * is [[EventSink.batchKey]]'s: the batch id in a stream, one fresh key
+    * for the whole cohort outside one. Dynamic partition overwrite scopes
+    * the overwrite to exactly the (project, collection, batch) triples
+    * present in `rows`, so a replayed micro-batch rewrites its own output
+    * in place — the same effectively-once contract as [[insertBatch]],
+    * without a marker file. At 10k live collections this turns C
+    * driver-side job submissions per trigger into O(#distinct schema
+    * shapes).
     */
   override def supportsConsolidated: Boolean = true
 
@@ -416,6 +381,7 @@ final class ColumnarSink(basePath: String, format: String = "parquet",
           "collide with the project/collection partition layout — " +
           "route this cohort through per-collection inserts " +
           "(EventSink.consolidatable gates this)")
+    val key = EventSink.batchKey(batchId)
     // a REPLAY is about to overwrite its batch dirs, staling their
     // manifest rows — un-mark those commits FIRST (before any data
     // mutation) so a crash mid-replay leaves the dirs unmarked and
@@ -425,10 +391,10 @@ final class ColumnarSink(basePath: String, format: String = "parquet",
     // collection must still invalidate the marker, or readers through a
     // stats-on sink would trust a manifest the overwrite just staled.
     // The first attempt's dirs are discoverable by one glob (they exist
-    // only on replay); marker paths reuse the glob's already-escaped
-    // path segments verbatim.
+    // only on replay, and a fresh key has none); marker paths reuse the
+    // glob's already-escaped path segments verbatim.
     if (batchId >= 0) {
-      val pat = new org.apache.hadoop.fs.Path(s"$basePath/*/*/batch=$batchId")
+      val pat = new org.apache.hadoop.fs.Path(s"$basePath/*/*/batch=$key")
       val fs = hadoopFs(pat, rows.sparkSession)
       // one exists() gates the glob: a layout no writer ever marked has
       // nothing to invalidate, so marker-less deployments skip the ~C
@@ -439,7 +405,7 @@ final class ColumnarSink(basePath: String, format: String = "parquet",
           val escC = st.getPath.getParent.getName.split("=", 2)(1)
           val escP = st.getPath.getParent.getParent.getName.split("=", 2)(1)
           fs.delete(new org.apache.hadoop.fs.Path(
-            s"$basePath/_graft_commits/$escP/$escC/$batchId"), false)
+            s"$basePath/_graft_commits/$escP/$escC/$key"), false)
           ()
         }
     }
@@ -450,106 +416,39 @@ final class ColumnarSink(basePath: String, format: String = "parquet",
     // in one task → ~C files total and the commit moves C objects. The
     // extra exchange is one shuffle of the (cached, already-parsed) batch
     // — trivial next to the file-creation fan-out it removes.
-    val tagged = escapeReserved(rows)
+    escapeReserved(rows)
       .withColumnRenamed("_project", "project")
       .withColumnRenamed("_collection", "collection")
       .repartition(col("project"), col("collection"))
-    // append-mode cohort stats AND the layout guard need a before/after
-    // snapshot of root-level files (new files land among old ones); the
-    // batch-keyed path finds its files by batch glob instead. Depth-3
-    // matches only files at collection ROOTS — in a streaming layout that
-    // set is empty, so the glob stays a metadata no-op at cardinality.
-    val beforeAll =
-      if (batchId >= 0) Set.empty[String]
-      else globDataFiles(rows.sparkSession, s"$basePath/*/*/*").toSet
-    val w =
-      if (batchId >= 0)
-        tagged.withColumn("batch", lit(batchId))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("project", "collection", "batch")
-      else // batch (non-streaming) load: plain append, like insert(id, df)
-        tagged.write.mode(SaveMode.Append)
-          .partitionBy("project", "collection")
-    w.format(format)
+      .withColumn("batch", lit(key))
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("project", "collection", "batch")
+      .format(format)
       .option("compression", compression)
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .save(basePath)
-    // the same layout-mixing guard as insert()/insertBatch(), run against
-    // the cohort's own output dirs (discovering the targets pre-write
-    // would cost a distinct() job over the batch; one glob + C cached
-    // shallow listings is cheaper). POST-write but pre-commit — and
-    // self-healing: an offending collection's just-written output is
-    // REMOVED before the loud failure, so the mix never persists and
-    // reads of the pre-existing data stay whole. Deleting this batch's
-    // own uncommitted output is exactly what a replay overwrite would do.
-    val spark = rows.sparkSession
-    val expectBatchDirs = batchId >= 0
-    val newFiles =
-      if (expectBatchDirs) // this batch's dirs are exclusively this write's
-        globDataFiles(spark, s"$basePath/*/*/batch=$batchId/*")
-      else globDataFiles(spark, s"$basePath/*/*/*").filterNot(beforeAll)
-    val byColl = newFiles.groupBy { f =>
-      val p = new org.apache.hadoop.fs.Path(f).getParent
-      if (expectBatchDirs) p.getParent else p // strip batch=N level
-    }
-    val offending = byColl.keys.toSeq.filter { collDir =>
-      def unesc(seg: String) = org.apache.spark.sql.catalyst.catalog
-        .ExternalCatalogUtils.unescapePathName(seg.split("=", 2)(1))
-      val cid = CollectionId(unesc(collDir.getParent.getName),
-        unesc(collDir.getName))
-      if (layoutGuardPassed.contains((cid, expectBatchDirs))) false
-      else {
-        val fs = hadoopFs(collDir, spark)
-        val entries = fs.listStatus(collDir)
-          .filterNot(st => st.getPath.getName.startsWith("_") ||
-            st.getPath.getName.startsWith("."))
-        // the bulk (batchId<0) write lands only root files, so any batch=
-        // dir seen here is pre-existing; the batch-keyed write lands only
-        // its batch dir, so any root file seen here is pre-existing
-        val bad =
-          if (expectBatchDirs) entries.exists(_.isFile)
-          else entries.exists(st => st.isDirectory &&
-            st.getPath.getName.startsWith("batch="))
-        if (!bad) { layoutGuardPassed.add((cid, expectBatchDirs)); () }
-        bad
-      }
-    }
-    if (offending.nonEmpty) {
-      offending.foreach { collDir =>
-        val fs = hadoopFs(collDir, spark)
-        if (expectBatchDirs) // drop this batch's whole dir for the offender
-          fs.delete(new org.apache.hadoop.fs.Path(collDir,
-            s"batch=$batchId"), true)
-        else // drop exactly the root files this write appended
-          byColl(collDir).foreach(f =>
-            fs.delete(new org.apache.hadoop.fs.Path(f), false))
-      }
-      throw new IllegalStateException(
-        s"consolidated insert: collection(s) [${offending.mkString(", ")}] " +
-          s"already use the ${if (expectBatchDirs) "root-level (plain insert)"
-            else "batch-keyed (streaming insert)"} layout — mixing layouts " +
-          "makes partition inference silently drop the root-level files; " +
-          "this batch's output for the offenders was removed and the batch " +
-          "must not commit")
-    }
     if (statsColumns.nonEmpty) {
+      val spark = rows.sparkSession
+      // this key's dirs hold exactly this write's files
+      val newFiles = globDataFiles(spark, s"$basePath/*/*/batch=$key/*")
       appendStats(spark, newFiles)
       // commit markers LAST (same order as insertBatch: data → stats →
       // marker) — marker presence certifies the manifest enumerates the
       // batch dir, which is what lets prunedRead trust it without a walk.
       // O(C) tiny driver-side creates per trigger, only with stats on.
-      if (expectBatchDirs) byColl.keys.foreach { collDir =>
-        val escC = collDir.getName.split("=", 2)(1)
-        val escP = collDir.getParent.getName.split("=", 2)(1)
-        val fs = hadoopFs(collDir, spark)
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$basePath/_graft_commits/$escP/$escC/$batchId")
-        fs.mkdirs(marker.getParent)
-        val out = fs.create(marker, true)
-        out.write("stats\n".getBytes("UTF-8")) // trust-grade (stats landed)
-        out.close()
-      }
+      newFiles.map(f => new org.apache.hadoop.fs.Path(f).getParent.getParent)
+        .distinct.foreach { collDir =>
+          val escC = collDir.getName.split("=", 2)(1)
+          val escP = collDir.getParent.getName.split("=", 2)(1)
+          val fs = hadoopFs(collDir, spark)
+          val marker = new org.apache.hadoop.fs.Path(
+            s"$basePath/_graft_commits/$escP/$escC/$key")
+          fs.mkdirs(marker.getParent)
+          val out = fs.create(marker, true)
+          out.write("stats\n".getBytes("UTF-8")) // trust-grade (stats landed)
+          out.close()
+        }
     }
   }
 
@@ -565,9 +464,12 @@ final class ColumnarSink(basePath: String, format: String = "parquet",
       .map(_.getPath.toString)
   }
 
-  /** Read a collection back with schema evolution across appended batches.
-    * Escaped reserved columns (`__data_batch`) are restored to their user
-    * names, superseding the inferred `batch` directory column.
+  /** Read a collection back with schema evolution across its batch
+    * directories. The frame carries the inferred `batch` directory column
+    * (the batch id, or the key of a write outside a stream; string-typed
+    * once any key is not numeric) — drop it to compare data rows. Escaped
+    * reserved columns (`__data_batch`) are restored to their user names,
+    * superseding that directory column.
     */
   def read(spark: SparkSession, id: CollectionId): DataFrame =
     unescapeReserved(readRaw(spark, id))
@@ -582,7 +484,8 @@ final class ColumnarSink(basePath: String, format: String = "parquet",
     * small files per collection (the problem the reference's middleware
     * buffer dwell solves in memory); compaction rewrites the collection
     * into ~`targetBytes` files under a fresh `batch=compact-<ts>` dir and
-    * removes the old dirs. Run OUT OF BAND (same role as Delta OPTIMIZE);
+    * removes the old dirs; later writes of either kind land next to it in
+    * their own batch dirs. Run OUT OF BAND (same role as Delta OPTIMIZE);
     * readers racing the final delete may briefly double-read — schedule
     * around query windows or layer a manifest.
     */
@@ -593,10 +496,6 @@ final class ColumnarSink(basePath: String, format: String = "parquet",
     val dir = new org.apache.hadoop.fs.Path(path(id))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) return
-    // compaction FLIPS a root-shaped collection to batch-keyed (the
-    // rewrite lands under batch=compact-*) — cached layout-guard passes
-    // for this collection are void either way
-    layoutGuardPassed.removeIf(e => e._1 == id)
     val oldEntries = fs.listStatus(dir).toSeq // snapshot before the rewrite
     var bytes = 0L
     graft.util.FsWalk.dataFileStatuses(fs, dir).foreach(bytes += _.getLen)
@@ -663,23 +562,25 @@ final class NdjsonGzipSink(basePath: String, maxRecordsPerFile: Long = 1000000,
                            localeExactTimestamps: Boolean = false)
     extends EventSink {
 
+  /** A collection's directory; its data sits in `batch=<key>` dirs below
+    * it, which `spark.read.json(path(id))` reads back as one table.
+    */
   def path(id: CollectionId): String = s"$basePath/${id.project}/${id.collection}"
 
   override def getColumns(id: CollectionId): Option[StructType] = None
 
+  /** A write outside a stream: a fresh `batch=<key>` directory. */
   override def insert(id: CollectionId, df: DataFrame): Unit =
-    write(df, SaveMode.Append, path(id))
+    insert(id, df, -1L)
 
-  /** Batch-keyed write: a replayed batch OVERWRITES its own directory —
-    * the same effectively-once trick as the reference's S3 sink, which
-    * keys each object by (table, batch offsets) so replays collide
-    * (S3DatabaseHandler.java:219-233) instead of duplicating.
+  /** Batch-keyed write ([[EventSink.batchDir]]): a replayed batch
+    * OVERWRITES its own directory — the same effectively-once trick as the
+    * reference's S3 sink, which keys each object by (table, batch offsets)
+    * so replays collide (S3DatabaseHandler.java:219-233) instead of
+    * duplicating.
     */
-  override def insert(id: CollectionId, df: DataFrame, batchId: Long): Unit =
-    write(df, SaveMode.Overwrite, s"${path(id)}/batch=$batchId")
-
-  private def write(df: DataFrame, mode: SaveMode, target: String): Unit = {
-    val w = df.write.mode(mode)
+  override def insert(id: CollectionId, df: DataFrame, batchId: Long): Unit = {
+    val w = df.write.mode(SaveMode.Overwrite)
       .option("compression", "gzip")
       .option("dateFormat", "yyyyMMdd") // BASIC_ISO_DATE, ref S3DatabaseHandler.java:241
       .option("maxRecordsPerFile", maxRecordsPerFile)
@@ -688,7 +589,7 @@ final class NdjsonGzipSink(basePath: String, maxRecordsPerFile: Long = 1000000,
         .option("timeZone", "UTC") // ref formatter is pinned to ZoneOffset.UTC
     else
       w.option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSXXX")
-    exact.json(target)
+    exact.json(EventSink.batchDir(path(id), batchId))
   }
 }
 

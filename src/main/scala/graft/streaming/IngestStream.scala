@@ -41,17 +41,18 @@ final class KafkaHistoricalHandler(bootstrap: String, topic: String) extends His
 }
 
 /** File-backed historical hand-off (test/local stand-in for the topic).
-  * Inside a stream each batch overwrites its own `path/batch=N`, like
-  * `IngestStream.DeadLetter`, so a replayed batch rewrites its late
-  * records instead of appending them twice; outside one it appends to
-  * `path`. `spark.read.text(path)` reads every batch back.
+  * Every hand-off overwrites its own `path/batch=<key>`
+  * ([[graft.sinks.EventSink.batchDir]]), like `IngestStream.DeadLetter`:
+  * inside a stream the key is the batch id, so a replayed batch rewrites
+  * its late records instead of appending them twice; outside one it is a
+  * fresh key, an append. `spark.read.text(path)` reads every batch back.
   */
 final class FileHistoricalHandler(path: String) extends HistoricalHandler {
   override def handle(raw: DataFrame): Unit = handle(raw, -1L)
 
   override def handle(raw: DataFrame, batchId: Long): Unit =
-    if (batchId < 0) raw.select("value").write.mode("append").text(path)
-    else raw.select("value").write.mode("overwrite").text(s"$path/batch=$batchId")
+    raw.select("value").write.mode("overwrite")
+      .text(EventSink.batchDir(path, batchId))
 }
 
 /** Engine configuration — the reference's operating envelope
@@ -194,17 +195,16 @@ object IngestStream {
     * records instead and still let the stream advance (SURVEY §7.4.4).
     */
   final class DeadLetter(path: String) extends Serializable {
-    /** Inside a stream (`batchId` ≥ 0) batch-keyed and overwriting, like
-      * every other write in the barrier: a replayed micro-batch rewrites
-      * the same `batch=N` directory instead of appending duplicates (the
-      * one path that exists to PRESERVE data must itself be exactly-once
-      * under replay). Outside a stream it appends.
+    /** Batch-keyed and overwriting, like every other write in the
+      * barrier ([[EventSink.batchDir]] under `path/<project>/<collection>`):
+      * a replayed micro-batch rewrites the same `batch=N` directory
+      * instead of appending duplicates (the one path that exists to
+      * PRESERVE data must itself be exactly-once under replay). Outside a
+      * stream (`batchId` < 0) a fresh key appends.
       */
-    def handle(id: graft.schema.CollectionId, raw: DataFrame, batchId: Long): Unit = {
-      val dir = s"$path/${id.project}/${id.collection}"
-      if (batchId < 0) raw.select(col("value")).write.mode("append").text(dir)
-      else raw.select(col("value")).write.mode("overwrite").text(s"$dir/batch=$batchId")
-    }
+    def handle(id: graft.schema.CollectionId, raw: DataFrame, batchId: Long): Unit =
+      raw.select(col("value")).write.mode("overwrite")
+        .text(EventSink.batchDir(s"$path/${id.project}/${id.collection}", batchId))
   }
 
   /** One micro-batch of the JSON pipeline — also the batch path for bulk
@@ -316,17 +316,12 @@ object IngestStream {
   def registryPath(checkpointDir: String): String =
     s"$checkpointDir/graft_schema_registry"
 
-  /** Resume the registry: sharded layout first, then any legacy
-    * single-file registry from a pre-sharding checkpoint (merge-on-load
-    * keeps both paths clobber-free).
-    */
+  /** Resume the registry from its shards (merge-on-load). */
   private def loadRegistry(spark: SparkSession,
                            registry: EventSchema.Registry,
-                           checkpointDir: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    registry.loadSharded(registryPath(checkpointDir), conf)
-    registry.load(s"$checkpointDir/graft_schema_registry.json", conf)
-  }
+                           checkpointDir: String): Unit =
+    registry.loadSharded(registryPath(checkpointDir),
+      spark.sparkContext.hadoopConfiguration)
 
   /** Start the continuous query. `source` must provide a string `value`
     * column ([[kafkaSource]] / [[fileSource]]).

@@ -46,9 +46,7 @@ object ObservedCount {
   def insertCounted(sink: EventSink, id: CollectionId, df: DataFrame,
                     batchId: Long): Long = {
     val obs = Observation()
-    val observed = df.observe(obs, count(lit(1)).as("n"))
-    if (batchId >= 0) sink.insert(id, observed, batchId)
-    else sink.insert(id, observed)
+    sink.insert(id, df.observe(obs, count(lit(1)).as("n")), batchId)
     apply(obs)(df.count())
   }
 }

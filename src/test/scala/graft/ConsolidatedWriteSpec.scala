@@ -337,43 +337,6 @@ class ConsolidatedWriteSpec extends SparkSpec {
     }
   }
 
-  test("cohort write into a plain-insert collection fails loudly before commit") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("cons_guard").toString
-    val sink = new ColumnarSink(dir)
-    // a collection already populated by plain insert() → root-level files
-    val idPlain = CollectionId("demo", "legacy")
-    sink.insert(idPlain, Seq((1L, "a")).toDF("n", "s"))
-    // a cohort that includes it: the consolidated write lands batch= dirs
-    // next to the root files — partition inference would silently drop the
-    // root files from every read, so the batch must FAIL, not commit
-    val cohort = Seq(("demo", "legacy", 2L, "b"), ("demo", "fresh", 3L, "c"))
-      .toDF("_project", "_collection", "n", "s")
-    val e = intercept[IllegalStateException] {
-      sink.insertConsolidated(cohort, batchId = 0L)
-    }
-    assert(e.getMessage.contains("root-level"))
-    // the untouched plain data still reads back whole
-    assert(sink.read(spark, idPlain).where($"n" === 1).count() == 1)
-    // recovery shape: the corrected cohort (offender routed elsewhere)
-    // REPLAYS the same batch id — the non-offender's uncommitted output
-    // from the failed attempt is overwritten in place, no duplicates
-    val ok = Seq(("demo", "fresh", 3L, "c"), ("demo", "fresh2", 4L, "d"))
-      .toDF("_project", "_collection", "n", "s")
-    sink.insertConsolidated(ok, batchId = 0L)
-    assert(sink.read(spark, CollectionId("demo", "fresh")).count() == 1)
-    assert(sink.read(spark, CollectionId("demo", "fresh2")).count() == 1)
-
-    // the reverse direction: a bulk (batchId<0) cohort writing ROOT files
-    // into a streaming (batch-keyed) collection is refused the same way
-    val e2 = intercept[IllegalStateException] {
-      sink.insertConsolidated(
-        Seq(("demo", "fresh", 9L, "z")).toDF("_project", "_collection", "n", "s"),
-        batchId = -1L)
-    }
-    assert(e2.getMessage.contains("batch-keyed"))
-  }
-
   test("below the threshold nothing consolidates; MemorySink never does") {
     val now = System.currentTimeMillis()
     import spark.implicits._

@@ -50,26 +50,26 @@ class ExtensionsSpec extends SparkSpec {
     val registry = new EventSchema.Registry()
     val id = CollectionId("p", "c")
     registry.addColumns(id, StructType(Seq(StructField("a", DoubleType))))
-    val path = java.nio.file.Files.createTempDirectory("reg").toString + "/reg.json"
+    val dir = java.nio.file.Files.createTempDirectory("reg").toString + "/reg"
     val conf = spark.sparkContext.hadoopConfiguration
-    assert(registry.saveIfChanged(path, conf))        // first save runs
-    assert(!registry.saveIfChanged(path, conf))       // steady state: skipped
+    assert(registry.saveShardedIfChanged(dir, conf))        // first save runs
+    assert(!registry.saveShardedIfChanged(dir, conf))       // steady state: skipped
     registry.addColumns(id, StructType(Seq(StructField("b", StringType))))
-    assert(registry.saveIfChanged(path, conf))        // evolution → save
+    assert(registry.saveShardedIfChanged(dir, conf))        // evolution → save
     // re-observing existing columns is NOT a change
     registry.addColumns(id, StructType(Seq(StructField("b", StringType))))
-    assert(!registry.saveIfChanged(path, conf))
+    assert(!registry.saveShardedIfChanged(dir, conf))
     // a fresh registry that LOADS is already durable — no immediate re-save
     val loaded = new EventSchema.Registry()
-    assert(loaded.load(path, conf))
-    assert(!loaded.saveIfChanged(path, conf))
+    assert(loaded.loadSharded(dir, conf))
+    assert(!loaded.saveShardedIfChanged(dir, conf))
   }
 
   test("sharded registry: 1k collections, per-project files, changed shards only, merge-on-load") {
     val conf = spark.sparkContext.hadoopConfiguration
     val registry = new EventSchema.Registry()
     // 1k collections over 20 projects — the 10k-collection shape scaled
-    // down: the single-file layout would re-serialize all of them on any
+    // down: one registry file would re-serialize all of them on any
     // change; shards bound each write to one project
     for (p <- 0 until 20; c <- 0 until 50)
       registry.addColumns(CollectionId(s"proj$p", s"coll$c"),
@@ -253,15 +253,15 @@ class ExtensionsSpec extends SparkSpec {
     val old = new EventSchema.Registry()
     old.put(id, StructType(Seq(
       StructField("_time", TimestampType), StructField("a", IntegerType))))
-    val path = java.nio.file.Files.createTempDirectory("regmerge").toString + "/reg.json"
-    old.save(path, conf)
+    val dir = java.nio.file.Files.createTempDirectory("regmerge").toString + "/reg"
+    assert(old.saveShardedIfChanged(dir, conf))
 
     // restarted driver pre-registers BEFORE load (startAvro window): the
     // same collection evolved — a widened to long, new column b
     val reg = new EventSchema.Registry()
     reg.addColumns(id, StructType(Seq(
       StructField("a", LongType), StructField("b", StringType))))
-    assert(reg.load(path, conf))
+    assert(reg.loadSharded(dir, conf))
 
     // evolve semantics: file's authoritative order leads, pre-registered
     // extras append, common types widen — NOT the file's stale schema
@@ -270,8 +270,8 @@ class ExtensionsSpec extends SparkSpec {
     assert(merged("a").dataType == LongType, "stale file type clobbered the widened one")
     assert(merged("b").dataType == StringType)
     // the merged (not-yet-durable) state must still trigger a save
-    assert(reg.saveIfChanged(path, conf))
-    assert(!reg.saveIfChanged(path, conf))
+    assert(reg.saveShardedIfChanged(dir, conf))
+    assert(!reg.saveShardedIfChanged(dir, conf))
   }
 
   test("registry save/load round-trips authoritative order") {
@@ -280,10 +280,11 @@ class ExtensionsSpec extends SparkSpec {
     reg.put(id, StructType(Seq(
       StructField("_time", TimestampType), StructField("zed", DoubleType),
       StructField("arr", ArrayType(StringType)))))
-    val f = java.nio.file.Files.createTempFile("reg", ".json")
-    reg.save(f)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = java.nio.file.Files.createTempDirectory("regrt").toString + "/reg"
+    assert(reg.saveShardedIfChanged(dir, conf))
     val reg2 = new EventSchema.Registry()
-    reg2.load(f)
+    assert(reg2.loadSharded(dir, conf))
     assert(reg2.get(id).get.fieldNames.toSeq == Seq("_time", "zed", "arr"))
     assert(reg2.get(id).get("arr").dataType == ArrayType(StringType))
   }

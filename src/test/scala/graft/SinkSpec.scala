@@ -2,6 +2,7 @@ package graft
 
 import graft.schema.CollectionId
 import graft.sinks.ColumnarSink
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
@@ -118,44 +119,57 @@ class SinkSpec extends SparkSpec {
     assert(sink.read(spark, id).count() == 2)
   }
 
-  test("mixing root-level and batch-keyed layouts fails loudly, not silently") {
+  test("a write outside a stream and a stream batch into one directory both read back") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("sink_mix").toString
+    // Spark's partition discovery drops files that sit next to `batch=`
+    // dirs, so each writer must land BOTH kinds of write in batch dirs
+    val base = Files.createTempDirectory("sink_one_layout").toString
     val sink = new ColumnarSink(base)
-    // plain-insert collection rejects a batch-keyed insert (whose batch=
-    // dirs would make partition inference DROP the existing root files)
-    val idA = CollectionId("p", "roots")
-    sink.insert(idA, Seq((1, "a")).toDF("n", "s"))
-    val e1 = intercept[IllegalStateException] {
-      sink.insertBatch(idA, Seq((2, "b")).toDF("n", "s"), batchId = 0)
+    val ndjson = new graft.sinks.NdjsonGzipSink(s"$base/ndjson")
+    val hist = new graft.streaming.FileHistoricalHandler(s"$base/hist")
+    val dead = new graft.streaming.IngestStream.DeadLetter(s"$base/dead")
+    val (idA, idB, idC) =
+      (CollectionId("p", "plain_first"), CollectionId("p", "stream_first"),
+        CollectionId("p", "cohort"))
+    val id = CollectionId("p", "c")
+    def cohort(df: DataFrame) =
+      df.select(lit("p").as("_project"), lit(idC.collection).as("_collection"),
+        col("value"))
+    type Write = DataFrame => Unit
+    // (writer, its writes in order, the read of the directory they share)
+    val writers: Seq[(String, Seq[Write], () => DataFrame)] = Seq(
+      ("ColumnarSink plain, then stream",
+        Seq(sink.insert(idA, _), sink.insertBatch(idA, _, 0L), sink.insert(idA, _)),
+        () => sink.read(spark, idA)),
+      ("ColumnarSink stream, then plain",
+        Seq(sink.insertBatch(idB, _, 0L), sink.insert(idB, _),
+          sink.insertBatch(idB, _, 1L)),
+        () => sink.read(spark, idB)),
+      ("ColumnarSink consolidated -1, then N",
+        Seq(df => sink.insertConsolidated(cohort(df), -1L),
+          df => sink.insertConsolidated(cohort(df), 3L)),
+        () => sink.read(spark, idC)),
+      ("NdjsonGzipSink",
+        Seq(ndjson.insert(id, _), ndjson.insert(id, _, 0L)),
+        () => spark.read.json(ndjson.path(id))),
+      ("FileHistoricalHandler",
+        Seq(hist.handle(_), hist.handle(_, 0L)),
+        () => spark.read.text(s"$base/hist")),
+      ("DeadLetter",
+        Seq(dead.handle(id, _, -1L), dead.handle(id, _, 0L)),
+        () => spark.read.text(s"$base/dead/p/c")))
+    writers.foreach { case (name, writes, read) =>
+      val written = writes.indices.map(i => s"$name #$i")
+      writes.zip(written).foreach { case (w, v) => w(Seq(v).toDF("value")) }
+      val back = read().select("value").as[String].collect().sorted.toSeq
+      assert(back == written.sorted, s"$name read back $back")
     }
-    assert(e1.getMessage.contains("root-level"))
-    assert(sink.read(spark, idA).count() == 1)
 
-    // batch-keyed collection rejects a plain insert (whose root files
-    // would be silently invisible to every read)
-    val idB = CollectionId("p", "batches")
-    sink.insertBatch(idB, Seq((1, "a")).toDF("n", "s"), batchId = 0)
-    val e2 = intercept[IllegalStateException] {
-      sink.insert(idB, Seq((2, "b")).toDF("n", "s"))
-    }
-    assert(e2.getMessage.contains("batch-keyed"))
-    assert(sink.read(spark, idB).count() == 1)
-
-    // same-shape appends still work on both
-    sink.insert(idA, Seq((3, "c")).toDF("n", "s"))
-    sink.insertBatch(idB, Seq((3, "c")).toDF("n", "s"), batchId = 1)
-    assert(sink.read(spark, idA).count() == 2)
-    assert(sink.read(spark, idB).count() == 2)
-
-    // a compacted plain-insert collection BECOMES batch-keyed (compaction
-    // rewrites into batch=compact-*) — further plain appends must now be
-    // refused for the same reason
+    // compaction rewrites into batch=compact-*; a later plain insert lands
+    // in its own batch dir next to it
     sink.compact(spark, idA)
-    intercept[IllegalStateException] {
-      sink.insert(idA, Seq((4, "d")).toDF("n", "s"))
-    }
-    assert(sink.read(spark, idA).count() == 2)
+    sink.insert(idA, Seq("after compaction").toDF("value"))
+    assert(sink.read(spark, idA).count() == 4)
   }
 
   test("insertBatch + compaction work through a file: URI (Hadoop FS path)") {

@@ -48,8 +48,8 @@ class StatsIndexSpec extends SparkSpec {
     sink.insertBatch(id, slice(0, 4000), 0L)
     sink.insertBatch(id, slice(4000, 8000), 1L)
     sink.insertBatch(id, slice(8000, 12000), 2L)
-    // plain-append path indexes too — on its OWN collection (one layout
-    // shape per collection: root-level files vs batch= dirs don't mix)
+    // a write outside a stream indexes too (its own collection keeps the
+    // per-collection scoping check below meaningful)
     val id2 = graft.schema.CollectionId("p", "bulk")
     sink.insert(id2, slice(8000, 12000))
 
